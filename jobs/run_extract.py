@@ -9,7 +9,8 @@ Usage (north-rule packaging, BASELINE.json:14):
         --buckets 32 [--input /path/to/transcripts_parquet]
 
 Re-running after a kill resumes: committed partitions are detected
-from their manifests and skipped before the Spark job starts.
+from their manifests, and (with the default conv_id bucketing) their
+turns are filtered out of the input before extraction.
 
 Output schema note: the committed table includes the per-row stats
 columns (n_blocks_kept, n_blocks_dropped, conf_hist) computed by
@@ -97,6 +98,7 @@ def main() -> None:
     from textract_demo_spark.engine.metrics import (partition_metrics,
                                                     with_block_stats)
     from textract_demo_spark.engine.pipeline import run_pipeline
+    from textract_demo_spark.engine.schemas import TRANSCRIPTS_SCHEMA
     from textract_demo_spark.engine.tables import (IcebergLike,
                                                    with_part_key,
                                                    zorder_part_key)
@@ -135,15 +137,24 @@ def main() -> None:
         return
 
     if args.input:
-        transcripts = spark.read.parquet(args.input)
+        # the input shape is fixed (BASELINE.json:15): no footer-
+        # inference job
+        transcripts = spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(
+            args.input)
         fingerprint = args.input
     else:
         transcripts = transcripts_df(spark, args.n_convs)
         fingerprint = f"synthetic:seed=42:n_convs={args.n_convs}"
 
     t0 = time.time()
+    table = IcebergLike(args.out)
+    pending = transcripts
+    if not args.zorder_cols:
+        # the key is a function of conv_id alone: drop committed
+        # partitions' turns before extraction, not after it
+        pending = table.uncommitted(with_part_key(transcripts, args.buckets))
     results = with_block_stats(
-        run_pipeline(transcripts, reviews=None, salt=args.salt))
+        run_pipeline(pending, reviews=None, salt=args.salt))
     stat_cols = None
     if args.stat_cols:
         stat_cols = [c.strip() for c in args.stat_cols.split(",")
@@ -154,7 +165,6 @@ def main() -> None:
         results = zorder_part_key(results, stat_cols, args.buckets)
     else:
         results = with_part_key(results, args.buckets)
-    table = IcebergLike(args.out)
     bloom_cols = None
     if args.bloom_cols:
         bloom_cols = [c.strip() for c in args.bloom_cols.split(",")

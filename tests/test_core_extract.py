@@ -190,3 +190,33 @@ def test_date_fallback_only_when_no_kv():
     # entity score x100 (fn-postprocess/main.py:115)
     ents = detect_date_entities("Visited on 21/06/2018 ")
     assert r["Date"]["Confidence"] == ents[0]["score"] * 100
+
+
+def test_fallback_search_text_gate_and_order():
+    from textract_demo_spark.core.blocks import make_block
+    from textract_demo_spark.core.fields import (fallback_date_entities,
+                                                 fallback_search_text)
+    lines = [
+        make_block(0, "LINE", "Visited 21/06/2018", 0, 18, 80.0,
+                   reading_order=2),
+        make_block(1, "LINE", "", 19, 19, 0.0, reading_order=0),
+        make_block(2, "LINE", "Vendor Co", 20, 29, 90.0, reading_order=1),
+        make_block(3, "LINE", "nav", 30, 33, 90.0, reading_order=3,
+                   is_content=False),
+    ]
+    # the first sorted line is dropped even when empty (the engine's
+    # slice(content, 2, ...)), unlike postprocess_blocks' vendor scan
+    assert fallback_search_text(lines) == "Vendor Co Visited 21/06/2018"
+    assert [e["text"] for e in fallback_date_entities(lines)] == [
+        "21/06/2018"]
+    key = make_block(4, "KEY_VALUE", "Invoice DATE", 0, 0, 90.0,
+                     kv_role="KEY", kv_group_id=7)
+    value = make_block(5, "KEY_VALUE", "x", 0, 0, 90.0, kv_role="VALUE",
+                       kv_group_id=7)
+    assert fallback_search_text(lines + [key, value]) == ""
+    assert fallback_date_entities(lines + [key, value]) == []
+    # a date key without a value of its group leaves the gate open
+    assert fallback_search_text(lines + [key]) != ""
+    other = dict(value, kv_group_id=8)
+    assert fallback_search_text(lines + [key, other]) != ""
+    assert fallback_search_text(lines[:1]) == ""

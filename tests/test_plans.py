@@ -96,9 +96,12 @@ def test_quality_filter_not_collapsed_into_extraction(spark):
     dfs = fixtures_to_dfs(spark, n_convs=8)
     out = run_pipeline(dfs["transcripts"], None, salt=2)
     p = plan(out)
-    # exactly one mapInArrow (extraction); the only other Python node
-    # is the gated date-entity pandas_udf in the rules projection
+    # exactly one mapInArrow (extraction, date-entity fallback
+    # included) and no other Python node: one boundary crossing per
+    # batch, one Python worker per running task
     assert p.count("MapInArrow") == 1, p[:3000]
+    assert "ArrowEvalPython" not in p, p[:3000]
+    assert "BatchEvalPython" not in p, p[:3000]
 
 
 def test_simhash_band_join_is_equi_hash_not_cartesian(spark):

@@ -160,6 +160,48 @@ def postprocess_blocks(blocks: list[dict]) -> dict:
     return result
 
 
+def fallback_search_text(blocks: list[dict]) -> str:
+    """The text the engine's date-entity fallback scans for one ok
+    turn, or '' when a KV date candidate exists (the A10 gate).
+
+    Mirrors the Catalyst rules in ``engine.rules`` exactly, which
+    differ from ``postprocess_blocks`` above: content is every LINE
+    block with ``is_content`` sorted like ``array_sort(struct(
+    reading_order, text, conf))`` (nulls first per field), the first
+    sorted line is dropped even when empty, and the rest join with
+    ' ' (null texts skipped, no trailing space). The gate is closed
+    when a KEY block's lowercased text contains 'date' and some VALUE
+    block shares its non-null ``kv_group_id``. ``conf`` is left out of
+    the sort key: lines tied on (reading_order, text) contribute the
+    same text whichever comes first."""
+    date_keys = set()
+    value_groups = set()
+    lines = []
+    for b in blocks:
+        role = b["kv_role"]
+        if role == KEY:
+            t, g = b["text"], b["kv_group_id"]
+            if g is not None and t is not None and "date" in t.lower():
+                date_keys.add(g)
+        elif role == VALUE and b["kv_group_id"] is not None:
+            value_groups.add(b["kv_group_id"])
+        if b["block_type"] == LINE and b["is_content"]:
+            lines.append((b["reading_order"] is not None,
+                          b["reading_order"] or 0,
+                          b["text"] is not None, b["text"] or ""))
+    if date_keys & value_groups or len(lines) < 2:
+        return ""
+    lines.sort()
+    return " ".join(t for _, _, has_text, t in lines[1:] if has_text)
+
+
+def fallback_date_entities(blocks: list[dict]) -> list[dict]:
+    """Date entities of ``fallback_search_text`` — computed inside the
+    extraction kernel so the fallback needs no second Python stage."""
+    text = fallback_search_text(blocks)
+    return detect_date_entities(text) if text else []
+
+
 def needs_review(model_result: dict) -> bool:
     """Check Confidence routing (StateMachine.asl.json:54-65):
     composite >= 50 succeeds, else human review."""

@@ -46,37 +46,3 @@ def transcripts_df(spark: SparkSession, n_convs: int, seed: int = 42,
 
     return meta.mapInPandas(gen, schema=schemas.TRANSCRIPTS_SCHEMA)
 
-
-def expected_df(spark: SparkSession, n_convs: int, seed: int = 42,
-                mean_turns: int = 4, hot_conv_fraction: float = 0.04,
-                hot_turns: int = 96) -> DataFrame:
-    """Golden expected (conv_id, turn_idx, status, main_text) rows,
-    generated executor-side — used by large-scale equality checks."""
-    counts = conv_turn_counts(n_convs, mean_turns, hot_conv_fraction,
-                              hot_turns, seed)
-    meta = spark.createDataFrame(
-        pd.DataFrame(counts, columns=["conv_id", "n_turns"]))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for conv_id, n_turns in zip(pdf["conv_id"], pdf["n_turns"]):
-                for t in range(int(n_turns)):
-                    _, exp = make_turn(seed, conv_id, t)
-                    rows.append({
-                        "conv_id": conv_id, "turn_idx": t,
-                        "status": exp["status"],
-                        "main_text": exp["main_text"],
-                        "n_spans": len(exp["spans"]),
-                        "span_start": (exp["spans"][0][0]
-                                       if exp["spans"] else None),
-                        "span_end": (exp["spans"][-1][1]
-                                     if exp["spans"] else None),
-                    })
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return meta.mapInPandas(
-        gen, schema=("conv_id string, turn_idx int, status string,"
-                     " main_text string, n_spans int,"
-                     " span_start long, span_end long"))

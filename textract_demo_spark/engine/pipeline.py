@@ -2,8 +2,8 @@
 
 One Spark job replaces the reference's per-document Step Functions
 orchestration (SURVEY.md §3.1): scan -> salted repartition -> Arrow
-extraction UDF (quality gate inside) -> native-SQL field rules ->
-review-override join. Everything between the one repartition exchange
+extraction UDF (quality gate and date-entity fallback inside) ->
+native-SQL field rules -> review-override join. Everything between the one repartition exchange
 and the final write is narrow.
 """
 

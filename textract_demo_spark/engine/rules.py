@@ -11,11 +11,13 @@ higher-order functions over the per-turn ``blocks`` array:
   At 10^12 turns this is the difference between a pure pipelined scan
   and a multi-petabyte exchange: grouping is unnecessary because a
   turn's blocks never leave their row.
-- The only Python in this stage is the gated date-entity fallback
-  (Comprehend analog, main.py:102-117) — a vectorized pandas UDF fed
-  '' for rows that already have KV date candidates (the reference's
-  fallback short-circuit, SURVEY.md §4.1: Catalyst evaluates extracted
-  Python-UDF nodes unconditionally, so the gate lives in the argument).
+- There is no Python in this stage. The gated date-entity fallback
+  (Comprehend analog, main.py:102-117) arrives as the extraction
+  kernel's ``date_entities`` column, already empty for rows with KV
+  date candidates (the reference's fallback short-circuit, SURVEY.md
+  §4.1; ``core.fields.fallback_search_text`` mirrors the content
+  ordering and gate below). Only the shape check and rescale run here,
+  so a batch crosses the JVM<->Python boundary once.
 
 Semantics cross-checked against the pure-Python ``core.fields`` on the
 golden fixtures (tests/test_engine_pipeline.py). One documented
@@ -31,7 +33,6 @@ from pyspark.sql import functions as F
 
 from ..core.blocks import STATUS_OK
 from ..core.fields import REVIEW_THRESHOLD
-from .udfs import detect_date_entities_udf
 
 # content lines sorted by reading order (A1/W1)
 _CONTENT = """
@@ -114,23 +115,16 @@ def model_results(extracted: DataFrame,
                     F.expr("coalesce(try_element_at(content, 1).conf, 0.0d)"))
         .withColumn("vendor_value",
                     F.expr("coalesce(try_element_at(content, 1).text, '')"))
-        # Ordered concat of the remaining lines (A2, main.py:57-60)
-        .withColumn("search_text", F.expr("""
-            array_join(transform(
-              slice(content, 2, greatest(size(content) - 1, 0)),
-              x -> x.text), ' ')"""))
         .withColumn("total_cands", F.expr(
             f"concat({_kv_candidates('total', True)},"
             f" {_kv_candidates('amount', True)})"))
         .withColumn("date_kv_cands", F.expr(_kv_candidates("date", False)))
-        # Fallback gate (A10): entity detector sees '' unless KV empty
-        .withColumn("fb_entities", detect_date_entities_udf(
-            F.when(F.size("date_kv_cands") == 0, F.col("search_text"))
-            .otherwise(F.lit(""))))
-        # shape validation '/', ':' or '-' (P7, main.py:108-110) + x100
-        # rescale (A9, main.py:115)
+        # Fallback (A10): the kernel ran the entity detector over the
+        # ordered concat of content lines 2.. (A2, main.py:57-60) only
+        # where date_kv_cands is empty; shape validation '/', ':' or
+        # '-' (P7, main.py:108-110) + x100 rescale (A9, main.py:115)
         .withColumn("fb_cands", F.expr("""
-            transform(filter(fb_entities, e -> e.text RLIKE '[/:-]'),
+            transform(filter(date_entities, e -> e.text RLIKE '[/:-]'),
                       e -> struct(e.score * 100 AS confidence,
                                   e.text AS value))"""))
         .withColumn("date_cands",
@@ -170,7 +164,7 @@ def model_results(extracted: DataFrame,
             f"if(status = '{STATUS_OK}',"
             f" NOT (model_result.confidence >= {threshold}d), null)"))
         .drop("content", "kv_pairs", "vendor_conf", "vendor_value",
-              "total_cands", "date_kv_cands", "fb_entities", "fb_cands",
-              "date_cands", "search_text", "total_ranked", "date_ranked")
+              "total_cands", "date_kv_cands", "date_entities", "fb_cands",
+              "date_cands", "total_ranked", "date_ranked")
     )
     return df

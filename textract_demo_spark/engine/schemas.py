@@ -47,6 +47,14 @@ SPAN_SCHEMA = T.StructType([
     T.StructField("end", T.LongType(), False),
 ])
 
+# Date entities of the gated fallback detector, computed by the
+# extraction kernel (empty unless status is ok and no KV date exists).
+ENTITY_SCHEMA = T.ArrayType(T.StructType([
+    T.StructField("text", T.StringType(), False),
+    T.StructField("score", T.DoubleType(), False),
+    T.StructField("start", T.LongType(), False),
+]))
+
 # Output of the extraction UDF: one row per turn, blocks as a nested
 # array (kept nested so the field rules run as higher-order functions
 # with NO shuffle — see engine.rules).
@@ -62,14 +70,8 @@ EXTRACTED_SCHEMA = T.StructType([
     T.StructField("spans", T.ArrayType(SPAN_SCHEMA), True),
     T.StructField("span_domain", T.StringType(), True),
     T.StructField("blocks", T.ArrayType(BLOCK_SCHEMA), True),
+    T.StructField("date_entities", ENTITY_SCHEMA, True),
 ])
-
-# Date entities returned by the fallback detector UDF.
-ENTITY_SCHEMA = T.ArrayType(T.StructType([
-    T.StructField("text", T.StringType(), False),
-    T.StructField("score", T.DoubleType(), False),
-    T.StructField("start", T.LongType(), False),
-]))
 
 CANDIDATE_SCHEMA = T.StructType([
     T.StructField("confidence", T.DoubleType(), False),

@@ -438,6 +438,20 @@ class IcebergLike:
                 out.add(int(f[5:-5]))
         return out
 
+    def uncommitted(self, df: DataFrame,
+                    committed: set[int] | None = None) -> DataFrame:
+        """Rows of ``df`` (keyed by ``part_key``) whose partition is not
+        committed yet — the resume predicate. ``write`` guards with it;
+        a job whose key derives from its input (``with_part_key`` over
+        conv_id) also applies it to that input, so a resume never
+        extracts turns it will not commit."""
+        if committed is None:
+            committed = self.committed_keys()
+        if not committed:
+            return df
+        return df.filter(
+            ~F.col(PART_COL).isin(sorted(int(k) for k in committed)))
+
     def manifest(self, part_key: int) -> dict | None:
         p = os.path.join(self.manifest_dir, f"part-{part_key:05d}.json")
         if not os.path.exists(p):
@@ -638,10 +652,7 @@ class IcebergLike:
             except OSError:
                 continue  # vanished: another sweeper got it
             shutil.rmtree(p, ignore_errors=True)
-        pending_df = df
-        if committed and not append:
-            pending_df = df.filter(
-                ~F.col(PART_COL).isin([int(k) for k in committed]))
+        pending_df = df if append else self.uncommitted(df, committed)
         if rebalance:
             pending_df = pending_df.hint("rebalance", F.col(PART_COL))
         staging = os.path.join(self.staging_dir, run_id)
@@ -658,7 +669,8 @@ class IcebergLike:
         stats_by_key: dict[int, dict] = {}
         t_metrics0 = time.time()
         if staged_keys:
-            staged = spark.read.parquet(staging)
+            # the schema just written: no footer-inference job
+            staged = spark.read.schema(df.schema).parquet(staging)
             if metrics_fn is not None:
                 metrics_by_key = metrics_fn(staged)
             else:

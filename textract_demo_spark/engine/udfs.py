@@ -1,24 +1,23 @@
 """Vectorized UDFs wiring the pure-Python core into Spark.
 
-All Python execution is Arrow-batched (``mapInPandas`` /
-``pandas_udf``) — no row-at-a-time Python UDFs anywhere
-(BASELINE.json:15). The extraction UDF is the pipeline's only heavy
-Python stage; everything downstream is native Catalyst expressions.
+All Python execution is Arrow-batched — no row-at-a-time Python UDFs
+anywhere (BASELINE.json:15). The ``mapInArrow`` extraction kernel is
+the pipeline's only Python stage: it also computes the gated
+date-entity fallback, so each batch crosses the JVM<->Python boundary
+once and everything downstream is native Catalyst expressions.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
 from ..core.blocks import STATUS_OK
-from ..core.dates import detect_date_entities
 from ..core.extract import extract_payload
+from ..core.fields import fallback_date_entities
 from . import schemas
 
 # Arrow types mirroring schemas.BLOCK_SCHEMA / SPAN_SCHEMA — built
@@ -27,6 +26,10 @@ from . import schemas
 # matters because this is the single hot Python stage at 10^12 turns.
 _SPAN_FIELDS = [pa.field("start", pa.int64(), False),
                 pa.field("end", pa.int64(), False)]
+# schemas.ENTITY_SCHEMA's element
+_ENTITY_FIELDS = [pa.field("text", pa.string(), False),
+                  pa.field("score", pa.float64(), False),
+                  pa.field("start", pa.int64(), False)]
 _BLOCK_FIELDS = [
     pa.field("block_id", pa.int64(), False),
     pa.field("page", pa.int32(), False),
@@ -65,13 +68,20 @@ def _extract_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch
     -> EXTRACTED_SCHEMA rows. Replaces the reference's per-document
     Textract Lambda (fn-call-textract/main.py:52-61) with a columnar
     batch stage. Passthrough columns stay zero-copy Arrow; result
-    columns are built as flat child arrays + offsets."""
+    columns are built as flat child arrays + offsets.
+
+    ``date_entities`` is the Comprehend-fallback analog
+    (fn-postprocess/main.py:102-117) over each ok turn's blocks, gated
+    on the absence of a KV date candidate (``core.fields.
+    fallback_search_text``); the field rules only shape-check and rank
+    it."""
     for batch in batches:
         texts = batch.column("text").to_pylist()
         status, kind, main_text, span_domain = [], [], [], []
         sp_start, sp_end, sp_off = [], [], [0]
         b_cols: list[list] = [[] for _ in _BLOCK_KEYS]
         b_off = [0]
+        e_text, e_score, e_start, e_off = [], [], [], [0]
         for text in texts:
             res = extract_payload(text if isinstance(text, str) else "")
             status.append(res.status)
@@ -86,6 +96,12 @@ def _extract_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch
                 for col, v in zip(b_cols, blk.values()):
                     col.append(v)
             b_off.append(len(b_cols[0]))
+            if res.status == STATUS_OK:
+                for e in fallback_date_entities(res.blocks):
+                    e_text.append(e["text"])
+                    e_score.append(e["score"])
+                    e_start.append(e["start"])
+            e_off.append(len(e_text))
 
         spans_arr = pa.ListArray.from_arrays(
             pa.array(sp_off, pa.int32()),
@@ -98,6 +114,12 @@ def _extract_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch
                 [pa.array(vals, f.type)
                  for vals, f in zip(b_cols, _BLOCK_FIELDS)],
                 fields=_BLOCK_FIELDS))
+        entities_arr = pa.ListArray.from_arrays(
+            pa.array(e_off, pa.int32()),
+            pa.StructArray.from_arrays(
+                [pa.array(e_text, pa.string()),
+                 pa.array(e_score, pa.float64()),
+                 pa.array(e_start, pa.int64())], fields=_ENTITY_FIELDS))
         yield pa.RecordBatch.from_arrays(
             [batch.column("conv_id"), batch.column("turn_idx"),
              batch.column("role"), batch.column("tool"),
@@ -107,7 +129,8 @@ def _extract_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch
              pa.array(main_text, pa.string()),
              spans_arr,
              pa.array(span_domain, pa.string()),
-             blocks_arr],
+             blocks_arr,
+             entities_arr],
             names=[f.name for f in schemas.EXTRACTED_SCHEMA.fields])
 
 
@@ -132,34 +155,6 @@ def extract_turns(transcripts: DataFrame, salt: int = 16,
         df = df.repartition(
             F.col("conv_id"), F.pmod(F.xxhash64("turn_idx"), F.lit(salt)))
     return df.mapInArrow(_extract_arrow, schema=schemas.EXTRACTED_SCHEMA)
-
-
-@F.pandas_udf(schemas.ENTITY_SCHEMA)
-def detect_date_entities_udf(texts: pd.Series) -> pd.Series:
-    """Comprehend-fallback analog (fn-postprocess/main.py:104-117).
-    Called with '' for rows that already have KV date candidates (the
-    caller gates the input — Spark evaluates extracted Python UDF
-    nodes unconditionally, so the gate must be in the argument, not
-    around the call; SURVEY.md §4.1 fallback short-circuit)."""
-    return texts.map(
-        lambda t: [
-            {"text": e["text"], "score": float(e["score"]),
-             "start": e["start"]}
-            for e in detect_date_entities(t)
-        ] if t else [])
-
-
-@F.pandas_udf(DoubleType())
-def python_float_udf(values: pd.Series) -> pd.Series:
-    """Exact Python float() semantics for the reference's numeric
-    predicate (fn-postprocess/main.py:74-91): used only in tests to
-    cross-check that Spark's try_cast matches on the value domain."""
-    def f(v):
-        try:
-            return float(v)
-        except (TypeError, ValueError):
-            return None
-    return values.map(f)
 
 
 def words_table(extracted: DataFrame) -> DataFrame:
