@@ -279,29 +279,42 @@ def test_compact_skips_mixed_seq_with_pending_deletes(spark, table):
 
 def test_model_based_operation_sequences(spark, tmp_path):
     """Model-based invariant: a seeded random interleaving of append /
-    delete / upsert / compact / materialize / reopen always reads
-    back exactly the dict a plain Python model predicts. This is the
-    cross-product coverage the single-op tests can't give — sequence
-    scoping must hold through ANY op order."""
+    delete / upsert / compact / materialize / reopen / rollback /
+    branch always reads back exactly the dict a plain Python model
+    predicts. This is the cross-product coverage the single-op tests
+    can't give — sequence scoping must hold through ANY op order.
+    Rollback restores the model saved at its target snapshot, or is
+    refused when a compact/materialize rewrite lies after the
+    target; the branch step creates a branch, commits to it, checks
+    main is unchanged, then publishes (fast_forward) or abandons
+    (drop_branch with spark) it."""
     import random
 
     from textract_demo_spark.engine.tables import IcebergLike
 
-    rng = random.Random(42)
+    # 74: its 12 steps reach both rollback outcomes (restore and
+    # refusal across a materialize) and both branch outcomes, plus
+    # append, delete, compact and materialize
+    rng = random.Random(74)
     t = IcebergLike(str(tmp_path / "t"))
     model: dict[int, int] = {i: i % 7 for i in range(40)}
     t.write(_wave(spark, 0, 40))
     next_id = 40
+    # (snapshot id, model as of it) for every state rollback may target
+    history = [(t.snapshots()[-1]["snapshot_id"], dict(model))]
+    rewrites: list[int] = []  # compact/materialize snapshot ids
 
     def check(tag):
-        got = {r.doc_id: r.v for r in
-               t.read(spark).select("doc_id", "v").collect()}
+        rows = t.read(spark).select("doc_id", "v").collect()
+        got = {r.doc_id: r.v for r in rows}
+        assert len(got) == len(rows), (tag, "duplicate doc_id")
         assert got == model, (
             tag, sorted(set(got) ^ set(model))[:10])
 
     for step in range(12):
         op = rng.choice(["append", "delete", "upsert", "compact",
-                         "materialize", "reopen"])
+                         "materialize", "reopen", "rollback",
+                         "branch"])
         if op == "append":
             lo, hi = next_id, next_id + rng.randint(5, 15)
             next_id = hi
@@ -328,13 +341,41 @@ def test_model_based_operation_sequences(spark, tmp_path):
             t.upsert(with_part_key(up, 4), ["doc_id"])
             for k in keys:
                 model[k] = 1000 + step
-        elif op == "compact":
-            t.compact(spark)
-        elif op == "materialize":
-            t.materialize_deletes(spark)
+            # unmatched keys were inserted: later waves start past them
+            next_id = max(next_id, max(keys) + 1)
+        elif op in ("compact", "materialize"):
+            snap = (t.compact(spark) if op == "compact"
+                    else t.materialize_deletes(spark))
+            if "snapshot_id" in snap:  # a no-op publishes nothing
+                rewrites.append(snap["snapshot_id"])
+        elif op == "rollback":
+            sid, saved = rng.choice(history)
+            if any(r > sid for r in rewrites):
+                with pytest.raises(ValueError, match="physical-rewrite"):
+                    t.rollback(spark, sid)
+            else:
+                t.rollback(spark, sid)
+                model = dict(saved)
+                history = [h for h in history if h[0] <= sid]
+        elif op == "branch":
+            pre = t.snapshots()[-1]["snapshot_id"]
+            lo, hi = next_id, next_id + rng.randint(5, 15)
+            next_id = hi
+            t.create_branch("b")
+            t.write_to_branch("b", _wave(spark, lo, hi))
+            check((step, op, "main while diverged"))
+            if rng.random() < 0.5:
+                t.fast_forward("b")
+                model.update({i: i % 7 for i in range(lo, hi)})
+            else:
+                t.drop_branch("b", spark=spark)
+                history = [h for h in history if h[0] <= pre]
         else:
             t = IcebergLike(t.root)
         check((step, op))
+        sid = t.snapshots()[-1]["snapshot_id"]
+        if sid != history[-1][0]:
+            history.append((sid, dict(model)))
 
 
 def test_schema_evolution_on_append(spark, table):

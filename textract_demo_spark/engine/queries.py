@@ -5101,7 +5101,7 @@ def _offset_parts(df: DataFrame, offset: int, buckets: int = 4):
 """)
 def table_equality_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iceberg-v2 equality deletes, merge-on-read with sequence
-    scoping (engine/tables.py delete_rows/_apply_deletes): wave 1 is
+    scoping (engine/tables.py delete_rows/_drop_deleted): wave 1 is
     committed, a delete file covering doc_id % 10 == 3 over the FULL
     0..300 range lands, then wave 2 (200..300, later partitions)
     appends. The read must drop matching rows from wave 1 only —

@@ -94,15 +94,17 @@ Iceberg-v2 parity pieces beyond the commit protocol:
   serialized after the winner, and same-partition conflicts raise
   ``CommitConflictError`` (the Iceberg commit protocol /
   ValidationException analog). Disjoint-partition concurrent ingest —
-  the case that matters with many writers — commits loss-free.
-  ``compact`` / ``materialize_deletes`` remain single-writer
-  maintenance operations.
+  the case that matters with many writers — commits loss-free. Every
+  snapshot, ``compact`` / ``materialize_deletes`` / ``rollback``
+  included, publishes through that one CAS, so no race overwrites a
+  snapshot.
 - **Rollback**: ``rollback(spark, snapshot_id)`` undoes commits back
   to a snapshot at O(undone work) cost — drops later partitions,
   strips later appended files (recomputing only the touched
   manifests' stats), discards later delete files; refuses to cross a
   physical rewrite. Physical restore instead of Iceberg's pointer
-  move, because reads here resolve from the manifest set.
+  move, because reads here resolve from the manifest set. Rolling
+  back to or before main's branch pin unpins main.
 - **Tags**: ``tag(name)`` / ``read(tag=...)`` name a snapshot as a
   durable reproducibility handle; tagged snapshots survive
   ``expire_snapshots``, and ``rollback`` drops (and reports) tags
@@ -131,6 +133,10 @@ PART_COL = "part_key"
 def _safe_name(s: str) -> str:
     """File-name-safe slug of a caller-supplied run id."""
     return re.sub(r"[^A-Za-z0-9._-]", "_", s)[:80]
+
+
+def _parquet_files(dirpath: str) -> list[str]:
+    return sorted(f for f in os.listdir(dirpath) if f.endswith(".parquet"))
 
 
 class CommitConflictError(RuntimeError):
@@ -431,6 +437,21 @@ class IcebergLike:
 
     # -- manifest bookkeeping ------------------------------------------------
 
+    def _part_dir(self, k: int) -> str:
+        return os.path.join(self.data_dir, f"{PART_COL}={k}")
+
+    def _manifest_path(self, k: int) -> str:
+        return os.path.join(self.manifest_dir, f"part-{k:05d}.json")
+
+    def _snapshot_path(self, sid: int) -> str:
+        return os.path.join(self.manifest_dir, f"snapshot-{sid:05d}.json")
+
+    def _ref_path(self, name: str) -> str:
+        return os.path.join(self.manifest_dir, f"branch-{name}.json")
+
+    def _write_manifest(self, k: int, m: dict) -> None:
+        self._write_json_atomic(self._manifest_path(k), m)
+
     def committed_keys(self) -> set[int]:
         out = set()
         for f in os.listdir(self.manifest_dir):
@@ -453,7 +474,7 @@ class IcebergLike:
             ~F.col(PART_COL).isin(sorted(int(k) for k in committed)))
 
     def manifest(self, part_key: int) -> dict | None:
-        p = os.path.join(self.manifest_dir, f"part-{part_key:05d}.json")
+        p = self._manifest_path(part_key)
         if not os.path.exists(p):
             return None
         with open(p) as fh:
@@ -466,6 +487,23 @@ class IcebergLike:
                 with open(os.path.join(self.manifest_dir, f)) as fh:
                     out.append(json.load(fh))
         return out
+
+    def _snapshot(self, snapshot_id: int | None) -> dict | None:
+        """The snapshot whose embedded id is ``snapshot_id`` (never a
+        list position); ``None`` asks for the newest, which is None
+        on a table with no snapshots."""
+        snaps = self.snapshots()
+        if snapshot_id is None:
+            return snaps[-1] if snaps else None
+        for s in snaps:
+            if s["snapshot_id"] == snapshot_id:
+                return s
+        have = sorted(s["snapshot_id"] for s in snaps)
+        raise ValueError(f"no snapshot with snapshot_id={snapshot_id};"
+                         f" have {have}")
+
+    def _latest_id(self) -> int | None:
+        return (self._snapshot(None) or {}).get("snapshot_id")
 
     def _write_json_atomic(self, path: str, obj: dict) -> None:
         tmp = path + ".tmp"
@@ -481,18 +519,18 @@ class IcebergLike:
 
     def _publish_snapshot(self, snap: dict, rebase=None) -> dict:
         """Publish a snapshot with optimistic concurrency — the
-        Iceberg commit protocol: create-if-absent (``os.link`` is an
-        atomic fail-if-exists on POSIX; ``os.replace`` would silently
+        Iceberg commit protocol, and the ONLY code that writes a
+        snapshot file: create-if-absent (``os.link`` is an atomic
+        fail-if-exists on POSIX; ``os.replace`` would silently
         overwrite a concurrent winner's snapshot), and on conflict
         re-derive the next id, let ``rebase(snap, new_id)`` rewrite
-        whatever embeds the old id (partition manifests' sequence
-        numbers, a delete file's name), and retry. Two writers racing
-        the same table thus both land, serialized, under distinct
-        snapshot ids — no metadata is lost."""
+        whatever embeds the old id (default ``_rebased``; writers
+        whose partition manifests record the id renumber them too),
+        and retry. Two writers racing the same table thus both land,
+        serialized, under distinct snapshot ids — no metadata is
+        lost."""
         while True:
-            sid = snap["snapshot_id"]
-            path = os.path.join(self.manifest_dir,
-                                f"snapshot-{sid:05d}.json")
+            path = self._snapshot_path(snap["snapshot_id"])
             tmp = f"{path}.tmp-{os.getpid()}-{threading.get_ident()}"
             with open(tmp, "w") as fh:
                 json.dump(snap, fh, indent=1, sort_keys=True,
@@ -501,14 +539,57 @@ class IcebergLike:
                 os.link(tmp, path)
             except FileExistsError:
                 os.remove(tmp)
-                new_id = self._next_snapshot_id()
-                if rebase is not None:
-                    snap = rebase(snap, new_id)
-                else:
-                    snap = {**snap, "snapshot_id": new_id}
+                snap = (rebase or self._rebased)(
+                    snap, self._next_snapshot_id())
                 continue
             os.remove(tmp)
             return snap
+
+    def _rebased(self, snap: dict, new_id: int) -> dict:
+        """Lost the snapshot id race: serialize after the winner under
+        ``new_id``, with the partition set as of the retry. A delete
+        file keeps its run-unique name (renaming it could move a path
+        the winner's published snapshot references), and a position
+        delete stays exact — it names files that existed at scan
+        time, so the winner's new files are untouched."""
+        return {**snap, "snapshot_id": new_id,
+                "committed_keys": sorted(self.committed_keys()),
+                "rebased_from": snap["snapshot_id"]}
+
+    def _renumber_manifests(self, keys, old: int, new: int) -> None:
+        """Rewrite the sequence fields that the manifests of ``keys``
+        recorded under the lost snapshot id ``old`` to ``new``."""
+        for k in sorted(keys):
+            m = self.manifest(k)
+            if m is None:
+                continue
+            if m.get("data_snapshot_id") == old:
+                m["data_snapshot_id"] = new
+            m["file_seq"] = {f: (new if int(s_) == old else s_)
+                             for f, s_ in (m.get("file_seq") or {}).items()}
+            for a in m.get("appends", []):
+                if a.get("snapshot_id") == old:
+                    a["snapshot_id"] = new
+            self._write_manifest(k, m)
+
+    def _check_main_writable(self) -> None:
+        """Diverged-main guard, called by every main-lineage mutator
+        before its first side effect: while a branch is ahead of the
+        pinned main, a main commit would land files sequenced INTO
+        the branch's lineage (the linear store has one sequence), and
+        a compaction would take the branch's sequence numbers and
+        vanish from main reads — refuse instead of silently merging
+        histories. Branch commits and ``rollback`` (the abandon
+        path) are exempt."""
+        pin = self._main_pin() if self._branch_writer is None else None
+        if pin is None:
+            return
+        latest = self._latest_id()
+        if latest is not None and latest > pin:
+            raise ValueError(
+                f"main is pinned at {pin} behind branch commits"
+                f" (latest {latest}); fast_forward or drop the branch"
+                " before writing main")
 
     def partition_spec(self):
         """The table's hidden-partitioning spec (list of
@@ -605,22 +686,9 @@ class IcebergLike:
         ``recover_orphans()`` (manifested appends are durable; the
         crashed run re-stages idempotently).
         """
+        self._check_main_writable()
         if partition_spec is not None:
             df = self._bind_spec(df, partition_spec)
-        # diverged-main guard: while a branch is ahead of the pinned
-        # main, a plain commit would land files sequenced INTO the
-        # branch's lineage (the linear store has one sequence) —
-        # refuse instead of silently merging histories.
-        if self._branch_writer is None:
-            pin = self._main_pin()
-            if pin is not None:
-                snaps = self.snapshots()
-                latest = snaps[-1]["snapshot_id"] if snaps else None
-                if latest is not None and latest > pin:
-                    raise ValueError(
-                        f"main is pinned at {pin} behind branch"
-                        f" commits (latest {latest}); fast_forward"
-                        " or drop the branch before writing main")
         committed = self.committed_keys()
         run_id = run_id or f"run-{int(time.time() * 1000)}"
         if append:
@@ -698,7 +766,7 @@ class IcebergLike:
             already durable, unfinished ones are recomputed from the
             idempotent staging on the next run."""
             src = os.path.join(staging, f"{PART_COL}={k}")
-            dst = os.path.join(self.data_dir, f"{PART_COL}={k}")
+            dst = self._part_dir(k)
             prior = self.manifest(k) if append else None
             if prior is not None and os.path.exists(dst):
                 return self._append_into(k, src, dst, prior, run_id,
@@ -709,8 +777,7 @@ class IcebergLike:
             if os.path.exists(dst):
                 shutil.rmtree(dst)  # stale partial from a dead run
             os.rename(src, dst)  # atomic promote
-            files = sorted(f for f in os.listdir(dst)
-                           if f.endswith(".parquet"))
+            files = _parquet_files(dst)
             m = {
                 "part_key": k,
                 "run_id": run_id,
@@ -731,8 +798,7 @@ class IcebergLike:
                 fb = _file_blooms_for(dst, files, bloom_cols)
                 if fb:
                     m["file_blooms"] = fb
-            self._write_json_atomic(
-                os.path.join(self.manifest_dir, f"part-{k:05d}.json"), m)
+            self._write_manifest(k, m)
             return k
 
         if fail_after is not None:
@@ -787,24 +853,8 @@ class IcebergLike:
                         f" committed concurrently by run"
                         f" {s.get('run_id')} (snapshot"
                         f" {s['snapshot_id']}); rerun this write")
-            for k in sorted(mine):
-                m = self.manifest(k)
-                if m is None:
-                    continue
-                if m.get("data_snapshot_id") == old:
-                    m["data_snapshot_id"] = new_id
-                fseq = m.get("file_seq") or {}
-                m["file_seq"] = {f: (new_id if int(s_) == old else s_)
-                                 for f, s_ in fseq.items()}
-                for a in m.get("appends", []):
-                    if a.get("snapshot_id") == old:
-                        a["snapshot_id"] = new_id
-                self._write_json_atomic(
-                    os.path.join(self.manifest_dir,
-                                 f"part-{k:05d}.json"), m)
-            return {**snap, "snapshot_id": new_id,
-                    "committed_keys": sorted(self.committed_keys()),
-                    "rebased_from": old}
+            self._renumber_manifests(mine, old, new_id)
+            return self._rebased(snap, new_id)
 
         return self._publish_snapshot(snapshot, rebase=_rebase)
 
@@ -820,10 +870,8 @@ class IcebergLike:
         files moved before a crash are unmanifested ``s*-`` orphans,
         invisible to reads and reclaimed by the age-gated
         ``_recover_appends`` sweep / explicit ``recover_orphans``."""
-        staged = sorted(f for f in os.listdir(src)
-                        if f.endswith(".parquet"))
         new_names = []
-        for i, f in enumerate(staged):
+        for i, f in enumerate(_parquet_files(src)):
             name = f"s{snap_id:05d}-{i:04d}-{f[-24:]}"
             os.rename(os.path.join(src, f), os.path.join(dst, name))
             new_names.append(name)
@@ -893,8 +941,7 @@ class IcebergLike:
              # exactly when undoing a crashed attempt's manifests
              **({"rows": new_rows} if isinstance(new_rows, int)
                 else {})})
-        self._write_json_atomic(
-            os.path.join(self.manifest_dir, f"part-{k:05d}.json"), m)
+        self._write_manifest(k, m)
         return k
 
     @staticmethod
@@ -925,6 +972,63 @@ class IcebergLike:
             if fb:
                 m["file_blooms"] = fb
 
+    @staticmethod
+    def _recount(spark: SparkSession, m: dict, dirpath: str) -> None:
+        """After rows left a partition (rollback stripped files,
+        materialize_deletes folded tombstones), recompute its exact
+        ``rows`` metric and tracked ``col_stats`` bounds from what
+        remains — one tiny agg over that partition only. A stale
+        count/min/max would silently corrupt metadata-only answers
+        (``stats_agg``)."""
+        stat_cols = sorted((m.get("col_stats") or {}).keys())
+        aggs = [F.count(F.lit(1)).alias("_rows")]
+        for c in stat_cols:
+            aggs += [F.min(c).alias(f"_mn_{c}"),
+                     F.max(c).alias(f"_mx_{c}")]
+        r = spark.read.parquet(dirpath).agg(*aggs).collect()[0]
+        m["metrics"] = {**(m.get("metrics") or {}), "rows": r["_rows"]}
+        if stat_cols:
+            m["col_stats"] = {c: {"min": r[f"_mn_{c}"],
+                                  "max": r[f"_mx_{c}"]}
+                              for c in stat_cols}
+
+    def _swap_in(self, staging: str, k: int, run_id: str,
+                 crash: bool = False) -> list[str]:
+        """Replace partition ``k``'s dir with its rewrite staged under
+        ``staging`` without copying data: rename(dst -> dst.old-run),
+        rename(staged -> dst), rm old. A kill between the renames is
+        repaired by ``_recover_compaction`` on the next open; ``crash``
+        injects exactly that kill. Returns the new file list."""
+        dst = self._part_dir(k)
+        old = f"{dst}.old-{run_id}"
+        os.rename(dst, old)
+        if crash:
+            raise RuntimeError(
+                "injected failure between compaction renames")
+        os.rename(os.path.join(staging, f"{PART_COL}={k}"), dst)
+        shutil.rmtree(old)
+        return _parquet_files(dst)
+
+    def _forget_files(self, k: int, m: dict, drop: set[str]) -> None:
+        """Delete ``drop`` from partition ``k``'s dir and from its
+        manifest ``m`` (file list, per-file sequence numbers, stats
+        and blooms). Surviving files are untouched, so their immutable
+        footer bounds and blooms stay valid."""
+        d = self._part_dir(k)
+        for f in sorted(drop):
+            try:
+                os.remove(os.path.join(d, f))
+            except OSError:
+                pass  # already gone (the orphan sweep got it)
+        m["files"] = [f for f in m.get("files", []) if f not in drop]
+        m["file_seq"] = {f: s_ for f, s_ in (m.get("file_seq") or {}).items()
+                         if f not in drop}
+        for fk in ("file_stats", "file_blooms"):
+            kept = {f: v for f, v in (m.pop(fk, None) or {}).items()
+                    if f not in drop}
+            if kept:
+                m[fk] = kept
+
     def _recover_appends(
             self,
             min_age_sec: float = ORPHAN_SWEEP_MIN_AGE_SEC) -> None:
@@ -945,7 +1049,7 @@ class IcebergLike:
         are unaffected). A recovery procedure that knows no appender
         is live calls ``recover_orphans()`` before serving reads."""
         for k in self.committed_keys():
-            d = os.path.join(self.data_dir, f"{PART_COL}={k}")
+            d = self._part_dir(k)
             if not os.path.isdir(d):
                 continue
             cands = [f for f in os.listdir(d)
@@ -996,24 +1100,8 @@ class IcebergLike:
                     and a.get("snapshot_id") not in published]
             if not dead:
                 continue
-            drop = {f for a in dead for f in a.get("files", [])}
-            d = os.path.join(self.data_dir, f"{PART_COL}={k}")
-            for f in sorted(drop):
-                try:
-                    os.remove(os.path.join(d, f))
-                except OSError:
-                    pass  # already gone (orphan sweep got it)
-            m["files"] = [f for f in m.get("files", [])
-                          if f not in drop]
-            m["file_seq"] = {f: s_ for f, s_ in
-                             (m.get("file_seq") or {}).items()
-                             if f not in drop}
-            for fk in ("file_stats", "file_blooms"):
-                if m.get(fk):
-                    m[fk] = {f: s_ for f, s_ in m[fk].items()
-                             if f not in drop}
-                    if not m[fk]:
-                        m.pop(fk)
+            self._forget_files(
+                k, m, {f for a in dead for f in a.get("files", [])})
             m["appends"] = [a for a in appends if a not in dead]
             rows = (m.get("metrics") or {}).get("rows")
             dead_rows = [a.get("rows") for a in dead]
@@ -1024,9 +1112,7 @@ class IcebergLike:
             elif isinstance(rows, int):
                 m["metrics"] = {c: v for c, v in m["metrics"].items()
                                 if c != "rows"}  # unknown: drop
-            self._write_json_atomic(
-                os.path.join(self.manifest_dir, f"part-{k:05d}.json"),
-                m)
+            self._write_manifest(k, m)
             stripped.append(k)
         return stripped
 
@@ -1170,8 +1256,7 @@ class IcebergLike:
             raise ValueError(f"no snapshot {snapshot_id} to branch")
         obj = {"name": name, "snapshot_id": snapshot_id,
                "created_at": time.time()}
-        self._write_json_atomic(
-            os.path.join(self.manifest_dir, f"branch-{name}.json"), obj)
+        self._write_json_atomic(self._ref_path(name), obj)
         return obj
 
     def branches(self) -> dict[str, int]:
@@ -1185,7 +1270,7 @@ class IcebergLike:
         return out
 
     def _main_pin(self) -> int | None:
-        p = os.path.join(self.manifest_dir, "branch-main.json")
+        p = self._ref_path("main")
         if not os.path.exists(p):
             return None
         with open(p) as fh:
@@ -1195,10 +1280,7 @@ class IcebergLike:
         """Current MAIN state: the pin while diverged, else the
         newest snapshot (back-compat: no-branch tables never pin)."""
         pin = self._main_pin()
-        if pin is not None:
-            return pin
-        snaps = self.snapshots()
-        return snaps[-1]["snapshot_id"] if snaps else None
+        return pin if pin is not None else self._latest_id()
 
     def _resolve_branch(self, name: str) -> int:
         if name == "main":
@@ -1218,8 +1300,7 @@ class IcebergLike:
         branch readers (``read(branch=name)``) see the appends. Only
         the tip branch is writable (linear store)."""
         head = self._resolve_branch(name)
-        snaps = self.snapshots()
-        latest = snaps[-1]["snapshot_id"] if snaps else None
+        latest = self._latest_id()
         if head != latest:
             raise ValueError(
                 f"branch {name!r} head {head} is not the newest"
@@ -1227,7 +1308,7 @@ class IcebergLike:
         if self._main_pin() is None:
             # first divergent commit: freeze main where it is
             self._write_json_atomic(
-                os.path.join(self.manifest_dir, "branch-main.json"),
+                self._ref_path("main"),
                 {"name": "main", "snapshot_id": head,
                  "created_at": time.time()})
         if write_kwargs.pop("append", True) is not True:
@@ -1243,7 +1324,7 @@ class IcebergLike:
         finally:
             self._branch_writer = None
         self._write_json_atomic(
-            os.path.join(self.manifest_dir, f"branch-{name}.json"),
+            self._ref_path(name),
             {"name": name, "snapshot_id": snap["snapshot_id"],
              "created_at": time.time()})
         return snap
@@ -1260,9 +1341,8 @@ class IcebergLike:
             raise ValueError(
                 f"main at {main} is ahead of branch {name!r} at"
                 f" {head}: not a fast-forward")
-        snaps = self.snapshots()
-        latest = snaps[-1]["snapshot_id"] if snaps else None
-        main_path = os.path.join(self.manifest_dir, "branch-main.json")
+        latest = self._latest_id()
+        main_path = self._ref_path("main")
         if head == latest and os.path.exists(main_path):
             os.remove(main_path)  # main floats with latest again
         elif head != latest:
@@ -1281,16 +1361,12 @@ class IcebergLike:
         of write-audit-publish. Without it, only the ref is dropped
         (the pin stays, so main reads stay correct; the orphaned
         commits remain time-travelable until expiry/rollback)."""
-        p = os.path.join(self.manifest_dir, f"branch-{name}.json")
+        p = self._ref_path(name)
         if os.path.exists(p):
             os.remove(p)
-        if spark is not None:
-            pin = self._main_pin()
-            if pin is not None:
-                self.rollback(spark, pin)
-                mp = os.path.join(self.manifest_dir, "branch-main.json")
-                if os.path.exists(mp):
-                    os.remove(mp)
+        pin = self._main_pin() if spark is not None else None
+        if pin is not None:
+            self.rollback(spark, pin)  # also removes the pin
 
     def stats_agg(self, cols: tuple[str, ...] = ()) -> dict:
         """Metadata-only aggregates — ``COUNT(*)`` plus per-column
@@ -1315,7 +1391,7 @@ class IcebergLike:
 
         Returns ``{"rows": n, "min": {col: v}, "max": {col: v}}``.
         """
-        if self._delete_snapshots() or self._pos_delete_snapshots():
+        if any(self._live_deletes()):
             raise ValueError(
                 "live delete files make manifest counts stale —"
                 " materialize_deletes() first")
@@ -1377,8 +1453,7 @@ class IcebergLike:
                     and os.path.exists(os.path.join(
                         self.delete_dir, s["delete_file"]))):
                 continue  # live tombstones: must stay discoverable
-            os.remove(os.path.join(self.manifest_dir,
-                                   f"snapshot-{sid:05d}.json"))
+            os.remove(self._snapshot_path(sid))
             expired.append(sid)
         return {"expired": expired, "cutoff": cutoff}
 
@@ -1401,15 +1476,11 @@ class IcebergLike:
         ACROSS a physical rewrite (``compact`` /
         ``materialize_deletes``) is refused: those rewrote rows in
         place and cannot be undone. Cost is O(undone work), never
-        O(table)."""
+        O(table). Branch refs whose head is rolled away die, and a
+        target at-or-before main's pin removes the pin (this is how
+        ``drop_branch(spark=...)`` abandons a branch)."""
+        target = self._snapshot(snapshot_id)
         snaps = self.snapshots()
-        target = next((s for s in snaps
-                       if s["snapshot_id"] == snapshot_id), None)
-        if target is None:
-            have = sorted(s["snapshot_id"] for s in snaps)
-            raise ValueError(
-                f"no snapshot with snapshot_id={snapshot_id};"
-                f" have {have}")
         later = [s for s in snaps if s["snapshot_id"] > snapshot_id]
         rewrites = [s["snapshot_id"] for s in later
                     if s.get("op") in ("compact", "materialize_deletes")]
@@ -1421,49 +1492,21 @@ class IcebergLike:
         keep = {int(k) for k in target["committed_keys"]}
         dropped_parts, stripped = [], []
         for k in sorted(self.committed_keys()):
-            d = os.path.join(self.data_dir, f"{PART_COL}={k}")
-            mpath = os.path.join(self.manifest_dir, f"part-{k:05d}.json")
             if k not in keep:
-                shutil.rmtree(d, ignore_errors=True)
-                os.remove(mpath)
+                shutil.rmtree(self._part_dir(k), ignore_errors=True)
+                os.remove(self._manifest_path(k))
                 dropped_parts.append(k)
                 continue
             m = self.manifest(k) or {}
-            fseq = m.get("file_seq") or {}
-            late = {f for f, s_ in fseq.items() if int(s_) > snapshot_id}
+            late = {f for f, s_ in (m.get("file_seq") or {}).items()
+                    if int(s_) > snapshot_id}
             if not late:
                 continue
-            for f in sorted(late):
-                p = os.path.join(d, f)
-                if os.path.exists(p):
-                    os.remove(p)
-            m["files"] = [f for f in m.get("files", []) if f not in late]
-            m["file_seq"] = {f: s_ for f, s_ in fseq.items()
-                             if f not in late}
-            for fk in ("file_stats", "file_blooms"):
-                if m.get(fk):
-                    # surviving files are untouched, so their
-                    # immutable footer bounds / blooms stay valid —
-                    # just drop stripped entries
-                    m[fk] = {f: s_ for f, s_ in m[fk].items()
-                             if f not in late}
-                    if not m[fk]:
-                        m.pop(fk)
+            self._forget_files(k, m, late)
             m["appends"] = [a for a in m.get("appends", [])
                             if a.get("snapshot_id", 0) <= snapshot_id]
-            stat_cols = sorted((m.get("col_stats") or {}).keys())
-            aggs = [F.count(F.lit(1)).alias("_rows")]
-            for c in stat_cols:
-                aggs += [F.min(c).alias(f"_mn_{c}"),
-                         F.max(c).alias(f"_mx_{c}")]
-            r = spark.read.parquet(d).agg(*aggs).collect()[0]
-            m["metrics"] = {**(m.get("metrics") or {}),
-                            "rows": r["_rows"]}
-            if stat_cols:
-                m["col_stats"] = {c: {"min": r[f"_mn_{c}"],
-                                      "max": r[f"_mx_{c}"]}
-                                  for c in stat_cols}
-            self._write_json_atomic(mpath, m)
+            self._recount(spark, m, self._part_dir(k))
+            self._write_manifest(k, m)
             stripped.append(k)
         dropped_snaps = []
         for s in later:
@@ -1473,9 +1516,7 @@ class IcebergLike:
                     shutil.rmtree(p, ignore_errors=True)
                 elif os.path.exists(p):
                     os.remove(p)
-            os.remove(os.path.join(
-                self.manifest_dir,
-                f"snapshot-{s['snapshot_id']:05d}.json"))
+            os.remove(self._snapshot_path(s["snapshot_id"]))
             dropped_snaps.append(s["snapshot_id"])
         dropped_tags = [name for name, sid in self.tags().items()
                         if sid > snapshot_id]
@@ -1483,8 +1524,13 @@ class IcebergLike:
             self.drop_tag(name)
         for name, sid in list(self.branches().items()):
             if sid > snapshot_id:  # branch head rolled away: ref dies
-                os.remove(os.path.join(self.manifest_dir,
-                                       f"branch-{name}.json"))
+                os.remove(self._ref_path(name))
+        pin = self._main_pin()
+        if pin is not None and snapshot_id <= pin:
+            # main's lineage is the whole history again: a pin left
+            # behind would refuse every later main commit with no
+            # branch left to fast-forward
+            os.remove(self._ref_path("main"))
         # pin the schema as of the target (rolls back schema
         # evolution too); delete-op targets carry none, so walk back
         schema_json = next(
@@ -1534,10 +1580,11 @@ class IcebergLike:
         ``fail_after_first_rename=N`` injects a crash right after the
         N-th partition's first rename (kill/recovery tests).
         """
+        self._check_main_writable()
         committed = self.committed_keys()
         keys = sorted(committed if part_keys is None else
                       [k for k in part_keys if k in committed])
-        pending_dels = bool(self._delete_snapshots())
+        dels, pdels = self._live_deletes()
         # partitions referenced by a pending POSITION delete can never
         # be compacted: rewriting renames the files the tombstones
         # address, silently resurrecting the deleted rows. Those
@@ -1546,7 +1593,7 @@ class IcebergLike:
         # dimension-sized, so listing their partitions is one tiny
         # driver-side read each.
         pos_parts: set[int] = set()
-        for s in self._pos_delete_snapshots():
+        for s in pdels:
             p = os.path.join(self.delete_dir, s["delete_file"])
             pos_parts |= {int(r[0]) for r in
                           spark.read.parquet(p)
@@ -1558,16 +1605,14 @@ class IcebergLike:
             if k in pos_parts:
                 skipped_pos_delete.append(k)
                 continue
-            dst = os.path.join(self.data_dir, f"{PART_COL}={k}")
-            files = sorted(f for f in os.listdir(dst)
-                           if f.endswith(".parquet"))
+            files = _parquet_files(self._part_dir(k))
             if len(files) < min_files:
                 continue
             m = self.manifest(k) or {}
             fseq = m.get("file_seq") or {}
             seqs = {int(fseq.get(f, m.get("data_snapshot_id", 0)))
                     for f in files}
-            if pending_dels and len(seqs) > 1:
+            if dels and len(seqs) > 1:
                 # compacting mixes files of different sequence
                 # numbers into one; a pending delete sequenced
                 # BETWEEN them could no longer scope correctly —
@@ -1584,14 +1629,8 @@ class IcebergLike:
                     "files_before": 0, "files_after": 0}
 
         staging = os.path.join(self.staging_dir, run_id)
-        schema = self._stored_schema(
-            self.snapshots()[-1] if self.snapshots() else None)
-        reader = spark.read.option("basePath", self.data_dir)
-        if schema is not None:
-            reader = reader.schema(schema)
-        df = reader.parquet(*[os.path.join(self.data_dir,
-                                           f"{PART_COL}={k}")
-                              for k in todo])
+        latest = self._snapshot(None)
+        df = self._scan(spark, latest, [self._part_dir(k) for k in todo])
         advisory_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
         prev_advisory = spark.conf.get(advisory_key, None)
         spark.conf.set(advisory_key, str(target_mb * 1024 * 1024))
@@ -1607,18 +1646,10 @@ class IcebergLike:
 
         compacted, files_before, files_after = [], 0, 0
         for i, (k, old_files) in enumerate(sorted(todo.items())):
-            src = os.path.join(staging, f"{PART_COL}={k}")
-            dst = os.path.join(self.data_dir, f"{PART_COL}={k}")
-            old = dst + f".old-{run_id}"
-            os.rename(dst, old)
-            if (fail_after_first_rename is not None
-                    and i >= fail_after_first_rename):
-                raise RuntimeError(
-                    "injected failure between compaction renames")
-            os.rename(src, dst)
-            shutil.rmtree(old)
-            new_files = sorted(f for f in os.listdir(dst)
-                               if f.endswith(".parquet"))
+            new_files = self._swap_in(
+                staging, k, run_id,
+                crash=(fail_after_first_rename is not None
+                       and i >= fail_after_first_rename))
             m = self.manifest(k) or {"part_key": k}
             # merged files inherit the MAX of the old sequences
             # (uniform when deletes are pending — the todo guard;
@@ -1631,31 +1662,25 @@ class IcebergLike:
             m.update({"files": new_files, "compacted_by": run_id,
                       "file_seq": {f: seq for f in new_files},
                       "files_before_compaction": len(old_files)})
-            self._refresh_file_stats(m, dst, new_files)
-            self._write_json_atomic(
-                os.path.join(self.manifest_dir, f"part-{k:05d}.json"), m)
+            self._refresh_file_stats(m, self._part_dir(k), new_files)
+            self._write_manifest(k, m)
             compacted.append(k)
             files_before += len(old_files)
             files_after += len(new_files)
 
         shutil.rmtree(staging, ignore_errors=True)
-        snaps = self.snapshots()
-        snap_id = (max((s.get("snapshot_id", -1) for s in snaps),
-                       default=-1) + 1)
         snapshot = {
-            "snapshot_id": snap_id, "op": "compact", "run_id": run_id,
+            "snapshot_id": self._next_snapshot_id(), "op": "compact",
+            "run_id": run_id,
             "committed_keys": sorted(self.committed_keys()),
             "compacted_keys": compacted,
             "skipped_mixed_seq": skipped_mixed_seq,
             "skipped_pos_delete": skipped_pos_delete,
             "files_before": files_before, "files_after": files_after,
-            **({"schema_json": schema.json()} if schema is not None
-               else {}),
+            **({"schema_json": latest["schema_json"]}
+               if (latest or {}).get("schema_json") else {}),
         }
-        self._write_json_atomic(
-            os.path.join(self.manifest_dir,
-                         f"snapshot-{snap_id:05d}.json"), snapshot)
-        return snapshot
+        return self._publish_snapshot(snapshot)
 
     def _stored_schema(self, snap: dict | None) -> T.StructType | None:
         sj = (snap or {}).get("schema_json")
@@ -1706,91 +1731,101 @@ class IcebergLike:
             # is pinned and the read time-travels to the pin (per-file
             # sequence scoping hides the branch's appends)
             snapshot_id = self._main_pin()
-        dels = (self._delete_snapshots(upto=snapshot_id)
-                if apply_deletes else [])
-        pdels = (self._pos_delete_snapshots(upto=snapshot_id)
-                 if apply_deletes else [])
-        if snapshot_id is None and not dels and not pdels:
+        deletes = (self._live_deletes(snapshot_id) if apply_deletes
+                   else ([], []))
+        if snapshot_id is None and not any(deletes):
             # fast path: a plain latest-read with nothing to scope
             # stays a bare scan (no annotation join in the plan)
-            return self._plain_scan(spark)
+            return self._scan(spark, self._snapshot(None))
         ann = self._read_annotated(spark, snapshot_id,
-                                   with_pos=bool(pdels))
+                                   with_pos=bool(deletes[1]))
         if "_dseq" not in ann.columns:
             return ann  # empty-snapshot frame (no data to scan)
-        for eq_cols, d in self._delete_dims(spark, dels):
-            ann = ann.join(F.broadcast(d),
-                           self._del_cond(eq_cols), "left_anti")
-        ann = self._apply_pos_deletes(spark, ann, pdels)
-        return self._unannotate(ann)
+        return self._unannotate(self._drop_deleted(spark, ann, deletes))
 
-    def _plain_scan(self, spark: SparkSession) -> DataFrame:
-        """Bare latest-state scan (schema-pinned glob), no sequence
-        annotation — the zero-join path for tables with no pending
-        deletes and no time-travel request."""
-        snaps = self.snapshots()
-        snap = snaps[-1] if snaps else None
+    def _scan(self, spark: SparkSession, snap: dict | None,
+              paths: list[str] | None = None) -> DataFrame:
+        """Bare scan of ``paths`` (default: the ``part_key=*`` glob)
+        under ``snap``'s stored schema — no footer sampling, and
+        partitions written before a schema evolution read it with
+        the missing columns null. Nothing to scan (no paths, or a
+        snapshot that commits no partition) gives an empty frame of
+        that schema instead of an obscure zero-path read error."""
+        if paths is None and (snap is None or snap["committed_keys"]):
+            paths = [os.path.join(self.data_dir, f"{PART_COL}=*")]
         schema = self._stored_schema(snap)
-        if snap is not None and not snap["committed_keys"]:
+        if not paths:
             if schema is None:
                 raise ValueError(
-                    f"snapshot {snap.get('snapshot_id')} has no"
-                    " committed partitions and records no schema")
+                    f"snapshot {(snap or {}).get('snapshot_id')} has"
+                    " nothing to scan and records no schema")
             return spark.createDataFrame([], schema=schema)
         reader = spark.read.option("basePath", self.data_dir)
         if schema is not None:
             reader = reader.schema(schema)
-        return reader.parquet(
-            os.path.join(self.data_dir, f"{PART_COL}=*"))
+        return reader.parquet(*paths)
 
     def _read_annotated(self, spark: SparkSession,
                         snapshot_id: int | None,
                         with_pos: bool = False) -> DataFrame:
-        """The scan every read path shares: schema-pinned glob scan,
+        """The scan every scoped read shares: ``_scan`` plus the
         ``_dseq`` per-file sequence annotation (attached HERE because
         ``input_file_name()`` rejects multi-source plans), and — for
         time travel — the partition AND file-sequence filters of the
-        requested snapshot. Callers drop ``_dseq`` when done."""
-        snaps = self.snapshots()
-        if snapshot_id is None:
-            snap = snaps[-1] if snaps else None
-        else:
-            snap = next((s for s in snaps
-                         if s.get("snapshot_id") == snapshot_id), None)
-            if snap is None:
-                have = sorted(s.get("snapshot_id") for s in snaps)
-                raise ValueError(
-                    f"no snapshot with snapshot_id={snapshot_id};"
-                    f" have {have}")
-        schema = self._stored_schema(snap)
+        requested snapshot. Callers drop ``_dseq`` when done; an
+        empty snapshot's frame comes back unannotated."""
+        snap = self._snapshot(snapshot_id)
+        df = self._scan(spark, snap)
         if snap is not None and not snap["committed_keys"]:
-            if schema is None:
-                raise ValueError(
-                    f"snapshot {snap.get('snapshot_id')} has no"
-                    " committed partitions and records no schema")
-            return spark.createDataFrame([], schema=schema)
-        reader = spark.read.option("basePath", self.data_dir)
-        if schema is not None:
-            reader = reader.schema(schema)
-        df = reader.parquet(os.path.join(self.data_dir, f"{PART_COL}=*"))
+            return df
         if snapshot_id is not None:
             df = df.filter(F.col(PART_COL).isin(
                 [int(k) for k in snap["committed_keys"]]))
-        df = self._annotate_seq(spark, df, keep_pos=with_pos)
-        if snapshot_id is not None:
-            df = df.filter(F.col("_dseq") <= snapshot_id)
-        return df
+        return self._annotate_seq(spark, df, keep_pos=with_pos,
+                                  upto=snapshot_id)
 
     # -- equality deletes (merge-on-read) -------------------------------------
 
+    def _live_deletes(self, upto: int | None = None
+                      ) -> tuple[list[dict], list[dict]]:
+        """(equality, position) delete snapshots at-or-before ``upto``
+        whose delete file is still live (``materialize_deletes``
+        removes the ones it folds). "merge" snapshots carry an
+        equality delete file too (their tombstone half); both ops
+        scope identically by sequence number."""
+        eq, pos = [], []
+        for s in self.snapshots():
+            op = s.get("op")
+            if (op in ("delete", "merge", "pos_delete")
+                    and (upto is None or s["snapshot_id"] <= upto)
+                    and os.path.exists(os.path.join(
+                        self.delete_dir, s["delete_file"]))):
+                (pos if op == "pos_delete" else eq).append(s)
+        return eq, pos
+
+    # one-flavor views of ``_live_deletes``
     def _delete_snapshots(self, upto: int | None = None) -> list[dict]:
-        # "merge" snapshots carry a delete file too (their tombstone
-        # half); both ops scope identically by sequence number
-        return [s for s in self.snapshots()
-                if s.get("op") in ("delete", "merge")
-                and os.path.exists(os.path.join(
-                    self.delete_dir, s["delete_file"]))
-                and (upto is None or s["snapshot_id"] <= upto)]
+        return self._live_deletes(upto)[0]
+
+    def _pos_delete_snapshots(self, upto: int | None = None) -> list[dict]:
+        return self._live_deletes(upto)[1]
+
+    def _drop_deleted(self, spark: SparkSession, ann: DataFrame,
+                      deletes: tuple[list[dict], list[dict]]
+                      ) -> DataFrame:
+        """Anti-join an annotated scan (``_dseq``, plus ``_fname`` and
+        ``_pos`` when position deletes are given) against the
+        ``_live_deletes`` pair: equality deletes first, then position
+        deletes, each as a broadcast dimension scoped by sequence
+        number."""
+        dels, pdels = deletes
+        for eq_cols, d in self._delete_dims(spark, dels):
+            ann = ann.join(F.broadcast(d), self._del_cond(eq_cols),
+                           "left_anti")
+        if pdels:
+            ann = ann.join(F.broadcast(self._pos_dim(spark, pdels)),
+                           self._pos_cond(), "left_anti")
+        return ann
 
     def _file_seq_df(self, spark: SparkSession) -> DataFrame:
         """(file name, sequence number) dimension from the manifests —
@@ -1814,14 +1849,17 @@ class IcebergLike:
             F.col("_fname").isNotNull())
 
     def _annotate_seq(self, spark: SparkSession, df: DataFrame,
-                      keep_pos: bool = False) -> DataFrame:
+                      keep_pos: bool = False,
+                      upto: int | None = None) -> DataFrame:
         """Attach each row's file sequence number as ``_dseq``. MUST
         run directly on the scan frame: ``input_file_name()`` and the
         ``_metadata`` pseudo-column reject plans that already contain
         more than one source. ``keep_pos`` additionally keeps
         ``_fname`` and attaches ``_pos`` (the row's physical ordinal
         in its file, from parquet's ``_metadata.row_index`` — the
-        coordinate system position deletes address)."""
+        coordinate system position deletes address). ``upto`` keeps
+        only files sequenced at-or-before that snapshot (time travel
+        is FILE-granular: appends land in existing partition dirs)."""
         cols = {"_fname": F.element_at(
             F.split(F.input_file_name(), "/"), -1)}
         if keep_pos:
@@ -1831,6 +1869,8 @@ class IcebergLike:
                      [PART_COL, "_fname"], "left")
                .withColumn("_dseq", F.coalesce(F.col("_dseq"),
                                                F.lit(0).cast("long"))))
+        if upto is not None:
+            out = out.filter(F.col("_dseq") <= upto)
         return out if keep_pos else out.drop("_fname")
 
     def _delete_dims(self, spark: SparkSession,
@@ -1875,13 +1915,6 @@ class IcebergLike:
 
     # -- position deletes (merge-on-read, the other v2 flavor) ----------------
 
-    def _pos_delete_snapshots(self, upto: int | None = None) -> list[dict]:
-        return [s for s in self.snapshots()
-                if s.get("op") == "pos_delete"
-                and os.path.exists(os.path.join(
-                    self.delete_dir, s["delete_file"]))
-                and (upto is None or s["snapshot_id"] <= upto)]
-
     def _pos_dim(self, spark: SparkSession,
                  pdels: list[dict]) -> DataFrame:
         """Union the position-delete files into one dimension frame
@@ -1914,15 +1947,6 @@ class IcebergLike:
                 & (F.col("_pos") == F.col("_pd_pos"))
                 & (F.col("_pdelseq") >= F.col("_dseq")))
 
-    def _apply_pos_deletes(self, spark: SparkSession, ann: DataFrame,
-                           pdels: list[dict]) -> DataFrame:
-        """Anti-join an annotated scan (must carry ``_fname`` and
-        ``_pos``) against the pending position deletes."""
-        if not pdels:
-            return ann
-        return ann.join(F.broadcast(self._pos_dim(spark, pdels)),
-                        self._pos_cond(), "left_anti")
-
     @staticmethod
     def _unannotate(df: DataFrame) -> DataFrame:
         return df.drop("_dseq", "_fname", "_pos")
@@ -1948,18 +1972,14 @@ class IcebergLike:
         rows appended later are untouched (they cannot be named by
         position in files that already existed). Reads re-apply the
         file as a broadcast anti-join on (partition, file, pos)."""
+        self._check_main_writable()
         run_id = run_id or f"posdelete-{int(time.time() * 1000)}"
         snap_id = self._next_snapshot_id()
         ann = self._read_annotated(spark, None, with_pos=True)
         if "_dseq" not in ann.columns:
             return {"run_id": run_id, "n_delete_rows": 0,
                     "noop": "empty table"}
-        for eq_cols, d in self._delete_dims(
-                spark, self._delete_snapshots()):
-            ann = ann.join(F.broadcast(d), self._del_cond(eq_cols),
-                           "left_anti")
-        ann = self._apply_pos_deletes(spark, ann,
-                                      self._pos_delete_snapshots())
+        ann = self._drop_deleted(spark, ann, self._live_deletes())
         cond_col = F.expr(cond) if isinstance(cond, str) else cond
         hits = ann.filter(cond_col).select(PART_COL, "_fname", "_pos")
         # run-unique name, written once, never renamed (delete_rows's
@@ -1976,29 +1996,7 @@ class IcebergLike:
             "delete_file": name, "n_delete_rows": int(n),
             "predicate": str(cond),
         }
-
-        def _rebase(snap: dict, new_id: int) -> dict:
-            # lost the id race: positions name files that existed at
-            # scan time, so serializing after the winner is exact —
-            # the winner's new files are untouched by construction
-            return {**snap, "snapshot_id": new_id,
-                    "committed_keys": sorted(self.committed_keys()),
-                    "rebased_from": snap["snapshot_id"]}
-
-        return self._publish_snapshot(snapshot, rebase=_rebase)
-
-    def _apply_deletes(self, spark: SparkSession, df: DataFrame,
-                       snapshot_id: int | None) -> DataFrame:
-        dels = self._delete_snapshots(upto=snapshot_id)
-        pdels = self._pos_delete_snapshots(upto=snapshot_id)
-        if not dels and not pdels:
-            return df
-        df = self._annotate_seq(spark, df, keep_pos=bool(pdels))
-        for eq_cols, d in self._delete_dims(spark, dels):
-            df = df.join(F.broadcast(d), self._del_cond(eq_cols),
-                         "left_anti")
-        df = self._apply_pos_deletes(spark, df, pdels)
-        return self._unannotate(df)
+        return self._publish_snapshot(snapshot)
 
     def delete_rows(self, keys_df: DataFrame, eq_cols: list[str],
                     run_id: str | None = None) -> dict:
@@ -2010,8 +2008,12 @@ class IcebergLike:
         match. Delete sets are dimension-sized (a takedown list, a PII
         scan's hit list), so reads apply them as broadcast anti-joins;
         fold them into the data with ``materialize_deletes`` when the
-        accumulated delete count warrants a rewrite.
+        accumulated delete count warrants a rewrite. Losing the
+        snapshot id race serializes the delete after the winner, so it
+        tombstones whatever is committed at that position (matching
+        rows the winner appended included) — the at-or-before rule.
         """
+        self._check_main_writable()
         run_id = run_id or f"delete-{int(time.time() * 1000)}"
         snap_id = self._next_snapshot_id()
         # Run-unique file name, written ONCE and never renamed. Two
@@ -2020,7 +2022,7 @@ class IcebergLike:
         # delete-{snap_id}.parquet name would make the loser's write
         # clobber the winner's just-published file (and a post-CAS
         # rename leaves a window where a published snapshot references
-        # a missing file — _delete_snapshots would silently skip the
+        # a missing file — _live_deletes would silently skip the
         # tombstones). The numeric prefix is cosmetic (the PROVISIONAL
         # id); identity lives in the snapshot record's delete_file.
         name = (f"delete-{snap_id:05d}-"
@@ -2035,21 +2037,7 @@ class IcebergLike:
             "eq_cols": list(eq_cols), "delete_file": name,
             "n_delete_tuples": int(n),
         }
-
-        def _rebase(snap: dict, new_id: int) -> dict:
-            """Lost the snapshot id race: serialize after the winner —
-            the delete then tombstones whatever is committed at its
-            serialized position (matching rows appended by the
-            concurrent winner included), exactly the at-or-before
-            sequence rule. The delete FILE is untouched: its name is
-            run-unique, so no rename is needed (and renaming here
-            could move a path the winner's published snapshot
-            references)."""
-            return {**snap, "snapshot_id": new_id,
-                    "committed_keys": sorted(self.committed_keys()),
-                    "rebased_from": snap["snapshot_id"]}
-
-        return self._publish_snapshot(snapshot, rebase=_rebase)
+        return self._publish_snapshot(snapshot)
 
     def materialize_deletes(self, spark: SparkSession,
                             run_id: str | None = None) -> dict:
@@ -2071,15 +2059,15 @@ class IcebergLike:
         delete files until ``expire_snapshots``). Reads at-or-after
         the materialize snapshot are exact.
         """
-        dels = self._delete_snapshots()
-        pdels = self._pos_delete_snapshots()
+        self._check_main_writable()
+        dels, pdels = self._live_deletes()
         run_id = run_id or f"materialize-{int(time.time() * 1000)}"
         snap_id = self._next_snapshot_id()
         if not dels and not pdels:
             return {"run_id": run_id, "rewritten_keys": [],
                     "folded_deletes": []}
         raw = self.read(spark, apply_deletes=False)
-        clean = self._apply_deletes(spark, raw, None)
+        clean = self.read(spark)
         # partitions with rows to drop: raw minus clean, per key —
         # driver-side list bounded by the partition count
         hit = (raw.groupBy(PART_COL).count()
@@ -2096,42 +2084,17 @@ class IcebergLike:
              .write.mode("overwrite").partitionBy(PART_COL)
              .parquet(staging))
             for k in keys:
-                src = os.path.join(staging, f"{PART_COL}={k}")
-                dst = os.path.join(self.data_dir, f"{PART_COL}={k}")
-                old = dst + f".old-{run_id}"
-                os.rename(dst, old)
-                os.rename(src, dst)
-                shutil.rmtree(old)
+                files = self._swap_in(staging, k, run_id)
                 m = self.manifest(k) or {"part_key": k}
-                files = sorted(f for f in os.listdir(dst)
-                               if f.endswith(".parquet"))
                 m.update({
                     "files": files,
                     "file_seq": {f: snap_id for f in files},
                     "data_snapshot_id": snap_id,
                     "deletes_materialized_by": run_id,
                 })
-                # rows shrank: recompute the exact row metric and the
-                # tracked column bounds from the survivors (same
-                # per-touched-partition agg as rollback) — a stale
-                # count/min/max here would silently corrupt
-                # metadata-only answers (stats_agg) after the purge
-                stat_cols = sorted((m.get("col_stats") or {}).keys())
-                aggs = [F.count(F.lit(1)).alias("_rows")]
-                for c in stat_cols:
-                    aggs += [F.min(c).alias(f"_mn_{c}"),
-                             F.max(c).alias(f"_mx_{c}")]
-                r = spark.read.parquet(dst).agg(*aggs).collect()[0]
-                m["metrics"] = {**(m.get("metrics") or {}),
-                                "rows": r["_rows"]}
-                if stat_cols:
-                    m["col_stats"] = {c: {"min": r[f"_mn_{c}"],
-                                          "max": r[f"_mx_{c}"]}
-                                      for c in stat_cols}
-                self._refresh_file_stats(m, dst, files)
-                self._write_json_atomic(
-                    os.path.join(self.manifest_dir,
-                                 f"part-{k:05d}.json"), m)
+                self._recount(spark, m, self._part_dir(k))
+                self._refresh_file_stats(m, self._part_dir(k), files)
+                self._write_manifest(k, m)
             shutil.rmtree(staging, ignore_errors=True)
         folded = [s["snapshot_id"] for s in dels + pdels]
         for s in dels + pdels:
@@ -2144,10 +2107,13 @@ class IcebergLike:
             "committed_keys": sorted(self.committed_keys()),
             "rewritten_keys": keys, "folded_deletes": folded,
         }
-        self._write_json_atomic(
-            os.path.join(self.manifest_dir,
-                         f"snapshot-{snap_id:05d}.json"), snapshot)
-        return snapshot
+
+        def _rebase(snap: dict, new_id: int) -> dict:
+            # the rewritten partitions' manifests record the id
+            self._renumber_manifests(keys, snap["snapshot_id"], new_id)
+            return self._rebased(snap, new_id)
+
+        return self._publish_snapshot(snapshot, rebase=_rebase)
 
     # -- incremental scan ------------------------------------------------------
 
@@ -2196,16 +2162,11 @@ class IcebergLike:
         if not files:
             return (self.read(spark, snapshot_id=b)
                     .filter(F.lit(False)))
-        pdels = self._pos_delete_snapshots(upto=b)
-        df = (self._read_annotated(spark, b, with_pos=bool(pdels))
+        deletes = self._live_deletes(b)
+        df = (self._read_annotated(spark, b, with_pos=bool(deletes[1]))
               .filter(F.col(PART_COL).isin(list(files)))
               .filter(F.col("_dseq") > a))
-        for eq_cols, d in self._delete_dims(
-                spark, self._delete_snapshots(upto=b)):
-            df = df.join(F.broadcast(d), self._del_cond(eq_cols),
-                         "left_anti")
-        df = self._apply_pos_deletes(spark, df, pdels)
-        return self._unannotate(df)
+        return self._unannotate(self._drop_deleted(spark, df, deletes))
 
     def read_changes(self, spark: SparkSession, from_snapshot_id: int,
                      to_snapshot_id: int | None = None) -> DataFrame:
@@ -2228,22 +2189,17 @@ class IcebergLike:
         a, b = self._resolve_window(from_snapshot_id, to_snapshot_id)
         inserts = (self.read_incremental(spark, a, b)
                    .withColumn("_change_type", F.lit("insert")))
-        window_dels = [s for s in self._delete_snapshots(upto=b)
-                       if s["snapshot_id"] > a]
-        window_pos = [s for s in self._pos_delete_snapshots(upto=b)
-                      if s["snapshot_id"] > a]
+        dels, pdels = self._live_deletes(b)
+        window_dels = [s for s in dels if s["snapshot_id"] > a]
+        window_pos = [s for s in pdels if s["snapshot_id"] > a]
         # annotate ONCE at scan level (input_file_name rejects
         # multi-source plans), then derive visible-at-a (anti-join
         # deletes <= a) and the tombstoned set (semi-join window
         # deletes) from the same annotated frame
-        ann = self._read_annotated(spark, a, with_pos=bool(
-            window_pos or self._pos_delete_snapshots(upto=a)))
-        for eq_cols, d in self._delete_dims(
-                spark, self._delete_snapshots(upto=a)):
-            ann = ann.join(F.broadcast(d), self._del_cond(eq_cols),
-                           "left_anti")
-        ann = self._apply_pos_deletes(
-            spark, ann, self._pos_delete_snapshots(upto=a))
+        ann = self._drop_deleted(
+            spark, self._read_annotated(spark, a, with_pos=bool(pdels)),
+            ([s for s in dels if s["snapshot_id"] <= a],
+             [s for s in pdels if s["snapshot_id"] <= a]))
         hits = [ann.join(F.broadcast(d), self._del_cond(eq_cols),
                          "left_semi")
                 for eq_cols, d in self._delete_dims(spark,
@@ -2305,15 +2261,7 @@ class IcebergLike:
             if snapshot_id is not None:
                 raise ValueError("pass snapshot_id or tag, not both")
             snapshot_id = self._resolve_tag(tag)
-        snap = None
-        if snapshot_id is not None:
-            snap = next((s for s in self.snapshots()
-                         if s["snapshot_id"] == snapshot_id), None)
-            if snap is None:
-                have = sorted(s["snapshot_id"] for s in self.snapshots())
-                raise ValueError(
-                    f"no snapshot with snapshot_id={snapshot_id};"
-                    f" have {have}")
+        snap = self._snapshot(snapshot_id)
         if preds is None:
             if col is None:
                 raise ValueError("pass col or preds")
@@ -2321,7 +2269,7 @@ class IcebergLike:
         elif col is not None:
             raise ValueError("pass col or preds, not both")
         scan_keys = sorted(self.committed_keys())
-        if snap is not None:
+        if snapshot_id is not None:
             scan_keys = [k for k in scan_keys
                          if k in {int(x) for x in snap["committed_keys"]}]
         # hidden-partitioning pruning: if the table has a partition
@@ -2376,8 +2324,7 @@ class IcebergLike:
             fblooms = m.get("file_blooms") or {}
             names = m.get("files") or []
             if not names or (not fstats and not fblooms):
-                sources.append(os.path.join(self.data_dir,
-                                            f"{PART_COL}={k}"))
+                sources.append(self._part_dir(k))
                 continue
             for f in names:
                 drop = False
@@ -2401,8 +2348,7 @@ class IcebergLike:
                     files_pruned += 1
                 else:
                     files_kept += 1
-                    sources.append(os.path.join(
-                        self.data_dir, f"{PART_COL}={k}", f))
+                    sources.append(os.path.join(self._part_dir(k), f))
         report = {"preds": {c: list(r) for c, r in preds.items()},
                   "col": col, "lo": lo, "hi": hi,
                   "partitions_kept": kept,
@@ -2412,33 +2358,18 @@ class IcebergLike:
                   "files_kept": files_kept,
                   "files_pruned": files_pruned,
                   "files_pruned_bloom": files_pruned_bloom}
-        schema_src = snap if snap is not None else (
-            self.snapshots()[-1] if self.snapshots() else None)
-        schema = self._stored_schema(schema_src)
-        if not kept or not sources:
-            if schema is None:
-                raise ValueError("nothing to scan and no stored schema")
-            return spark.createDataFrame([], schema=schema), report
-        reader = spark.read.option("basePath", self.data_dir)
-        if schema is not None:
-            reader = reader.schema(schema)
-        df = reader.parquet(*sources)
-        if snapshot_id is not None:
-            # time travel is FILE-granular: drop later-sequenced
-            # appends inside kept partition dirs, then apply only the
-            # deletes committed at-or-before the snapshot
-            pdels = self._pos_delete_snapshots(upto=snapshot_id)
-            df = self._annotate_seq(
-                spark, df, keep_pos=bool(pdels)).filter(
-                F.col("_dseq") <= snapshot_id)
-            for eq_cols, d in self._delete_dims(
-                    spark, self._delete_snapshots(upto=snapshot_id)):
-                df = df.join(F.broadcast(d), self._del_cond(eq_cols),
-                             "left_anti")
-            df = self._unannotate(
-                self._apply_pos_deletes(spark, df, pdels))
-        else:
-            df = self._apply_deletes(spark, df, None)
+        df = self._scan(spark, snap, sources)
+        if not sources:
+            return df, report
+        deletes = self._live_deletes(snapshot_id)
+        if snapshot_id is not None or any(deletes):
+            # drop later-sequenced appends inside kept partition dirs
+            # (time travel), then the deletes at-or-before the snapshot
+            df = self._unannotate(self._drop_deleted(
+                spark, self._annotate_seq(spark, df,
+                                          keep_pos=bool(deletes[1]),
+                                          upto=snapshot_id),
+                deletes))
         for c, (lo_, hi_) in preds.items():
             if lo_ is not None:
                 df = df.filter(F.col(c) >= F.lit(lo_))
@@ -2516,7 +2447,7 @@ def _meta_files(self, spark: SparkSession) -> DataFrame:
         fblooms = m.get("file_blooms") or {}
         base = int(m.get("data_snapshot_id", 0))
         for f in m.get("files", []):
-            p = os.path.join(self.data_dir, f"{PART_COL}={k}", f)
+            p = os.path.join(self._part_dir(k), f)
             try:
                 size = os.path.getsize(p)
             except OSError:
