@@ -41,13 +41,13 @@ def main() -> None:
     out = run_pipeline(dfs["transcripts"], dfs["reviews"], salt=4)
     sections.append((
         "Extraction pipeline (scan -> salted repartition -> Arrow extract"
-        " -> native-SQL field rules -> broadcast review join)",
+        " with field rules -> broadcast review join)",
         "ONE Exchange (the explicit salted repartition on (conv_id,"
         " pmod(xxhash64(turn_idx), salt)) — spreads a hot conversation"
-        " over `salt` tasks); ONE MapInArrow (the only Python stage);"
-        " every field rule is a narrow per-row expression (no groupBy"
-        " shuffle: a turn's blocks never leave their row); the review"
-        " override is a BroadcastHashJoin (reviews side is tiny).",
+        " over `salt` tasks); ONE MapInArrow (the only Python stage,"
+        " field rules included: no groupBy shuffle, a turn's blocks"
+        " never leave their row); the review override is a"
+        " BroadcastHashJoin (reviews side is tiny).",
         formatted(out)))
 
     sections.append((

@@ -1,7 +1,10 @@
 """Isolate which stage anti-scales: extract-only vs full pipeline.
 
 Usage: spark-submit --master local[N] BENCH/profile_stage.py \
-           --input PATH --stage extract|rules|write
+           --input PATH --stage read|extract|write
+
+``extract`` is the whole extraction kernel, field rules included
+(``run_pipeline`` without reviews); ``write`` adds the table commit.
 """
 from __future__ import annotations
 
@@ -15,7 +18,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--stage", default="extract",
-                    choices=["read", "extract", "rules", "write"])
+                    choices=["read", "extract", "write"])
     ap.add_argument("--out", default="/tmp/profile_out")
     ap.add_argument("--salt", type=int, default=16)
     args = ap.parse_args()
@@ -26,9 +29,7 @@ def main() -> None:
     sys.path.insert(0, "/root/repo")
     from textract_demo_spark.engine.metrics import partition_metrics
     from textract_demo_spark.engine.pipeline import run_pipeline
-    from textract_demo_spark.engine.rules import model_results
     from textract_demo_spark.engine.tables import IcebergLike, with_part_key
-    from textract_demo_spark.engine.udfs import extract_turns
 
     spark = SparkSession.builder.appName("profile").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -38,9 +39,7 @@ def main() -> None:
     if args.stage == "read":
         n = df.count()
     elif args.stage == "extract":
-        n = extract_turns(df, salt=args.salt).count()
-    elif args.stage == "rules":
-        n = model_results(extract_turns(df, salt=args.salt)).count()
+        n = run_pipeline(df, reviews=None, salt=args.salt).count()
     else:
         import shutil
         shutil.rmtree(args.out, ignore_errors=True)

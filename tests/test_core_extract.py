@@ -192,31 +192,37 @@ def test_date_fallback_only_when_no_kv():
     assert r["Date"]["Confidence"] == ents[0]["score"] * 100
 
 
-def test_fallback_search_text_gate_and_order():
+def test_date_fallback_gate_and_reading_order():
+    """The entity fallback runs only without a KV date candidate, and
+    reading order, not block order, picks the vendor and the search
+    text it scans."""
     from textract_demo_spark.core.blocks import make_block
-    from textract_demo_spark.core.fields import (fallback_date_entities,
-                                                 fallback_search_text)
     lines = [
         make_block(0, "LINE", "Visited 21/06/2018", 0, 18, 80.0,
                    reading_order=2),
-        make_block(1, "LINE", "", 19, 19, 0.0, reading_order=0),
-        make_block(2, "LINE", "Vendor Co", 20, 29, 90.0, reading_order=1),
-        make_block(3, "LINE", "nav", 30, 33, 90.0, reading_order=3,
-                   is_content=False),
+        make_block(1, "LINE", "Vendor Co", 20, 29, 90.0, reading_order=1),
+        make_block(2, "LINE", "Due 01/02/2020", 30, 44, 70.0,
+                   reading_order=0, is_content=False),
     ]
-    # the first sorted line is dropped even when empty (the engine's
-    # slice(content, 2, ...)), unlike postprocess_blocks' vendor scan
-    assert fallback_search_text(lines) == "Vendor Co Visited 21/06/2018"
-    assert [e["text"] for e in fallback_date_entities(lines)] == [
-        "21/06/2018"]
-    key = make_block(4, "KEY_VALUE", "Invoice DATE", 0, 0, 90.0,
+    r = postprocess_blocks(lines)
+    assert r["Vendor"]["Value"] == "Vendor Co"
+    # the search text is "Visited 21/06/2018 ": the non-content line
+    # is never scanned, the vendor line is not part of it
+    assert r["Date"]["Value"] == "21/06/2018"
+    assert r["Date"]["Alternatives"] == []
+    ents = detect_date_entities("Visited 21/06/2018 ")
+    assert r["Date"]["Confidence"] == ents[0]["score"] * 100
+    # a KV date closes the fallback: only the KV candidate remains
+    key = make_block(3, "KEY_VALUE", "Invoice DATE", 0, 0, 90.0,
                      kv_role="KEY", kv_group_id=7)
-    value = make_block(5, "KEY_VALUE", "x", 0, 0, 90.0, kv_role="VALUE",
+    value = make_block(4, "KEY_VALUE", "x", 0, 0, 60.0, kv_role="VALUE",
                        kv_group_id=7)
-    assert fallback_search_text(lines + [key, value]) == ""
-    assert fallback_date_entities(lines + [key, value]) == []
-    # a date key without a value of its group leaves the gate open
-    assert fallback_search_text(lines + [key]) != ""
-    other = dict(value, kv_group_id=8)
-    assert fallback_search_text(lines + [key, other]) != ""
-    assert fallback_search_text(lines[:1]) == ""
+    r = postprocess_blocks(lines + [key, value])
+    assert (r["Date"]["Value"], r["Date"]["Confidence"]) == ("x", 60.0)
+    assert r["Date"]["Alternatives"] == []
+    # a date key without a value of its group leaves the fallback open
+    for extra in ([key], [key, dict(value, kv_group_id=8)]):
+        r = postprocess_blocks(lines + extra)
+        assert r["Date"]["Value"] == "21/06/2018"
+    # a lone vendor line leaves nothing to scan
+    assert postprocess_blocks(lines[1:2])["Date"]["Value"] == ""

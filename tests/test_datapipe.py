@@ -1321,6 +1321,27 @@ def test_salted_join_salt_invariance(spark):
         assert got == expect, f"salt={salt} diverged"
 
 
+def test_salted_join_rejects_dim_preserving_joins(spark):
+    """right/full joins keep unmatched dim rows, which the salt-fold
+    dim replication would emit ``salt`` times: refused. The fact-side
+    join types match the plain join at any salt."""
+    import pyspark.sql.functions as F
+    from textract_demo_spark.datapipe.skew import salted_skew_join
+    fact = spark.range(0, 40).select(F.col("id").alias("uid"),
+                                     (F.col("id") % 3).alias("k"))
+    dim = spark.range(0, 6).select(F.col("id").alias("k"),
+                                   (F.col("id") * 10).alias("v"))
+    for how in ("right", "full", "outer", "right_outer", "cross"):
+        with pytest.raises(ValueError, match="inner/left/semi/anti"):
+            salted_skew_join(fact, dim, on="k", unique_col="uid", salt=4,
+                             how=how)
+    for how in ("inner", "left", "left_semi", "anti"):
+        got = salted_skew_join(fact, dim, on="k", unique_col="uid",
+                               salt=4, how=how)
+        want = fact.join(dim, "k", how)
+        assert sorted(got.collect()) == sorted(want.collect()), how
+
+
 def test_with_global_ids_adversarial_distributions(spark):
     """Global numbering must equal the global rank under skewed,
     clustered, and negative key distributions — boundary placement

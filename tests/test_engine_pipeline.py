@@ -109,60 +109,44 @@ def test_rejected_turns_have_no_blocks(run):
             assert r["needs_review"] is None
 
 
-def _random_blocks(rng) -> list[dict]:
-    """Blocks that stress the content ordering and the date gate: null
-    and tied reading orders, null/empty/non-ASCII texts, non-content
-    lines, KEY/VALUE groups with and without null ids."""
-    from textract_demo_spark.core.blocks import make_block
-    texts = [None, "", "a", "B", "b", "é 01/02/2020", "Z", "Date",
-             "due date", "DATE:", "total"]
-    out = []
-    for i in range(rng.randint(0, 7)):
-        kind = rng.choice(["LINE", "LINE", "LINE", "KEY", "VALUE"])
-        b = make_block(i, "LINE" if kind == "LINE" else "KEY_VALUE",
-                       rng.choice(texts), 0, 0, rng.choice([None, 1.0, 2.0]),
-                       reading_order=rng.choice([None, 0, 1, 1, 2]),
-                       is_content=rng.random() < 0.8)
-        if kind != "LINE":
-            b["kv_role"] = kind
-            b["kv_group_id"] = rng.choice([None, 1, 2])
-        out.append(b)
-    return out
+def test_result_schema_is_pinned(spark):
+    """The committed table's schema: the kernel declares model_result
+    and needs_review with exactly the types and nullability the table
+    has always had (tests/data/result_schema.json)."""
+    import json
+    import os
+
+    dfs = fixtures_to_dfs(spark, n_convs=2)
+    got = json.loads(run_pipeline(dfs["transcripts"], salt=2).schema.json())
+    path = os.path.join(os.path.dirname(__file__), "data",
+                        "result_schema.json")
+    with open(path) as fh:
+        assert got == json.load(fh)
 
 
-def test_fallback_search_text_matches_catalyst_rules(spark):
-    """The kernel's gated search text (core.fields.fallback_search_text)
-    equals what the field rules' Catalyst expressions would feed the
-    detector: array_sort'ed content minus its first line, joined with
-    ' ', and '' whenever a KV date candidate exists."""
-    import random
+def test_model_result_is_the_reference_on_numeric_exotica(spark):
+    """Total values that Python float() and Spark's try_cast disagree
+    on: the engine must give exactly what postprocess_blocks gives
+    ('1_000' is a total, '12d' is not)."""
+    from textract_demo_spark.core.extract import extract_payload
+    from textract_demo_spark.core.fields import (needs_review,
+                                                 postprocess_blocks)
+    from textract_demo_spark.engine import schemas
 
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from textract_demo_spark.core.fields import fallback_search_text
-    from textract_demo_spark.engine import rules, schemas
-
-    rng = random.Random(7)
-    cases = [_random_blocks(rng) for _ in range(400)]
+    payloads = [
+        "<html><body><div class=\"content\"><p>Vendor Co</p>"
+        f"<p>Total: {v}</p><p>Visited on 21/06/2018</p></div></body></html>"
+        for v in ("1_000", "12d")]
     df = spark.createDataFrame(
-        list(enumerate(cases)),
-        T.StructType([T.StructField("i", T.IntegerType()),
-                      T.StructField("blocks",
-                                    T.ArrayType(schemas.BLOCK_SCHEMA))]))
-    got = dict(
-        df.withColumn("content", F.expr(rules._CONTENT))
-        .withColumn("kv_pairs", F.expr(rules._KV_PAIRS))
-        .withColumn("date_kv_cands",
-                    F.expr(rules._kv_candidates("date", False)))
-        .select("i", F.expr("""
-            if(size(date_kv_cands) = 0,
-               array_join(transform(
-                 slice(content, 2, greatest(size(content) - 1, 0)),
-                 x -> x.text), ' '),
-               '')""").alias("search"))
-        .collect())
-    bad = [(i, got[i], fallback_search_text(b))
-           for i, b in enumerate(cases)
-           if got[i] != fallback_search_text(b)]
-    assert not bad, bad[:3]
+        [{"conv_id": "c", "turn_idx": i, "role": "user", "text": p,
+          "tool": None, "ts": None} for i, p in enumerate(payloads)],
+        schemas.TRANSCRIPTS_SCHEMA)
+    got = {r["turn_idx"]: r.asDict(recursive=True)
+           for r in run_pipeline(df, salt=2).collect()}
+    totals = []
+    for i, p in enumerate(payloads):
+        ref = postprocess_blocks(extract_payload(p).blocks)
+        assert _mr_to_golden(got[i]["model_result"]) == ref
+        assert got[i]["needs_review"] == needs_review(ref)
+        totals.append(got[i]["model_result"]["total"]["value"])
+    assert totals == ["1_000", ""]

@@ -56,9 +56,9 @@ def test_projection_prunes_scan_columns(spark):
 
 
 def test_extraction_pipeline_single_exchange(spark):
-    """scan -> salted repartition -> extract -> rules must contain
-    exactly ONE exchange (the explicit salted repartition); the whole
-    rules stage is narrow per-row expressions (SURVEY.md §2.5 note:
+    """scan -> salted repartition -> extract (field rules inside)
+    must contain exactly ONE exchange (the explicit salted
+    repartition): the rules are per-row work (SURVEY.md §2.5 note:
     grouping is unnecessary because a turn's blocks never leave
     their row)."""
     from textract_demo_spark.engine.pipeline import (fixtures_to_dfs,

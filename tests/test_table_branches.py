@@ -83,6 +83,28 @@ def test_branch_abandon_rolls_back(spark, table):
     assert len(table.snapshots()) >= pre_snaps
 
 
+def test_rollback_inside_branch_keeps_branch_writable(spark, table):
+    """Rolling back to a branch commit after main's pin undoes the
+    branch's later commits only: main stays pinned and unchanged, the
+    branch keeps the target's rows and stays the writable tip, and
+    publishing it unpins main."""
+    table.create_branch("b")
+    first = table.write_to_branch("b", _wave(spark, 100, 120))
+    table.write_to_branch("b", _wave(spark, 120, 140))
+    table.rollback(spark, first["snapshot_id"])
+    assert _ids(table.read(spark)) == list(range(100))
+    assert _ids(table.read(spark, branch="b")) == list(range(120))
+    table.write_to_branch("b", _wave(spark, 140, 150))
+    assert _ids(table.read(spark)) == list(range(100))
+    assert _ids(table.read(spark, branch="b")) == (
+        list(range(120)) + list(range(140, 150)))
+    table.fast_forward("b")
+    table.write(_wave(spark, 300, 310, bucket_offset=8))
+    assert _ids(table.read(spark)) == (
+        list(range(120)) + list(range(140, 150)) + list(range(300, 310)))
+    assert table.branches() == {} and table._main_pin() is None
+
+
 def test_single_divergent_branch_enforced(spark, table):
     table.create_branch("audit")
     with pytest.raises(ValueError, match="already exists"):

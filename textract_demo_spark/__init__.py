@@ -7,9 +7,9 @@ Layout:
   core/     pure-Python extraction core (no Spark imports): HTML
             boilerplate strip, PDF layout parse, date entities,
             payload quality sniffing, shared confidence algebra.
-  engine/   Spark pipeline: Arrow-UDF block extraction, native-SQL
-            field rules, review-override join, IcebergLike commit
-            layer, metrics.
+  engine/   Spark pipeline: Arrow-UDF block extraction and field
+            rules, review-override join, IcebergLike commit layer,
+            metrics.
   fixtures/ deterministic synthetic transcript generator + golden
             expected outputs (the correctness oracle; FIXTURES.md).
   datapipe/ large-scale training-data ops: dedup, similarity search,

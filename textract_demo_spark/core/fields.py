@@ -23,10 +23,10 @@ verbatim over our blocks model:
 - Missing field => {Confidence: 0, Value: ""} (main.py:125-138).
 - Composite Confidence = min over the three fields (main.py:140-142).
 
-This module is used by the golden-fixture generator; the distributed
-engine re-expresses the same rules in native Spark SQL
-(``textract_demo_spark.engine.rules``) and is tested for exact
-equality against these goldens. No Spark imports.
+This is the one implementation of the rules: the golden-fixture
+generator builds its expected results with it, and the distributed
+engine's Arrow extraction kernel (``engine.udfs``) calls it on every
+ok turn. No Spark imports.
 """
 
 from __future__ import annotations
@@ -158,48 +158,6 @@ def postprocess_blocks(blocks: list[dict]) -> dict:
     result["Confidence"] = min(
         result[f]["Confidence"] for f in ("Date", "Total", "Vendor"))
     return result
-
-
-def fallback_search_text(blocks: list[dict]) -> str:
-    """The text the engine's date-entity fallback scans for one ok
-    turn, or '' when a KV date candidate exists (the A10 gate).
-
-    Mirrors the Catalyst rules in ``engine.rules`` exactly, which
-    differ from ``postprocess_blocks`` above: content is every LINE
-    block with ``is_content`` sorted like ``array_sort(struct(
-    reading_order, text, conf))`` (nulls first per field), the first
-    sorted line is dropped even when empty, and the rest join with
-    ' ' (null texts skipped, no trailing space). The gate is closed
-    when a KEY block's lowercased text contains 'date' and some VALUE
-    block shares its non-null ``kv_group_id``. ``conf`` is left out of
-    the sort key: lines tied on (reading_order, text) contribute the
-    same text whichever comes first."""
-    date_keys = set()
-    value_groups = set()
-    lines = []
-    for b in blocks:
-        role = b["kv_role"]
-        if role == KEY:
-            t, g = b["text"], b["kv_group_id"]
-            if g is not None and t is not None and "date" in t.lower():
-                date_keys.add(g)
-        elif role == VALUE and b["kv_group_id"] is not None:
-            value_groups.add(b["kv_group_id"])
-        if b["block_type"] == LINE and b["is_content"]:
-            lines.append((b["reading_order"] is not None,
-                          b["reading_order"] or 0,
-                          b["text"] is not None, b["text"] or ""))
-    if date_keys & value_groups or len(lines) < 2:
-        return ""
-    lines.sort()
-    return " ".join(t for _, _, has_text, t in lines[1:] if has_text)
-
-
-def fallback_date_entities(blocks: list[dict]) -> list[dict]:
-    """Date entities of ``fallback_search_text`` — computed inside the
-    extraction kernel so the fallback needs no second Python stage."""
-    text = fallback_search_text(blocks)
-    return detect_date_entities(text) if text else []
 
 
 def needs_review(model_result: dict) -> bool:

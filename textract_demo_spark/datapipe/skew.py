@@ -36,6 +36,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# join types whose output rows all come from fact rows (each fact row
+# meets its dim key at exactly one salt), by normalized Spark name
+_FACT_SIDE_JOINS = {"inner", "left", "leftouter", "semi", "leftsemi",
+                    "anti", "leftanti"}
+
 
 def salted_skew_join(fact: DataFrame, dim: DataFrame, on: str,
                      unique_col: str, salt: int = 8,
@@ -46,9 +51,17 @@ def salted_skew_join(fact: DataFrame, dim: DataFrame, on: str,
     ``dim`` must be unique per ``on`` key (a dimension); the shuffle
     hash-join hint keeps the demonstration honest when a small test
     dim would otherwise broadcast (broadcast joins have no shuffle
-    skew to defuse — if the dim fits in memory, broadcast instead)."""
+    skew to defuse — if the dim fits in memory, broadcast instead).
+
+    ``how`` is inner, left, semi or anti (Spark's aliases of those
+    accepted): every join type that keeps unmatched DIM rows would
+    emit each of them ``salt`` times, once per replica."""
     if salt < 1:
         raise ValueError("salt must be >= 1")
+    if how.lower().replace("_", "") not in _FACT_SIDE_JOINS:
+        raise ValueError(
+            f"salted_skew_join supports inner/left/semi/anti joins,"
+            f" not {how!r}: unmatched dim rows would repeat per salt")
     keyed = (f"pmod(xxhash64(concat('sj-', cast({unique_col}"
              f" AS STRING))), {salt})")
     sf = fact.withColumn("_salt", F.expr(keyed).cast("int"))

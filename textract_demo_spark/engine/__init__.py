@@ -1,2 +1,2 @@
-"""Spark pipeline layer: vectorized extraction UDFs, native-SQL field
-rules, review-override join, IcebergLike table commits, metrics."""
+"""Spark pipeline layer: the vectorized extraction kernel (field rules
+included), review-override join, IcebergLike table commits, metrics."""

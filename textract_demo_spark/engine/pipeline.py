@@ -2,9 +2,9 @@
 
 One Spark job replaces the reference's per-document Step Functions
 orchestration (SURVEY.md §3.1): scan -> salted repartition -> Arrow
-extraction UDF (quality gate and date-entity fallback inside) ->
-native-SQL field rules -> review-override join. Everything between the one repartition exchange
-and the final write is narrow.
+extraction kernel (quality gate, per-kind extractor and the reference
+field rules inside) -> review-override join. Everything between the
+one repartition exchange and the final write is narrow.
 """
 
 from __future__ import annotations
@@ -14,13 +14,10 @@ from pyspark.sql import DataFrame, SparkSession
 from ..fixtures.generator import make_fixtures
 from . import schemas
 from .review import apply_reviews
-from .rules import model_results
 from .udfs import extract_turns
 
-RESULT_COLUMNS = [
-    "conv_id", "turn_idx", "role", "tool", "ts", "status", "kind",
-    "main_text", "spans", "span_domain", "model_result", "needs_review",
-]
+RESULT_COLUMNS = [c for c in schemas.EXTRACTED_SCHEMA.names
+                  if c != "blocks"]
 
 
 def fixtures_to_dfs(spark: SparkSession, n_convs: int = 50,
@@ -49,8 +46,7 @@ def run_pipeline(transcripts: DataFrame, reviews: DataFrame | None = None,
     ``ingest_reviews`` first — non-.json sources and token-less rows
     dropped, answer-less rows marking their turns ``review_failed``
     (P10/P11 + the ReviewFailed path)."""
-    extracted = extract_turns(transcripts, salt=salt, partitions=partitions)
-    results = model_results(extracted).select(*RESULT_COLUMNS, "blocks")
+    results = extract_turns(transcripts, salt=salt, partitions=partitions)
     if raw_reviews is not None:
         from .review import ingest_reviews
         valid, failed = ingest_reviews(raw_reviews)

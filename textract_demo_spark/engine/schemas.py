@@ -47,17 +47,43 @@ SPAN_SCHEMA = T.StructType([
     T.StructField("end", T.LongType(), False),
 ])
 
-# Date entities of the gated fallback detector, computed by the
-# extraction kernel (empty unless status is ok and no KV date exists).
-ENTITY_SCHEMA = T.ArrayType(T.StructType([
-    T.StructField("text", T.StringType(), False),
-    T.StructField("score", T.DoubleType(), False),
-    T.StructField("start", T.LongType(), False),
-]))
+# Alternative candidates of one field: the tail of its ranking.
+_ALTERNATIVE = T.StructType([
+    T.StructField("confidence", T.DoubleType(), True),
+    T.StructField("value", T.StringType(), True),
+])
 
-# Output of the extraction UDF: one row per turn, blocks as a nested
-# array (kept nested so the field rules run as higher-order functions
-# with NO shuffle — see engine.rules).
+
+def _field_result(alternatives: T.ArrayType,
+                  alternatives_nullable: bool) -> T.StructType:
+    return T.StructType([
+        T.StructField("confidence", T.DoubleType(), False),
+        T.StructField("value", T.StringType(), False),
+        T.StructField("alternatives", alternatives, alternatives_nullable),
+    ])
+
+
+# The reference field rules' result (core.fields.postprocess_blocks,
+# fn-postprocess/main.py:125-142) with lower-case names: top-1 per
+# field + its alternatives, and the composite (min) confidence. Null
+# for turns whose status is not ok.
+#
+# The nullability flags are the committed table schema's and must not
+# drift; they differ between the ranked fields (date/total) and vendor,
+# which has exactly one candidate and so always an empty tail.
+_RANKED = _field_result(T.ArrayType(_ALTERNATIVE, containsNull=False), True)
+MODEL_RESULT_SCHEMA = T.StructType([
+    T.StructField("date", _RANKED, False),
+    T.StructField("total", _RANKED, False),
+    T.StructField("vendor",
+                  _field_result(T.ArrayType(_ALTERNATIVE), False), False),
+    T.StructField("confidence", T.DoubleType(), False),
+])
+
+# Output of the extraction kernel: one row per turn, blocks as a
+# nested array (a turn's blocks never leave its row, so the field
+# rules run inside the kernel with NO shuffle). ``model_result`` and
+# ``needs_review`` are null unless status is ok.
 EXTRACTED_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType(), False),
     T.StructField("turn_idx", T.IntegerType(), False),
@@ -69,13 +95,9 @@ EXTRACTED_SCHEMA = T.StructType([
     T.StructField("main_text", T.StringType(), True),
     T.StructField("spans", T.ArrayType(SPAN_SCHEMA), True),
     T.StructField("span_domain", T.StringType(), True),
+    T.StructField("model_result", MODEL_RESULT_SCHEMA, True),
+    T.StructField("needs_review", T.BooleanType(), True),
     T.StructField("blocks", T.ArrayType(BLOCK_SCHEMA), True),
-    T.StructField("date_entities", ENTITY_SCHEMA, True),
-])
-
-CANDIDATE_SCHEMA = T.StructType([
-    T.StructField("confidence", T.DoubleType(), False),
-    T.StructField("value", T.StringType(), False),
 ])
 
 REVIEWS_SCHEMA = T.StructType([

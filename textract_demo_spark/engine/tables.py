@@ -1476,7 +1476,9 @@ class IcebergLike:
         ACROSS a physical rewrite (``compact`` /
         ``materialize_deletes``) is refused: those rewrote rows in
         place and cannot be undone. Cost is O(undone work), never
-        O(table). Branch refs whose head is rolled away die, and a
+        O(table). A target after main's pin stays on the branch: the
+        branch moves to the rollback snapshot and main stays pinned.
+        Otherwise branch refs whose head is rolled away die, and a
         target at-or-before main's pin removes the pin (this is how
         ``drop_branch(spark=...)`` abandons a branch)."""
         target = self._snapshot(snapshot_id)
@@ -1522,10 +1524,15 @@ class IcebergLike:
                         if sid > snapshot_id]
         for name in dropped_tags:  # would dangle: their state is gone
             self.drop_tag(name)
-        for name, sid in list(self.branches().items()):
-            if sid > snapshot_id:  # branch head rolled away: ref dies
-                os.remove(self._ref_path(name))
         pin = self._main_pin()
+        moved = []
+        for name, sid in list(self.branches().items()):
+            if pin is not None and pin < snapshot_id <= sid:
+                # the target is inside the branch: the branch keeps
+                # it, at the rollback snapshot (re-pointed below)
+                moved.append(name)
+            elif sid > snapshot_id:  # branch head rolled away: ref dies
+                os.remove(self._ref_path(name))
         if pin is not None and snapshot_id <= pin:
             # main's lineage is the whole history again: a pin left
             # behind would refuse every later main commit with no
@@ -1547,7 +1554,15 @@ class IcebergLike:
             "dropped_tags": dropped_tags,
             **({"schema_json": schema_json} if schema_json else {}),
         }
-        return self._publish_snapshot(snapshot)
+        snapshot = self._publish_snapshot(snapshot)
+        for name in moved:
+            # it holds the target's state and is the newest snapshot,
+            # so the branch stays the writable tip
+            self._write_json_atomic(
+                self._ref_path(name),
+                {"name": name, "snapshot_id": snapshot["snapshot_id"],
+                 "created_at": time.time()})
+        return snapshot
 
     def compact(self, spark: SparkSession,
                 part_keys: list[int] | None = None,

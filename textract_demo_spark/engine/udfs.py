@@ -2,9 +2,11 @@
 
 All Python execution is Arrow-batched — no row-at-a-time Python UDFs
 anywhere (BASELINE.json:15). The ``mapInArrow`` extraction kernel is
-the pipeline's only Python stage: it also computes the gated
-date-entity fallback, so each batch crosses the JVM<->Python boundary
-once and everything downstream is native Catalyst expressions.
+the pipeline's only Python stage: it runs the quality gate, the
+per-kind extractor and the reference field rules
+(``core.fields.postprocess_blocks``) over each turn, so each batch
+crosses the JVM<->Python boundary once and the rules the goldens are
+built from are the rules the job runs.
 """
 
 from __future__ import annotations
@@ -14,74 +16,66 @@ from collections.abc import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
-from ..core.blocks import STATUS_OK
+from ..core.blocks import STATUS_OK, make_block
 from ..core.extract import extract_payload
-from ..core.fields import fallback_date_entities
+from ..core.fields import needs_review, postprocess_blocks
 from . import schemas
 
-# Arrow types mirroring schemas.BLOCK_SCHEMA / SPAN_SCHEMA — built
-# column-flat (StructArray/ListArray.from_arrays) instead of per-row
-# dicts through pandas: the nested conversion is ~8x cheaper, which
-# matters because this is the single hot Python stage at 10^12 turns.
-_SPAN_FIELDS = [pa.field("start", pa.int64(), False),
-                pa.field("end", pa.int64(), False)]
-# schemas.ENTITY_SCHEMA's element
-_ENTITY_FIELDS = [pa.field("text", pa.string(), False),
-                  pa.field("score", pa.float64(), False),
-                  pa.field("start", pa.int64(), False)]
-_BLOCK_FIELDS = [
-    pa.field("block_id", pa.int64(), False),
-    pa.field("page", pa.int32(), False),
-    pa.field("block_type", pa.string(), False),
-    pa.field("text", pa.string()),
-    pa.field("char_start", pa.int64()),
-    pa.field("char_end", pa.int64()),
-    pa.field("conf", pa.float64()),
-    pa.field("x0", pa.float64()),
-    pa.field("y0", pa.float64()),
-    pa.field("x1", pa.float64()),
-    pa.field("y1", pa.float64()),
-    pa.field("reading_order", pa.int32()),
-    pa.field("kv_role", pa.string()),
-    pa.field("kv_group_id", pa.int64()),
-    pa.field("is_content", pa.bool_(), False),
-    pa.field("row_idx", pa.int32()),
-    pa.field("col_idx", pa.int32()),
-    pa.field("selection_status", pa.string()),
-]
-_BLOCK_KEYS = [f.name for f in _BLOCK_FIELDS]
+# Arrow types of the nested result columns, derived from the Spark
+# schemas. spans/blocks are built column-flat (StructArray/ListArray.
+# from_arrays) instead of per-row dicts through pandas: the nested
+# conversion is ~8x cheaper, which matters because this is the single
+# hot Python stage at 10^12 turns.
+_SPAN_FIELDS = list(to_arrow_type(schemas.SPAN_SCHEMA))
+_BLOCK_FIELDS = list(to_arrow_type(schemas.BLOCK_SCHEMA))
+_MODEL_RESULT_TYPE = to_arrow_type(schemas.MODEL_RESULT_SCHEMA)
 
 # The hot loop reads block dicts positionally via .values() — valid
-# because make_block builds its dict in exactly this field order
-# (python dicts preserve insertion order). Guarded here so a schema
-# edit that breaks the correspondence fails at import, not silently.
-from ..core.blocks import make_block as _mb  # noqa: E402
+# because make_block builds its dict in exactly the schema's field
+# order (python dicts preserve insertion order). Guarded here so a
+# schema edit that breaks the correspondence fails at import, not
+# silently.
+assert list(make_block(0, "LINE", "", 0, 0, 0.0).keys()) == \
+    schemas.BLOCK_SCHEMA.names, \
+    "make_block field order must match schemas.BLOCK_SCHEMA"
 
-assert list(_mb(0, "LINE", "", 0, 0, 0.0).keys()) == _BLOCK_KEYS, \
-    "make_block field order must match _BLOCK_FIELDS"
-del _mb
+
+def _field(f: dict) -> dict:
+    return {"confidence": f["Confidence"], "value": f["Value"],
+            "alternatives": [{"confidence": a["Confidence"],
+                              "value": a["Value"]}
+                             for a in f["Alternatives"]]}
+
+
+def _model_result(result: dict) -> dict:
+    """``postprocess_blocks``' result in MODEL_RESULT_SCHEMA's shape."""
+    return {"date": _field(result["Date"]),
+            "total": _field(result["Total"]),
+            "vendor": _field(result["Vendor"]),
+            "confidence": result["Confidence"]}
 
 
 def _extract_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """mapInArrow kernel: (conv_id, turn_idx, role, tool, ts, text)
     -> EXTRACTED_SCHEMA rows. Replaces the reference's per-document
-    Textract Lambda (fn-call-textract/main.py:52-61) with a columnar
-    batch stage. Passthrough columns stay zero-copy Arrow; result
-    columns are built as flat child arrays + offsets.
+    Textract Lambda (fn-call-textract/main.py:52-61) and its
+    post-processing Lambda (fn-postprocess/main.py:34-150) with one
+    columnar batch stage. Passthrough columns stay zero-copy Arrow;
+    spans and blocks are built as flat child arrays + offsets.
 
-    ``date_entities`` is the Comprehend-fallback analog
-    (fn-postprocess/main.py:102-117) over each ok turn's blocks, gated
-    on the absence of a KV date candidate (``core.fields.
-    fallback_search_text``); the field rules only shape-check and rank
-    it."""
+    ``model_result``/``needs_review`` come from the reference field
+    rules over each ok turn's blocks and the Check Confidence routing
+    (StateMachine.asl.json:54-65); they are null for every other
+    status."""
     for batch in batches:
         texts = batch.column("text").to_pylist()
         status, kind, main_text, span_domain = [], [], [], []
         sp_start, sp_end, sp_off = [], [], [0]
-        b_cols: list[list] = [[] for _ in _BLOCK_KEYS]
+        b_cols: list[list] = [[] for _ in _BLOCK_FIELDS]
         b_off = [0]
-        e_text, e_score, e_start, e_off = [], [], [], [0]
+        results, review = [], []
         for text in texts:
             res = extract_payload(text if isinstance(text, str) else "")
             status.append(res.status)
@@ -97,11 +91,12 @@ def _extract_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch
                     col.append(v)
             b_off.append(len(b_cols[0]))
             if res.status == STATUS_OK:
-                for e in fallback_date_entities(res.blocks):
-                    e_text.append(e["text"])
-                    e_score.append(e["score"])
-                    e_start.append(e["start"])
-            e_off.append(len(e_text))
+                mr = postprocess_blocks(res.blocks)
+                results.append(_model_result(mr))
+                review.append(needs_review(mr))
+            else:
+                results.append(None)
+                review.append(None)
 
         spans_arr = pa.ListArray.from_arrays(
             pa.array(sp_off, pa.int32()),
@@ -114,12 +109,6 @@ def _extract_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch
                 [pa.array(vals, f.type)
                  for vals, f in zip(b_cols, _BLOCK_FIELDS)],
                 fields=_BLOCK_FIELDS))
-        entities_arr = pa.ListArray.from_arrays(
-            pa.array(e_off, pa.int32()),
-            pa.StructArray.from_arrays(
-                [pa.array(e_text, pa.string()),
-                 pa.array(e_score, pa.float64()),
-                 pa.array(e_start, pa.int64())], fields=_ENTITY_FIELDS))
         yield pa.RecordBatch.from_arrays(
             [batch.column("conv_id"), batch.column("turn_idx"),
              batch.column("role"), batch.column("tool"),
@@ -129,9 +118,10 @@ def _extract_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch
              pa.array(main_text, pa.string()),
              spans_arr,
              pa.array(span_domain, pa.string()),
-             blocks_arr,
-             entities_arr],
-            names=[f.name for f in schemas.EXTRACTED_SCHEMA.fields])
+             pa.array(results, _MODEL_RESULT_TYPE),
+             pa.array(review, pa.bool_()),
+             blocks_arr],
+            names=schemas.EXTRACTED_SCHEMA.names)
 
 
 def extract_turns(transcripts: DataFrame, salt: int = 16,
@@ -141,8 +131,8 @@ def extract_turns(transcripts: DataFrame, salt: int = 16,
     Explicit salted repartition on (conv_id, salt(turn_idx)) first so
     a single hot conversation (10^6-turn agent transcripts) spreads
     over ``salt`` tasks instead of one straggler (north rule skew
-    handling; SURVEY.md §4.3). The extraction itself is a narrow
-    map — after this exchange the whole extract->rules path is
+    handling; SURVEY.md §4.3). The extraction itself, field rules
+    included, is a narrow map — after this exchange the path is
     shuffle-free.
     """
     df = transcripts.select("conv_id", "turn_idx", "role", "tool",
@@ -201,7 +191,7 @@ def words_table(extracted: DataFrame) -> DataFrame:
 def blocks_table(extracted: DataFrame) -> DataFrame:
     """Exploded, columnar blocks DataFrame (SURVEY.md §1.2) — used for
     checkpointed materialization + metrics; the field rules consume
-    the nested array directly (no shuffle)."""
+    the nested array inside the kernel (no shuffle)."""
     return (
         extracted
         .filter(F.col("status") == STATUS_OK)

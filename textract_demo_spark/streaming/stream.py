@@ -24,21 +24,18 @@ Reference semantics -> streaming primitives (SURVEY.md §2.9):
   property; the IcebergLike manifest layer covers the batch path.
 
 Scale note: the streaming plan is identical to the batch plan after
-the source (same salted repartition, same Arrow extraction stage,
-same narrow field rules), so the 100 TB sizing story carries over;
-state is bounded by the watermark (dedup buffer) only.
+the source (it IS ``run_pipeline``: same salted repartition, same
+Arrow extraction stage with the field rules inside), so the 100 TB
+sizing story carries over; state is bounded by the watermark (dedup
+buffer) only.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..engine import schemas
-from ..engine.review import apply_reviews
-from ..engine.rules import model_results
-from ..engine.udfs import extract_turns
-from ..engine.pipeline import RESULT_COLUMNS
+from ..engine.pipeline import run_pipeline
 
 
 def read_transcripts_stream(spark: SparkSession, path: str,
@@ -59,22 +56,19 @@ def streaming_pipeline(stream: DataFrame,
                        dedup_late: bool = True) -> DataFrame:
     """Transcript stream -> extracted turn results.
 
-    Same stages as the batch ``run_pipeline`` (shared code): salted
-    repartition -> Arrow extraction -> narrow field rules -> optional
-    stream-static review join. Adds the streaming-only late-data
-    guard: watermark + drop-duplicate (conv_id, turn_idx) within the
-    watermark, i.e. re-delivered/stale turn events don't produce
-    duplicate result rows (T2/W4/P13).
+    The batch ``run_pipeline`` itself (salted repartition -> Arrow
+    extraction with the field rules inside -> optional stream-static
+    review join), minus the nested ``blocks``. Adds the
+    streaming-only late-data guard in front: watermark +
+    drop-duplicate (conv_id, turn_idx) within the watermark, i.e.
+    re-delivered/stale turn events don't produce duplicate result
+    rows (T2/W4/P13).
     """
     if dedup_late:
         stream = (stream
                   .withWatermark("ts", watermark)
                   .dropDuplicatesWithinWatermark(["conv_id", "turn_idx"]))
-    extracted = extract_turns(stream, salt=salt)
-    results = model_results(extracted).select(*RESULT_COLUMNS)
-    if reviews is not None:
-        results = apply_reviews(results, reviews)
-    return results
+    return run_pipeline(stream, reviews, salt=salt).drop("blocks")
 
 
 def start_to_parquet(results: DataFrame, out_dir: str,
