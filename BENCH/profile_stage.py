@@ -4,7 +4,9 @@ Usage: spark-submit --master local[N] BENCH/profile_stage.py \
            --input PATH --stage read|extract|write
 
 ``extract`` is the whole extraction kernel, field rules included
-(``run_pipeline`` without reviews); ``write`` adds the table commit.
+(``run_pipeline`` without reviews); ``write`` adds the job's table
+commit (``with_block_stats`` + ``partition_metrics``, as
+``jobs/run_extract.py`` runs it).
 """
 from __future__ import annotations
 
@@ -27,7 +29,8 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     sys.path.insert(0, "/root/repo")
-    from textract_demo_spark.engine.metrics import partition_metrics
+    from textract_demo_spark.engine.metrics import (partition_metrics,
+                                                    with_block_stats)
     from textract_demo_spark.engine.pipeline import run_pipeline
     from textract_demo_spark.engine.tables import IcebergLike, with_part_key
 
@@ -43,7 +46,10 @@ def main() -> None:
     else:
         import shutil
         shutil.rmtree(args.out, ignore_errors=True)
-        results = run_pipeline(df, reviews=None, salt=args.salt)
+        # the job's write: block stats ride the staged write, and
+        # the metrics aggregate reads only those columns
+        results = with_block_stats(
+            run_pipeline(df, reviews=None, salt=args.salt))
         results = with_part_key(results, 64)
         table = IcebergLike(args.out)
         snap = table.write(results, metrics_fn=partition_metrics,

@@ -14,6 +14,10 @@ as plain-text transcript turns.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,106 +62,47 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-# Registration order = driver verification order: the driver's
-# CORRECTNESS pass oracles the FIRST 50 registered queries, so the
-# least-proven entries must register first. Round-5 window, built
-# from the full r01-r04 history:
-# (1) the 16 queries with NO driver row in any round,
-# (2) the queries NEW this round,
-# (3) the streaming/stateful family (hardest to prove any other way;
-#     streaming_cdc_upsert now rides the new atomic merge),
-# (4) the r03-only greens (one driver row, code age two rounds),
-# (5) heavy/new-machinery r04-only greens (iterative graph, search
-#     ranking, PDF multipage, ANN/IVF, packing).
-# Rotated to the tail: everything r02+r03 double-green (field-rule
-# algebra, extraction identities) and r04 greens whose machinery is
-# re-proven in-window by a strictly harder sibling (e.g. c4_line_
-# filter / line_dedup_rewrite by warc_ingest_extract + the substring
-# family; multimodal_media_meta by the two decode queries).
-_PRIORITY = [
-    # -- never driver-verified in r01-r04 (17)
-    "multimodal_frame_features",
-    "dsir_topk", "transcript_tool_bigrams", "transcript_conv_stats",
-    "table_equality_delete", "table_incremental_read",
-    "table_stats_pruned_scan", "table_zorder_scan",
-    "table_rollback_scan", "lm_bigram_surprisal",
-    "group_sample_bottomk", "ann_pq_topk", "streaming_cdc_upsert",
-    "ann_ivfpq_topk", "dq_validate_constraints",
-    "table_changelog_scan", "table_sketch_rollup",
-    # -- new in round 5 (7): atomic MERGE commit, schema evolution,
-    #    theta-sketch set operations, position deletes, hidden
-    #    partitioning (partition-spec transforms), file-level
-    #    skipping from footer stats, bloom-filter point skipping
-    "table_merge_upsert", "table_schema_evolution",
-    "sketch_theta_setops", "table_position_delete",
-    "table_hidden_partitioning", "table_file_skipping",
-    "table_bloom_skipping",
-    # -- new in round 5, second wave (8): branch refs (write-audit-
-    #    publish with a mutable ref), stream-stream interval join,
-    #    gzipped-JSONL ingest, cluster representative selection,
-    #    curriculum ordering, grouping sets, explicit-list pivot,
-    #    trailing RANGE-frame window
-    "table_branch_write", "streaming_interval_join",
-    "jsonl_gz_ingest", "dedup_cluster_representative",
-    "curriculum_order", "metrics_rollup_cube",
-    "events_pivot_by_type", "events_trailing_window",
-    # -- new in round 5, third wave (6): dense global row numbering
-    #    without a global window, metadata-only manifest aggregates,
-    #    salt-replication skew join, VARIANT JSON-path extraction,
-    #    bounded-state in-stream dedup, wide-to-long UNPIVOT
-    "global_row_ids", "table_stats_agg", "skew_salted_join",
-    "events_json_props", "streaming_dedup_watermark",
-    "events_unpivot_metrics", "split_stratified_exact",
-    # -- streaming/stateful family (6)
-    "streaming_extract_availablenow", "streaming_ttl_cache",
-    "streaming_review_wait", "streaming_dedup_incremental",
-    "streaming_sessionize", "streaming_dsir_scoring",
-    # -- r03-only greens (7; dedup_incremental rotated out — its
-    #    machinery is re-proven in-window by streaming_dedup_
-    #    incremental, which drives the same frozen-index probe)
-    "extract_pdf_success", "dedup_simhash_pairs",
-    "dedup_clusters", "dedup_substring_spans", "dedup_substring_stats",
-    "dedup_substring_rewrite", "gopher_quality_rules",
-    # -- heavy/new-machinery r04-only greens (17; entries past
-    #    position 50 fall outside the driver window this round —
-    #    every one is r04-green (hard-signal row exists), and their
-    #    machinery is re-proven in-window by semantic_dedup_
-    #    incremental's IVF path, the packing plan gates,
-    #    lm_bigram_surprisal's tokenizer, and the new cluster-
-    #    representative / curriculum queries over the same dedup and
-    #    percentile kernels)
-    "extract_pdf_multipage", "warc_ingest_extract",
-    "skew_salted_extract", "quality_gate_learned",
-    "multimodal_real_decode", "multimodal_png_decode",
-    "dedup_star_clusters", "search_bm25_topk", "search_hybrid_rrf",
-    "pagerank_topk", "hits_topk", "events_point_in_session",
-    "dsir_importance", "bpe_tokenize", "ann_ivf_topk",
-    "semantic_dedup", "pack_sequences",
-]
+def _priority() -> list[str]:
+    """Registration order = driver verification order: the driver's
+    CORRECTNESS pass oracles the FIRST 50 registered queries, so the
+    least-proven entries register first. Queries with no green row in
+    any CORRECTNESS_r*.json come first, then ascending by the last
+    round with a green row (rows, schema and hash all match, no
+    error); ties keep registration order."""
+    from textract_demo_spark.engine.queries import QUERIES
+    root = os.path.dirname(os.path.abspath(__file__))
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as fh:
+            for name, row in json.load(fh).items():
+                if (isinstance(row, dict) and row.get("rows_match")
+                        and row.get("schema_match")
+                        and row.get("hash_match") and not row.get("err")):
+                    last[name] = max(last.get(name, 0), rnd)
+    return sorted(QUERIES, key=lambda n: last.get(n, 0))
 
 
-def _ordered(mapping: dict) -> dict:
-    missing = [n for n in _PRIORITY if n not in mapping]
-    if missing:
-        raise KeyError(f"_PRIORITY names not registered: {missing}")
-    tail = [n for n in mapping if n not in set(_PRIORITY)]
-    return {n: mapping[n] for n in [*_PRIORITY, *tail]}
+def __getattr__(name: str):
+    if name == "_PRIORITY":  # computed on use: importing reads no file
+        return _priority()
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
     Each callable takes (spark, sf_dir) and returns a DataFrame.
-    Registered lazily from the engine's query module; re-ordered so
-    the driver's 50-query verification window covers the entries
-    with the least driver history (see _PRIORITY).
+    Registered lazily from the engine's query module, in ``_priority``
+    order so the driver's 50-query verification window covers the
+    entries with the least driver history.
     """
     from textract_demo_spark.engine.queries import QUERIES
-    return _ordered(dict(QUERIES))
+    return {n: QUERIES[n] for n in _priority()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL per query (omitted => rows-only check);
     same registration order as queries()."""
     from textract_demo_spark.engine.queries import ORACLES
-    return _ordered(dict(ORACLES))
+    return {n: ORACLES[n] for n in _priority() if n in ORACLES}

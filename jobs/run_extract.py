@@ -15,7 +15,10 @@ turns are filtered out of the input before extraction.
 Output schema note: the committed table includes the per-row stats
 columns (n_blocks_kept, n_blocks_dropped, conf_hist) computed by
 with_block_stats — they are part of the table contract (cheap scalar
-lineage alongside the data). Tables written before these columns
+lineage alongside the data). The manifests' block metrics
+(partition_metrics) are sums of these columns, taken in the commit's
+one staged aggregate with the status counts, the row count and any
+--stat-cols / --zorder-cols bounds. Tables written before these columns
 existed still read consistently: IcebergLike.read applies the schema
 recorded in the snapshot manifest, so older partitions surface the
 missing columns as null instead of depending on which parquet footer

@@ -94,6 +94,25 @@ def test_pdf_spans_point_into_main_text():
         assert res.main_text[start:end] == line
 
 
+def test_pdf_payload_is_base64_decoded_once(monkeypatch):
+    """The quality gate's decode is the extractor's input: one
+    ``b64decode`` per PDF turn, and the same result as before."""
+    import base64
+    rows = [r for r in FIX["transcripts"] if r["tool"] == "pdf_reader"]
+    want = [extract_payload(r["text"]) for r in rows]
+    calls = []
+    decode = base64.b64decode
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return decode(*a, **kw)
+
+    monkeypatch.setattr(base64, "b64decode", spy)
+    got = [extract_payload(r["text"]) for r in rows]
+    assert len(calls) == len(rows) > 0
+    assert got == want
+
+
 def test_boilerplate_is_stripped():
     html = ('<html><head><title>T</title></head><body>'
             '<nav class="nav"><a href="/">Home</a> <a href="/x">Blog</a></nav>'

@@ -1363,14 +1363,32 @@ def test_with_global_ids_adversarial_distributions(spark):
         assert [g for _, g in rows] == list(range(len(rows)))
 
 
+def _exact_split_ref(docs, by="source", id_col="doc_id"):
+    """Full-rank reference for the default 8/1/1 exact split in md5
+    mode: rank by (hash, id) per group, cut at K = cum_w * n div 10."""
+    import pyspark.sql.functions as F
+    from pyspark.sql import Window
+    from textract_demo_spark.datapipe.dedup import hash64
+    h = F.expr(hash64(f"concat('sx1', '-', cast({id_col} AS STRING))",
+                      "md5"))
+    d = docs.withColumn("_h", h)
+    w = (Window.partitionBy(by)
+         .orderBy(F.col("_h").asc(), F.col(id_col).asc()))
+    nn = d.groupBy(by).count().withColumnRenamed("count", "n")
+    return (d.withColumn("rk", F.row_number().over(w)).join(nn, by)
+            .withColumn("split_ref",
+                        F.when(F.col("rk") <= F.expr("8*n div 10"),
+                               "train")
+                        .when(F.col("rk") <= F.expr("9*n div 10"),
+                              "val").otherwise("test")))
+
+
 def test_stratified_exact_split_large_group_sketch_path(spark):
     """A group LARGER than `accuracy` exercises the sketch-banded
     order-statistic path (tiny groups take the whole-group band);
     assignment must equal the full-rank reference row for row, and
     split sizes must hit the integer-exact targets."""
     import pyspark.sql.functions as F
-    from pyspark.sql import Window
-    from textract_demo_spark.datapipe.dedup import hash64
     from textract_demo_spark.datapipe.splits import stratified_exact_split
     docs = (spark.range(0, 3000)
             .select(F.col("id").alias("doc_id"),
@@ -1379,18 +1397,7 @@ def test_stratified_exact_split_large_group_sketch_path(spark):
                    .select(F.col("id").alias("doc_id"),
                            F.lit("tiny").alias("source"))))
     out = stratified_exact_split(docs, hash_mode="md5", accuracy=64)
-    h = F.expr(hash64("concat('sx1', '-', cast(doc_id AS STRING))",
-                      "md5"))
-    d = docs.withColumn("_h", h)
-    w = (Window.partitionBy("source")
-         .orderBy(F.col("_h").asc(), F.col("doc_id").asc()))
-    nn = d.groupBy("source").count().withColumnRenamed("count", "n")
-    ref = (d.withColumn("rk", F.row_number().over(w)).join(nn, "source")
-           .withColumn("split_ref",
-                       F.when(F.col("rk") <= F.expr("8*n div 10"),
-                              "train")
-                       .when(F.col("rk") <= F.expr("9*n div 10"),
-                             "val").otherwise("test")))
+    ref = _exact_split_ref(docs)
     mism = (out.select("doc_id", "split")
             .join(ref.select("doc_id", "split_ref"), "doc_id")
             .filter("split != split_ref").count())
@@ -1401,3 +1408,34 @@ def test_stratified_exact_split_large_group_sketch_path(spark):
     assert sizes[("big", "val")] == 300
     assert sizes[("tiny", "train")] == 32
     assert sizes[("tiny", "val")] == 4
+
+
+def test_stratified_exact_split_keeps_input_types(spark):
+    """An int group column and string ids: the driver-built dims take
+    both types from the input schema, and the assignment still equals
+    the full-rank reference on the sketch path and the tiny path."""
+    import pyspark.sql.functions as F
+    from textract_demo_spark.datapipe.splits import stratified_exact_split
+    docs = spark.range(0, 1200).select(
+        F.concat(F.lit("d"), F.col("id").cast("string")).alias("doc_id"),
+        F.when(F.col("id") < 1000, 3).otherwise(F.col("id") % 2)
+         .cast("int").alias("source"))
+    out = stratified_exact_split(docs, hash_mode="md5", accuracy=64)
+    assert dict(out.dtypes)["source"] == "int"
+    ref = _exact_split_ref(docs)
+    got = {r.doc_id: r.split for r in out.select("doc_id", "split")
+           .collect()}
+    want = {r.doc_id: r.split_ref for r in ref.select(
+        "doc_id", "split_ref").collect()}
+    assert got == want and len(got) == 1200
+
+
+def test_stratified_exact_split_refuses_null_groups(spark):
+    """A null group value cannot be stratified, and the cut-dim join
+    would silently drop its rows: refused."""
+    from textract_demo_spark.datapipe.splits import stratified_exact_split
+    docs = spark.createDataFrame(
+        [(i, None if i % 10 == 0 else "a") for i in range(50)],
+        "doc_id long, source string")
+    with pytest.raises(ValueError, match="null"):
+        stratified_exact_split(docs)

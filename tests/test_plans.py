@@ -1014,6 +1014,30 @@ def test_global_ids_no_single_partition_window(spark):
     assert "Window [row_number" in p and "_gb" in p, p[:3000]
 
 
+def test_global_ids_boundaries_are_a_sketch(spark, monkeypatch):
+    """The bucket-boundary aggregate ``with_global_ids`` runs on the
+    driver is one ``approx_percentile`` GK sketch: an exact
+    ``Percentile`` buffers every value of the unique order column."""
+    import re
+    from textract_demo_spark.datapipe.splits import with_global_ids
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id")
+    frame_cls = type(docs)
+    collect = frame_cls.collect
+    plans = []
+
+    def spy(self):
+        plans.append(
+            self._jdf.queryExecution().optimizedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(frame_cls, "collect", spy)
+    with_global_ids(docs, buckets=8)
+    monkeypatch.undo()
+    assert any("approx_percentile" in p for p in plans), plans
+    exact = [p for p in plans if re.search(r"(?<!approx_)percentile\(", p)]
+    assert not exact, exact[0][:3000]
+
+
 def test_salted_join_spreads_key_and_salt(spark):
     """The salted join must exchange BOTH sides on (key, _salt) —
     that pair appearing in the hashpartitioning is exactly what

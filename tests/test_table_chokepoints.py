@@ -36,6 +36,43 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _race(root, held_op, held, first):
+    """Run ``held`` and ``first``, each on its own table handle over
+    ``root``, in two threads that reach ``_publish_snapshot`` with the
+    same provisional id; the snapshot whose op is ``held_op`` waits
+    until the other one has published. Returns both results."""
+    gate = threading.Barrier(2, timeout=180)
+    published = threading.Event()
+
+    class Gated(IcebergLike):
+        def _publish_snapshot(self, snap, rebase=None):
+            gate.wait()  # both reach publish with the same id
+            if snap.get("op") == held_op:
+                published.wait(180)  # the other one wins the id
+                return super()._publish_snapshot(snap, rebase)
+            try:
+                return super()._publish_snapshot(snap, rebase)
+            finally:
+                published.set()
+
+    out, errs = {}, []
+
+    def go(name, fn):
+        try:
+            out[name] = fn(Gated(root))
+        except Exception as e:  # surface thread failures in asserts
+            errs.append((name, e))
+
+    th = [threading.Thread(target=go, args=("held", held)),
+          threading.Thread(target=go, args=("first", first))]
+    for x in th:
+        x.start()
+    for x in th:
+        x.join()
+    assert not errs, errs
+    return out["held"], out["first"]
+
+
 def test_rollback_to_pin_unpins_main(spark, tmp_path):
     t = IcebergLike(str(tmp_path / "t"))
     t.write(_wave(spark, 0, 100))
@@ -100,40 +137,10 @@ def test_maintenance_op_races_write_through_cas(spark, tmp_path, op):
                                             "doc_id long"), ["doc_id"])
         expect = [i for i in range(100) if i not in (7, 13)]
     provisional = t._next_snapshot_id()
-    gate = threading.Barrier(2, timeout=180)
-    written = threading.Event()
-
-    class Gated(IcebergLike):
-        def _publish_snapshot(self, snap, rebase=None):
-            gate.wait()  # both reach publish with the same id
-            if snap.get("op") == op:
-                written.wait(180)  # the write wins the id
-                return super()._publish_snapshot(snap, rebase)
-            try:
-                return super()._publish_snapshot(snap, rebase)
-            finally:
-                written.set()
-
-    out, errs = {}, []
-
-    def go(name, fn):
-        try:
-            out[name] = fn(Gated(root))
-        except Exception as e:  # surface thread failures in asserts
-            errs.append((name, e))
-
-    th = [threading.Thread(target=go, args=(
-              "maint", lambda g: getattr(g, op)(spark))),
-          threading.Thread(target=go, args=(
-              "write", lambda g: g.write(
-                  _wave(spark, 200, 250, bucket_offset=4),
-                  run_id="w")))]
-    for x in th:
-        x.start()
-    for x in th:
-        x.join()
-    assert not errs, errs
-    maint, write = out["maint"], out["write"]
+    maint, write = _race(
+        root, op, lambda g: getattr(g, op)(spark),
+        lambda g: g.write(_wave(spark, 200, 250, bucket_offset=4),
+                          run_id="w"))
     assert maint["op"] == op
     assert write["snapshot_id"] == provisional
     assert maint["snapshot_id"] == provisional + 1
@@ -149,6 +156,33 @@ def test_maintenance_op_races_write_through_cas(spark, tmp_path, op):
             assert m["data_snapshot_id"] == provisional + 1
             assert set(m["file_seq"].values()) == {provisional + 1}
     assert _ids(t.read(spark)) == expect + list(range(200, 250))
+
+
+def test_materialize_keeps_a_racing_delete(spark, tmp_path):
+    """A ``delete_rows`` that publishes while a materialization is
+    held wins its provisional id; the materialization folded only the
+    older delete, so the newer one must keep applying to the
+    partition the materialization rewrote."""
+    root = str(tmp_path / "t")
+    t = IcebergLike(root)
+    t.write(_wave(spark, 0, 100), run_id="base")
+    t.delete_rows(spark.createDataFrame([(7,)], "doc_id long"),
+                  ["doc_id"])
+    part = (t.read(spark, apply_deletes=False)
+            .filter("doc_id = 7").first()[PART_COL])
+    late = (t.read(spark).filter(F.col(PART_COL) == part)
+            .orderBy("doc_id").first().doc_id)
+    provisional = t._next_snapshot_id()
+    maint, delete = _race(
+        root, "materialize_deletes", lambda g: g.materialize_deletes(spark),
+        lambda g: g.delete_rows(
+            spark.createDataFrame([(late,)], "doc_id long"), ["doc_id"]))
+    assert delete["snapshot_id"] == provisional
+    assert maint["snapshot_id"] == provisional + 1
+    assert part in maint["rewritten_keys"]
+    t = IcebergLike(root)
+    assert _ids(t.read(spark)) == [i for i in range(100)
+                                   if i not in (7, late)]
 
 
 def test_plain_read_is_a_bare_scan(spark, tmp_path):

@@ -9,7 +9,8 @@ import os
 
 import pytest
 
-from textract_demo_spark.engine.metrics import partition_metrics
+from textract_demo_spark.engine.metrics import (partition_metrics,
+                                                with_block_stats)
 from textract_demo_spark.engine.pipeline import fixtures_to_dfs, run_pipeline
 from textract_demo_spark.engine.tables import IcebergLike, with_part_key
 
@@ -21,8 +22,9 @@ def results_df(spark):
     dfs = fixtures_to_dfs(spark, n_convs=30)
     out = run_pipeline(dfs["transcripts"], reviews=None, salt=4)
     return with_part_key(
-        out.select("conv_id", "turn_idx", "status", "main_text",
-                   "needs_review", "blocks"),
+        with_block_stats(
+            out.select("conv_id", "turn_idx", "status", "main_text",
+                       "needs_review", "blocks")),
         N_BUCKETS)
 
 
@@ -87,14 +89,56 @@ def test_manifest_metrics(spark, tmp_path, results_df):
     assert total_rows == results_df.count()
 
 
-def test_block_stats_fast_path_matches_fallback(spark, results_df):
-    """with_block_stats precomputed columns must yield byte-identical
-    manifest metrics to the lambda-over-blocks fallback (the fast path
-    exists purely so the rollup never re-decodes the blocks column)."""
-    from textract_demo_spark.engine.metrics import with_block_stats
-    fast = partition_metrics(with_block_stats(results_df))
-    slow = partition_metrics(results_df)
-    assert fast == slow
+def test_manifest_block_metrics_match_python_recount(spark, tmp_path,
+                                                     results_df):
+    """blocks_kept / blocks_dropped / conf_histogram in each manifest
+    equal a Python recount over the collected ``blocks`` of that
+    partition (kept = is_content; histogram bucket = conf clamped to
+    [0, 99.99] / 10, over kept blocks only)."""
+    t = IcebergLike(str(tmp_path / "recount"))
+    t.write(results_df, metrics_fn=partition_metrics)
+    want: dict[int, dict] = {}
+    for r in results_df.select("part_key", "blocks").collect():
+        w = want.setdefault(r["part_key"], {
+            "blocks_kept": 0, "blocks_dropped": 0,
+            "conf_histogram": [0] * 10})
+        for b in r["blocks"] or []:
+            if b["is_content"]:
+                w["blocks_kept"] += 1
+                w["conf_histogram"][
+                    int(min(max(b["conf"], 0.0), 99.99) / 10)] += 1
+            else:
+                w["blocks_dropped"] += 1
+    assert t.committed_keys() == set(want)
+    assert sum(w["blocks_kept"] for w in want.values()) > 0
+    for k, w in want.items():
+        met = t.manifest(k)["metrics"]
+        assert {c: met[c] for c in w} == w, k
+
+
+def test_write_aggregates_staged_files_once(spark, tmp_path, results_df,
+                                            monkeypatch):
+    """Row metrics, caller metrics and ``stat_cols`` bounds come from
+    ONE groupBy over the staged files, not one job per manifest
+    field."""
+    frame_cls = type(results_df)  # the concrete (classic) DataFrame
+    calls = []
+    group_by = frame_cls.groupBy
+
+    def spy(self, *cols):
+        calls.append(cols)
+        return group_by(self, *cols)
+
+    monkeypatch.setattr(frame_cls, "groupBy", spy)
+    t = IcebergLike(str(tmp_path / "once"))
+    t.write(results_df, metrics_fn=partition_metrics,
+            stat_cols=["turn_idx", "n_blocks_kept"])
+    monkeypatch.undo()
+    assert len(calls) == 1, calls
+    m = t.manifest(min(t.committed_keys()))
+    assert set(m["col_stats"]) == {"turn_idx", "n_blocks_kept"}
+    assert m["metrics"]["rows"] == m["metrics"]["ok"] + m["metrics"][
+        "failed"]
 
 
 def test_snapshot_time_travel(spark, tmp_path, results_df):

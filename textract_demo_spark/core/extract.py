@@ -16,7 +16,7 @@ from .blocks import (LINE, PAGE, STATUS_MALFORMED, STATUS_MODEL_ERROR,
 from .confidence import line_confidence
 from .pdf_extract import PdfParseError, extract_pdf
 from .html_extract import extract_html
-from .quality import classify_quality, decode_pdf_payload, is_acceptable
+from .quality import classify_and_decode, is_acceptable
 
 
 def extract_plain(payload: str) -> ExtractResult:
@@ -48,15 +48,14 @@ def extract_payload(payload: str) -> ExtractResult:
     gate accepted is ``model_error`` (ModelError) — so a PDF that
     decodes but dies mid-parse is distinguishable from a rejected
     upload."""
-    q = classify_quality(payload)
+    q, pdf_bytes = classify_and_decode(payload)
     if not is_acceptable(q["label"], q["conf"]):
         if q["reason"] == "malformed_b64":
             return _failed(STATUS_MALFORMED)
         return _failed(STATUS_REJECTED)
     try:
         if q["kind"] == "pdf":
-            data = decode_pdf_payload(payload)
-            return extract_pdf(data)
+            return extract_pdf(pdf_bytes)
         if q["kind"] == "html":
             return extract_html(payload)
         return extract_plain(payload)

@@ -51,9 +51,16 @@ def classify_quality(text: str) -> dict:
     Returns ``{"label": "good"|"bad", "conf": float 0-100,
     "kind": "html"|"pdf"|"plain"|"bad", "reason": str}``.
     """
+    return classify_and_decode(text)[0]
+
+
+def classify_and_decode(text: str) -> tuple[dict, bytes | None]:
+    """``classify_quality`` plus the decoded PDF bytes of an accepted
+    PDF payload (None for every other kind), so the extractor reuses
+    the one base64 decode the gate already paid for."""
     if text is None or not text.strip():
         return {"label": "bad", "conf": _label_conf(text or "", "bad"),
-                "kind": "bad", "reason": "empty"}
+                "kind": "bad", "reason": "empty"}, None
     if text.startswith(PDF_PREFIX):
         data = decode_pdf_payload(text)
         if data is None:
@@ -63,12 +70,12 @@ def classify_quality(text: str) -> dict:
             # 22-25). extract_payload maps this reason to status
             # 'malformed'.
             return {"label": "bad", "conf": _label_conf(text, "bad"),
-                    "kind": "bad", "reason": "malformed_b64"}
+                    "kind": "bad", "reason": "malformed_b64"}, None
         if not data.startswith(b"%PDF") or b"endobj" not in data:
             return {"label": "bad", "conf": _label_conf(text, "bad"),
-                    "kind": "bad", "reason": "not_pdf"}
+                    "kind": "bad", "reason": "not_pdf"}, None
         return {"label": "good", "conf": _label_conf(text, "good"),
-                "kind": "pdf", "reason": ""}
+                "kind": "pdf", "reason": ""}, data
     stripped = text.strip()
     looks_html = "<" in stripped and ">" in stripped and "</" in text
     lower = stripped.lower()
@@ -79,20 +86,20 @@ def classify_quality(text: str) -> dict:
         last_gt = stripped.rfind(">")
         if last_lt > last_gt:
             return {"label": "bad", "conf": _label_conf(text, "bad"),
-                    "kind": "bad", "reason": "truncated_html"}
+                    "kind": "bad", "reason": "truncated_html"}, None
         if "</" not in stripped:
             return {"label": "bad", "conf": _label_conf(text, "bad"),
-                    "kind": "bad", "reason": "truncated_html"}
+                    "kind": "bad", "reason": "truncated_html"}, None
         return {"label": "good", "conf": _label_conf(text, "good"),
-                "kind": "html", "reason": ""}
+                "kind": "html", "reason": ""}, None
     # binary noise: too many non-printable characters
     n = len(stripped)
     nonprint = sum(1 for c in stripped if not (c.isprintable() or c in "\n\r\t"))
     if n > 0 and nonprint / n > 0.15:
         return {"label": "bad", "conf": _label_conf(text, "bad"),
-                "kind": "bad", "reason": "binary"}
+                "kind": "bad", "reason": "binary"}, None
     return {"label": "good", "conf": _label_conf(text, "good"),
-            "kind": "plain", "reason": ""}
+            "kind": "plain", "reason": ""}, None
 
 
 def is_acceptable(label: str, conf: float) -> bool:

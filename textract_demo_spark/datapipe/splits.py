@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .dedup import hash64
 
@@ -338,11 +339,12 @@ def with_global_ids(df: DataFrame, order_col: str = "doc_id",
 
     Scale shape — rank locally, offset globally:
 
-    1. bucket boundaries = exact percentiles of ``order_col`` (ONE
-       tiny aggregate producing ``buckets-1`` doubles); assignment is
-       then a narrow sum-of-compares, so equal plans on any
-       partitioning produce identical buckets (no RangePartitioner
-       sampling nondeterminism);
+    1. bucket boundaries = ``buckets-1`` quantiles of ``order_col``
+       from ONE ``approx_percentile`` GK sketch (bounded memory — an
+       exact ``percentile`` would buffer every value of the unique
+       column); assignment is then a narrow sum-of-compares against
+       those driver-side literals, so every row of one call sees the
+       same buckets (no RangePartitioner sampling);
     2. per-bucket counts = one ``buckets``-row aggregate collected to
        the driver (driver-small by construction) and prefix-summed
        into offsets — broadcast back as a dim join;
@@ -363,17 +365,14 @@ def with_global_ids(df: DataFrame, order_col: str = "doc_id",
         raise ValueError("buckets must be >= 1")
     from pyspark.sql import Window
     qs = [i / buckets for i in range(1, buckets)]
+    bexpr = F.lit(0).cast("long")
     if qs:
-        row = df.agg(*[
-            F.expr(f"percentile({order_col}, {q})").alias(f"_q{i}")
-            for i, q in enumerate(qs)]).collect()[0]
-        bounds = [row[f"_q{i}"] for i in range(len(qs))]
-        bexpr = F.lit(0).cast("long")
-        for b in bounds:
+        bounds = df.agg(F.expr(
+            f"approx_percentile({order_col},"
+            f" array({','.join(map(str, qs))}))")).first()[0]
+        for b in bounds or []:
             bexpr = bexpr + F.when(F.col(order_col) > F.lit(b),
                                    1).otherwise(0)
-    else:
-        bexpr = F.lit(0).cast("long")
     bucketed = df.withColumn("_gb", bexpr.cast("long"))
     counts = {r["_gb"]: r["cnt"] for r in
               bucketed.groupBy("_gb")
@@ -432,7 +431,10 @@ def stratified_exact_split(docs: DataFrame,
     Rows order by (hash, id), so the assignment is deterministic,
     engine-replayable in md5 mode, and independent of partitioning.
     Raises if the sketch guarantee is ever violated (no silent
-    misassignment). Output: input columns + ``split``.
+    misassignment), and ``ValueError`` on a null ``by`` value (a null
+    group cannot be stratified, and a join would drop its rows). The
+    driver-built dims take ``by``'s and ``id_col``'s types from
+    ``docs.schema``. Output: input columns + ``split``.
     """
     names = [n for n, _ in weights]
     wvals = [w for _, w in weights]
@@ -467,6 +469,10 @@ def stratified_exact_split(docs: DataFrame,
     m = len(cums)
     binfo = {}  # group -> (n_g, [K_i], [lo_i], [hi_i])
     for r in stats:
+        if r[by] is None:
+            raise ValueError(
+                f"stratified_exact_split: {r['_n']} rows have a null"
+                f" {by!r}; fill or filter them first")
         n_g = r["_n"]
         ks = [cw * n_g // total_w for cw in cum_w]
         if n_g < accuracy:
@@ -487,10 +493,18 @@ def stratified_exact_split(docs: DataFrame,
     # The band frame is built with per-group literal bounds (the dim
     # is G x m, broadcast by construction).
     spark = docs.sparkSession
-    bounds_rows = [(g, i, binfo[g][1][i], binfo[g][2][i], binfo[g][3][i])
-                   for g in binfo for i in range(m)]
-    bdim = spark.createDataFrame(
-        bounds_rows, f"{by} string, _bi int, _k long, _lo long, _hi long")
+
+    def dim(rows, **fields):
+        """Driver-built dim keyed by ``by`` in its input type."""
+        return spark.createDataFrame(rows, T.StructType(
+            [T.StructField(by, docs.schema[by].dataType),
+             T.StructField("_bi", T.IntegerType())]
+            + [T.StructField(n, t) for n, t in fields.items()]))
+
+    long_t = T.LongType()
+    bdim = dim([(g, i, binfo[g][1][i], binfo[g][2][i], binfo[g][3][i])
+                for g in binfo for i in range(m)],
+               _k=long_t, _lo=long_t, _hi=long_t)
     from pyspark.sql import Window
     banded = (d.select(by, id_col, "_h")
               .join(F.broadcast(bdim), by)
@@ -507,10 +521,9 @@ def stratified_exact_split(docs: DataFrame,
          .orderBy(F.col("_h").asc(), F.col(id_col).asc()))
     ranked = band.withColumn("_rk", F.row_number().over(w))
     # boundary row: global rank == K  <=>  band rank == K - below
-    need = spark.createDataFrame(
-        [(g, i, binfo[g][1][i] - nb[(g, i)]) for g in binfo
-         for i in range(m) if 0 < binfo[g][1][i] < binfo[g][0]],
-        f"{by} string, _bi int, _need long")
+    need = dim([(g, i, binfo[g][1][i] - nb[(g, i)]) for g in binfo
+                for i in range(m) if 0 < binfo[g][1][i] < binfo[g][0]],
+               _need=long_t)
     cut_rows = (ranked.join(F.broadcast(need), [by, "_bi"])
                 .filter(F.col("_rk") == F.col("_need"))
                 .select(by, "_bi", "_h", id_col).collect())
@@ -524,28 +537,28 @@ def stratified_exact_split(docs: DataFrame,
                     f" boundary {i} — raise accuracy")
 
     # pass 4 (lazy): narrow assignment against the broadcast cut dim.
-    # K == 0 -> nothing at-or-below (sentinel below all); K == n_g ->
-    # everything at-or-below (sentinel above all).
+    # K == 0 -> nothing at-or-below (cut below every hash, no id);
+    # K == n_g -> everything at-or-below (null cut).
     cut_dim_rows = []
     for g in binfo:
         n_g, ks = binfo[g][0], binfo[g][1]
         for i in range(m):
             if ks[i] == 0:
-                ch, ci = LOW, LOW
+                ch, ci = LOW, None
             elif ks[i] == n_g:
-                ch, ci = HIGH, HIGH
+                ch, ci = None, None
             else:
                 ch, ci = cuts[(g, i)]
             cut_dim_rows.append((g, i, ch, ci))
-    cdim = spark.createDataFrame(
-        cut_dim_rows, f"{by} string, _bi int, _ch long, _ci long")
+    cdim = dim(cut_dim_rows, _ch=long_t,
+               _ci=docs.schema[id_col].dataType)
     wide = cdim.groupBy(by).pivot("_bi", list(range(m))).agg(
         F.first("_ch").alias("ch"), F.first("_ci").alias("ci"))
     out = d.join(F.broadcast(wide), by)
     expr = F.lit(names[-1])
     for i in range(m - 1, -1, -1):
         ch, ci = F.col(f"{i}_ch"), F.col(f"{i}_ci")
-        at_or_below = (F.col("_h") < ch) | (
+        at_or_below = ch.isNull() | (F.col("_h") < ch) | (
             (F.col("_h") == ch) & (F.col(id_col) <= ci))
         expr = F.when(at_or_below, names[i]).otherwise(expr)
     drop = ["_h"] + [c for c in wide.columns if c != by]

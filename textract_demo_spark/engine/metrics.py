@@ -3,25 +3,23 @@ north rule: "per-partition lineage + metrics (blocks kept/dropped,
 confidence histograms)"; the reference analog is the notification/
 observability path, SURVEY.md §3.3).
 
-Two-phase design for scale: the narrow per-row statistics
+One derivation, two halves: the narrow per-row statistics
 (``with_block_stats``) are computed in the SAME stage that writes the
 staged data — the block arrays are already in memory there, so the
-lambda costs nothing extra — and land as four small scalar/array
-columns. The per-partition rollup (``partition_metrics``) then
-aggregates only those columns; Parquet column pruning means the
-second pass never re-decodes the fat ``blocks`` structs (measured:
-the lambda-over-blocks rollup forced a full-blocks ReadSchema —
-nested pruning cannot see through higher-order-function lambdas).
+lambda costs nothing extra — and land as small scalar/array columns.
+``partition_metrics`` then names the per-partition sums of only those
+columns; ``IcebergLike.write`` evaluates them in the one staged
+aggregate that also counts rows and takes the ``stat_cols`` bounds.
+Parquet column pruning means that aggregate never re-decodes the fat
+``blocks`` structs (a lambda over ``blocks`` in the rollup would force
+a full-blocks ReadSchema — nested pruning cannot see through
+higher-order-function lambdas).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from .tables import PART_COL
-
-STATS_COLS = ("n_blocks_kept", "n_blocks_dropped", "conf_hist")
 
 
 def with_block_stats(results: DataFrame) -> DataFrame:
@@ -40,65 +38,34 @@ def with_block_stats(results: DataFrame) -> DataFrame:
             )))
 
 
-def partition_metrics(staged: DataFrame) -> dict[int, dict]:
-    """Per-partition manifest metrics from the staged output.
+def partition_metrics(staged: DataFrame) -> list[Column]:
+    """Per-partition manifest metrics over a ``with_block_stats``
+    frame, as named aggregate Columns for ``IcebergLike.write``'s
+    ``metrics_fn`` slot (the commit adds ``rows`` itself).
 
-    Fast path: aggregate the precomputed ``with_block_stats`` columns
-    (scalar-only ReadSchema). Fallback: derive the same numbers from
-    the ``blocks`` arrays directly (full re-decode — used only when
-    the caller didn't precompute).
-
-    Returns {part_key: {rows, ok, rejected, malformed, model_error,
-    review_failed, failed, needs_review, blocks_kept, blocks_dropped,
-    conf_histogram}} — one count per typed error status (SURVEY.md
-    §1.4) so the lineage manifest distinguishes a quality reject from
-    a broken envelope from an extractor failure; ``failed`` is the
-    total of all non-ok statuses.
+    Manifest keys: ok, rejected, malformed, model_error,
+    review_failed, failed, needs_review (when the frame carries it),
+    blocks_kept, blocks_dropped, conf_histogram — one count per typed
+    error status (SURVEY.md §1.4) so the lineage manifest
+    distinguishes a quality reject from a broken envelope from an
+    extractor failure; ``failed`` is the total of all non-ok
+    statuses.
     """
-    cols = set(staged.columns)
-    aggs = [
-        F.count("*").alias("rows"),
-        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
-        F.sum(F.when(F.col("status") != "ok", 1).otherwise(0))
-         .alias("failed"),
-    ]
+    def n_where(cond) -> Column:
+        return F.sum(F.when(cond, 1).otherwise(0))
+
+    status = F.col("status")
+    aggs = [n_where(status == "ok").alias("ok"),
+            n_where(status != "ok").alias("failed")]
+    aggs += [n_where(status == s).alias(s)
+             for s in ("rejected", "malformed", "model_error",
+                       "review_failed")]
+    if "needs_review" in staged.columns:
+        aggs.append(n_where(F.col("needs_review")).alias("needs_review"))
     aggs += [
-        F.sum(F.when(F.col("status") == s, 1).otherwise(0)).alias(s)
-        for s in ("rejected", "malformed", "model_error", "review_failed")
+        F.sum("n_blocks_kept").alias("blocks_kept"),
+        F.sum("n_blocks_dropped").alias("blocks_dropped"),
+        F.array(*[F.coalesce(F.sum(F.col("conf_hist")[i]), F.lit(0))
+                  for i in range(10)]).alias("conf_histogram"),
     ]
-    if "needs_review" in cols:
-        aggs.append(F.sum(F.when(F.col("needs_review"), 1).otherwise(0))
-                    .alias("needs_review"))
-    has_stats = all(c in cols for c in STATS_COLS)
-    has_blocks = "blocks" in cols
-    if has_stats:
-        aggs += [
-            F.sum("n_blocks_kept").alias("blocks_kept"),
-            F.sum("n_blocks_dropped").alias("blocks_dropped"),
-        ]
-        aggs += [F.sum(F.expr(f"conf_hist[{i}]")).alias(f"hist_{i}")
-                 for i in range(10)]
-    elif has_blocks:
-        aggs += [
-            F.sum(F.expr("size(filter(blocks, b -> b.is_content))"))
-             .alias("blocks_kept"),
-            F.sum(F.expr("size(filter(blocks, b -> NOT b.is_content))"))
-             .alias("blocks_dropped"),
-        ]
-        aggs += [
-            F.sum(F.expr(
-                "size(filter(blocks, b -> b.is_content AND "
-                f"int(least(greatest(b.conf, 0.0d), 99.99d) / 10) = {i}))"
-            )).alias(f"hist_{i}")
-            for i in range(10)
-        ]
-    rows = staged.groupBy(PART_COL).agg(*aggs).collect()
-    out: dict[int, dict] = {}
-    for r in rows:
-        d = r.asDict()
-        k = d.pop(PART_COL)
-        hist = [d.pop(f"hist_{i}", 0) for i in range(10)]
-        if has_stats or has_blocks:
-            d["conf_histogram"] = [int(h or 0) for h in hist]
-        out[int(k)] = d
-    return out
+    return aggs

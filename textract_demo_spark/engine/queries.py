@@ -6525,8 +6525,8 @@ def global_row_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``0..n-1`` in doc_id order — the "number every document" step
     behind shard-offset manifests and sample indexes. The oracle is
     the naive global window; the implementation is the scale form
-    (rank locally, offset globally): exact-percentile bucket bounds
-    (one tiny aggregate), per-bucket counts prefix-summed driver-side
+    (rank locally, offset globally): bucket bounds from one
+    approx_percentile sketch, per-bucket counts prefix-summed driver-side
     and broadcast back, then a row_number partitioned BY BUCKET — no
     single-partition window anywhere, sorts parallelize across
     buckets, and the ids equal the global rank regardless of where

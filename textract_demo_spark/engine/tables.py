@@ -164,23 +164,22 @@ ORPHAN_SWEEP_MIN_AGE_SEC = 300.0
 _STAT_SAFE = (int, float, str)  # JSON-round-trippable, order-preserved
 
 
-def _footer_stats(path: str, cols: list[str]) -> dict:
-    """Per-file min/max for ``cols`` read from the parquet FOOTER —
-    the Iceberg data-file stats analog, collected once at commit time
-    (a cluster deployment would have write tasks report these; here
-    the committer reads footers, which costs O(files) metadata reads
-    and zero data). A column is omitted (=> pruning keeps the file)
-    unless every row group carries usable min/max of a JSON-safe,
-    order-preserving scalar type: int/float/str. str is safe because
-    parquet truncates string bounds conservatively (min down, max up)
-    and UTF-8 byte order equals code-point order, which is Python's
-    ``<``. Timestamps/bytes/bools are skipped — partition-level
-    col_stats still cover them."""
-    try:
+def _footer_stats(md, cols: list[str]) -> dict:
+    """Per-file min/max for ``cols`` read from the parquet FOOTER
+    ``md`` (a file's metadata, or its path) — the Iceberg data-file
+    stats analog, collected once at commit time (a cluster deployment
+    would have write tasks report these; here the committer reads
+    footers, which costs O(files) metadata reads and zero data). A
+    column is omitted (=> pruning keeps the file) unless every row
+    group carries usable min/max of a JSON-safe, order-preserving
+    scalar type: int/float/str. str is safe because parquet truncates
+    string bounds conservatively (min down, max up) and UTF-8 byte
+    order equals code-point order, which is Python's ``<``.
+    Timestamps/bytes/bools are skipped — partition-level col_stats
+    still cover them."""
+    if isinstance(md, str):
         import pyarrow.parquet as pq
-        md = pq.ParquetFile(path).metadata
-    except Exception:
-        return {}
+        md = pq.read_metadata(md)
     idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
     out = {}
     for c in cols:
@@ -207,16 +206,34 @@ def _footer_stats(path: str, cols: list[str]) -> dict:
     return out
 
 
-def _file_stats_for(dirpath: str, names: list[str],
-                    cols: list[str]) -> dict:
-    """``{file name: footer stats}`` for the named files, dropping
-    files that yielded nothing (absent entry == keep on read)."""
-    out = {}
+def _tracked_cols(per_file: dict | None) -> list[str]:
+    """Columns a manifest's ``file_stats`` / ``file_blooms`` map
+    covers (the union over its files)."""
+    return sorted({c for v in (per_file or {}).values() for c in v})
+
+
+def _file_meta(dirpath: str, names: list[str], stat_cols: list[str],
+               bloom_cols: list[str]) -> tuple[dict, dict]:
+    """``({file name: footer stats}, {file name: blooms})`` for the
+    named files over ``stat_cols`` / ``bloom_cols``, opening each file
+    once; files that yield nothing are left out (absent entry == keep
+    on read)."""
+    stats, blooms = {}, {}
+    if not (stat_cols or bloom_cols):
+        return stats, blooms
+    import pyarrow.parquet as pq
     for f in names:
-        st = _footer_stats(os.path.join(dirpath, f), cols)
+        try:
+            pf = pq.ParquetFile(os.path.join(dirpath, f))
+        except Exception:
+            continue
+        st = _footer_stats(pf.metadata, stat_cols)
+        b = _file_bloom(pf, bloom_cols)
         if st:
-            out[f] = st
-    return out
+            stats[f] = st
+        if b:
+            blooms[f] = b
+    return stats, blooms
 
 
 BLOOM_MAX_BITS = 1 << 13  # 1 KiB/file-column inline cap (see below)
@@ -249,22 +266,21 @@ def _bloom_positions(value, m: int, k: int) -> list[int]:
     return [(h1 + i * h2) % m for i in range(k)]
 
 
-def _file_bloom(path: str, cols: list[str]) -> dict:
-    """Per-file bloom filters over the DISTINCT values of ``cols`` —
-    the Iceberg puffin-blob analog for point-lookup file skipping,
-    built once at commit time from a column-only read (footer stats
-    answer range predicates; blooms answer ``col = v`` inside files
-    whose [min, max] straddles v, the interleaved-key case range
-    stats cannot touch). A column is recorded only when every value
-    is int or str (bool/float/bytes/timestamp excluded: no canonical
-    cross-type string form); absent entry == keep on read."""
+def _file_bloom(pf, cols: list[str]) -> dict:
+    """Per-file bloom filters over the DISTINCT values of ``cols`` in
+    the open parquet file ``pf`` — the Iceberg puffin-blob analog for
+    point-lookup file skipping, built once at commit time from a
+    column-only read (footer stats answer range predicates; blooms
+    answer ``col = v`` inside files whose [min, max] straddles v, the
+    interleaved-key case range stats cannot touch). A column is
+    recorded only when every value is int or str (bool/float/bytes/
+    timestamp excluded: no canonical cross-type string form); absent
+    entry == keep on read."""
+    have = [c for c in cols if c in pf.schema_arrow.names]
+    if not have:
+        return {}
     try:
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-        pf = pq.ParquetFile(path)
-        have = [c for c in cols if c in pf.schema_arrow.names]
-        if not have:
-            return {}
         tbl = pf.read(columns=have)
     except Exception:
         return {}
@@ -283,18 +299,6 @@ def _file_bloom(path: str, cols: list[str]) -> dict:
             for pos in _bloom_positions(v, m_bits, kh):
                 bits[pos >> 3] |= 1 << (pos & 7)
         out[c] = {"m": m_bits, "k": kh, "hex": bytes(bits).hex()}
-    return out
-
-
-def _file_blooms_for(dirpath: str, names: list[str],
-                     cols: list[str]) -> dict:
-    """``{file name: blooms}`` for the named files, dropping files
-    that yielded nothing (absent entry == keep on read)."""
-    out = {}
-    for f in names:
-        b = _file_bloom(os.path.join(dirpath, f), cols)
-        if b:
-            out[f] = b
     return out
 
 
@@ -638,8 +642,9 @@ class IcebergLike:
         between promotions loses nothing: committed partitions stay,
         staging is recomputed idempotently on the next run, and
         already-committed partitions are filtered out BEFORE the job
-        (the resume anti-join). ``fail_after`` injects a crash after
-        N promotions (used by the kill/resume test).
+        (the resume anti-join). ``fail_after=N`` injects a crash: the
+        first N staged keys in sorted order are promoted, then the
+        write raises (used by the kill/resume test).
 
         ``rebalance`` inserts an AQE REBALANCE(part_key) exchange
         before the partitionBy write. Without it every upstream task
@@ -652,10 +657,13 @@ class IcebergLike:
         AQE splits oversized buckets so a hot bucket doesn't become a
         straggler.
 
-        ``stat_cols`` names columns whose per-partition min/max go
-        into the manifests (the Iceberg data-file stats analog) for
-        ``read_where`` scan pruning — computed in the SAME staged
-        read as the row metrics, so stats cost no extra pass.
+        ``metrics_fn(staged)`` returns named aggregate Columns (e.g.
+        ``metrics.partition_metrics``) and ``stat_cols`` names columns
+        whose per-partition min/max go into the manifests (the Iceberg
+        data-file stats analog) for ``read_where`` scan pruning; the
+        row count, both of those and the bounds are ONE
+        ``groupBy(part_key)`` aggregate over the staged files
+        (``_partition_aggregates``), so stats cost no extra pass.
 
         ``bloom_cols`` names int/str columns that additionally get a
         per-FILE bloom filter over their distinct values (the Iceberg
@@ -733,27 +741,14 @@ class IcebergLike:
         staged_keys = sorted(
             int(d.split("=", 1)[1]) for d in os.listdir(staging)
             if d.startswith(f"{PART_COL}="))
-        metrics_by_key: dict[int, dict] = {}
-        stats_by_key: dict[int, dict] = {}
+        aggregates: dict[int, tuple[dict, dict]] = {}
         t_metrics0 = time.time()
         if staged_keys:
             # the schema just written: no footer-inference job
             staged = spark.read.schema(df.schema).parquet(staging)
-            if metrics_fn is not None:
-                metrics_by_key = metrics_fn(staged)
-            else:
-                rows = (staged.groupBy(PART_COL).count().collect())
-                metrics_by_key = {r[PART_COL]: {"rows": r["count"]}
-                                  for r in rows}
-            if stat_cols:
-                aggs = []
-                for c in stat_cols:
-                    aggs += [F.min(c).alias(f"_mn_{c}"),
-                             F.max(c).alias(f"_mx_{c}")]
-                for r in staged.groupBy(PART_COL).agg(*aggs).collect():
-                    stats_by_key[r[PART_COL]] = {
-                        c: {"min": r[f"_mn_{c}"], "max": r[f"_mx_{c}"]}
-                        for c in stat_cols}
+            aggregates = self._partition_aggregates(
+                staged, metrics_fn(staged) if metrics_fn else [],
+                stat_cols or [])
         t_metrics = time.time() - t_metrics0
 
         t_promote0 = time.time()
@@ -767,17 +762,18 @@ class IcebergLike:
             idempotent staging on the next run."""
             src = os.path.join(staging, f"{PART_COL}={k}")
             dst = self._part_dir(k)
+            metrics, col_stats = aggregates.get(k, ({}, {}))
             prior = self.manifest(k) if append else None
             if prior is not None and os.path.exists(dst):
                 return self._append_into(k, src, dst, prior, run_id,
-                                         snap_id,
-                                         metrics_by_key.get(k, {}),
-                                         stats_by_key.get(k),
+                                         snap_id, metrics, col_stats,
                                          stat_cols, bloom_cols)
             if os.path.exists(dst):
                 shutil.rmtree(dst)  # stale partial from a dead run
             os.rename(src, dst)  # atomic promote
             files = _parquet_files(dst)
+            fs, fb = _file_meta(dst, files, stat_cols or [],
+                                bloom_cols or [])
             m = {
                 "part_key": k,
                 "run_id": run_id,
@@ -786,33 +782,22 @@ class IcebergLike:
                 "input_fingerprint": input_fingerprint,
                 "files": files,
                 "file_seq": {f: snap_id for f in files},
-                "metrics": metrics_by_key.get(k, {}),
-                **({"col_stats": stats_by_key[k]}
-                   if k in stats_by_key else {}),
+                "metrics": metrics,
+                **({"col_stats": col_stats} if col_stats else {}),
+                **({"file_stats": fs} if fs else {}),
+                **({"file_blooms": fb} if fb else {}),
             }
-            if stat_cols:
-                fs = _file_stats_for(dst, files, stat_cols)
-                if fs:
-                    m["file_stats"] = fs
-            if bloom_cols:
-                fb = _file_blooms_for(dst, files, bloom_cols)
-                if fb:
-                    m["file_blooms"] = fb
             self._write_manifest(k, m)
             return k
 
-        if fail_after is not None:
-            # crash-injection path (kill/resume tests): deterministic
-            # sequential order so "fail after N commits" is exact
-            promoted = []
-            for i, k in enumerate(staged_keys):
-                if i >= fail_after:
-                    raise RuntimeError(
-                        f"injected failure after {fail_after} commits")
-                promoted.append(_promote(k))
-        else:
-            with ThreadPoolExecutor(max_workers=PROMOTE_THREADS) as pool:
-                promoted = sorted(pool.map(_promote, staged_keys))
+        # crash injection (kill/resume tests): promote only the first
+        # ``fail_after`` keys in sorted order, then die
+        todo = staged_keys if fail_after is None else staged_keys[:fail_after]
+        with ThreadPoolExecutor(max_workers=PROMOTE_THREADS) as pool:
+            promoted = sorted(pool.map(_promote, todo))
+        if len(todo) < len(staged_keys):
+            raise RuntimeError(
+                f"injected failure after {fail_after} commits")
 
         shutil.rmtree(staging, ignore_errors=True)
         snapshot = {
@@ -918,20 +903,18 @@ class IcebergLike:
         # prunable after upsert/CDC appends (whose stat_cols defaults
         # to None) — the file-level fix for exactly the widening that
         # forces the partition-level entry above to drop columns.
+        # Blooms inherit the same way (immutable per-file artifacts,
+        # tracked columns carried forward when the append names none).
         prior_fs = dict(m.get("file_stats") or {})
-        fcols = list(stat_cols or []) or sorted(
-            {c for v in prior_fs.values() for c in v})
-        if fcols:
-            prior_fs.update(_file_stats_for(dst, new_names, fcols))
+        prior_fb = dict(m.get("file_blooms") or {})
+        fs, fb = _file_meta(
+            dst, new_names,
+            list(stat_cols or []) or _tracked_cols(prior_fs),
+            list(bloom_cols or []) or _tracked_cols(prior_fb))
+        prior_fs.update(fs)
+        prior_fb.update(fb)
         if prior_fs:
             m["file_stats"] = prior_fs
-        # Blooms inherit the same way (immutable per-file artifacts,
-        # tracked columns carried forward when the append names none)
-        prior_fb = dict(m.get("file_blooms") or {})
-        bcols = list(bloom_cols or []) or sorted(
-            {c for v in prior_fb.values() for c in v})
-        if bcols:
-            prior_fb.update(_file_blooms_for(dst, new_names, bcols))
         if prior_fb:
             m["file_blooms"] = prior_fb
         m.setdefault("appends", []).append(
@@ -956,41 +939,53 @@ class IcebergLike:
         blooms are rebuilt the same way over THEIR tracked columns
         (no col_stats fallback: blooms exist only where a write asked
         for them)."""
-        cols = sorted({c for v in (m.get("file_stats") or {}).values()
-                       for c in v}
-                      or (m.get("col_stats") or {}).keys())
-        m.pop("file_stats", None)
-        if cols:
-            fs = _file_stats_for(dirpath, files, cols)
-            if fs:
-                m["file_stats"] = fs
-        bcols = sorted({c for v in (m.get("file_blooms") or {}).values()
-                        for c in v})
-        m.pop("file_blooms", None)
-        if bcols:
-            fb = _file_blooms_for(dirpath, files, bcols)
-            if fb:
-                m["file_blooms"] = fb
+        fs, fb = _file_meta(
+            dirpath, files,
+            (_tracked_cols(m.pop("file_stats", None))
+             or sorted((m.get("col_stats") or {}).keys())),
+            _tracked_cols(m.pop("file_blooms", None)))
+        if fs:
+            m["file_stats"] = fs
+        if fb:
+            m["file_blooms"] = fb
 
     @staticmethod
-    def _recount(spark: SparkSession, m: dict, dirpath: str) -> None:
-        """After rows left a partition (rollback stripped files,
+    def _partition_aggregates(df: DataFrame, metric_aggs: list,
+                              stat_cols: list[str]
+                              ) -> dict[int, tuple[dict, dict]]:
+        """``{part_key: (metrics, col_stats)}`` from ONE
+        ``groupBy(part_key)`` job over ``df``: the row count and the
+        caller's named ``metric_aggs`` become ``metrics``, and each
+        of ``stat_cols`` gets its ``{"min", "max"}`` in ``col_stats``
+        — the only code that computes a manifest's row metrics or
+        column bounds."""
+        aggs = [F.count(F.lit(1)).alias("rows"), *metric_aggs]
+        for c in stat_cols:
+            aggs += [F.min(c).alias(f"_mn_{c}"),
+                     F.max(c).alias(f"_mx_{c}")]
+        out = {}
+        for r in df.groupBy(PART_COL).agg(*aggs).collect():
+            d = r.asDict()
+            k = int(d.pop(PART_COL))
+            out[k] = (d, {c: {"min": d.pop(f"_mn_{c}"),
+                              "max": d.pop(f"_mx_{c}")}
+                          for c in stat_cols})
+        return out
+
+    def _recount(self, spark: SparkSession, m: dict, k: int) -> None:
+        """After rows left partition ``k`` (rollback stripped files,
         materialize_deletes folded tombstones), recompute its exact
         ``rows`` metric and tracked ``col_stats`` bounds from what
         remains — one tiny agg over that partition only. A stale
         count/min/max would silently corrupt metadata-only answers
         (``stats_agg``)."""
         stat_cols = sorted((m.get("col_stats") or {}).keys())
-        aggs = [F.count(F.lit(1)).alias("_rows")]
-        for c in stat_cols:
-            aggs += [F.min(c).alias(f"_mn_{c}"),
-                     F.max(c).alias(f"_mx_{c}")]
-        r = spark.read.parquet(dirpath).agg(*aggs).collect()[0]
-        m["metrics"] = {**(m.get("metrics") or {}), "rows": r["_rows"]}
+        metrics, stats = self._partition_aggregates(
+            self._scan(spark, None, [self._part_dir(k)]), [],
+            stat_cols)[k]
+        m["metrics"] = {**(m.get("metrics") or {}), **metrics}
         if stat_cols:
-            m["col_stats"] = {c: {"min": r[f"_mn_{c}"],
-                                  "max": r[f"_mx_{c}"]}
-                              for c in stat_cols}
+            m["col_stats"] = stats
 
     def _swap_in(self, staging: str, k: int, run_id: str,
                  crash: bool = False) -> list[str]:
@@ -1507,7 +1502,7 @@ class IcebergLike:
             self._forget_files(k, m, late)
             m["appends"] = [a for a in m.get("appends", [])
                             if a.get("snapshot_id", 0) <= snapshot_id]
-            self._recount(spark, m, self._part_dir(k))
+            self._recount(spark, m, k)
             self._write_manifest(k, m)
             stripped.append(k)
         dropped_snaps = []
@@ -2066,6 +2061,9 @@ class IcebergLike:
         and a kill before the delete files are removed just leaves
         merge-on-read in force (idempotent — the rows are already
         gone, and rewritten partitions outsequence the deletes).
+        A delete that publishes while the materialization runs is not
+        folded and keeps applying: the rewritten files stay sequenced
+        before it (see ``_rebase`` below).
 
         Documented deviation from real Iceberg (same family as
         ``compact``'s): materializing EXPIRES the folded delete files
@@ -2075,9 +2073,11 @@ class IcebergLike:
         the materialize snapshot are exact.
         """
         self._check_main_writable()
-        dels, pdels = self._live_deletes()
         run_id = run_id or f"materialize-{int(time.time() * 1000)}"
+        # the id first: every delete sequenced below it is already
+        # published, so the listing folds all of them
         snap_id = self._next_snapshot_id()
+        dels, pdels = self._live_deletes()
         if not dels and not pdels:
             return {"run_id": run_id, "rewritten_keys": [],
                     "folded_deletes": []}
@@ -2107,7 +2107,7 @@ class IcebergLike:
                     "data_snapshot_id": snap_id,
                     "deletes_materialized_by": run_id,
                 })
-                self._recount(spark, m, self._part_dir(k))
+                self._recount(spark, m, k)
                 self._refresh_file_stats(m, self._part_dir(k), files)
                 self._write_manifest(k, m)
             shutil.rmtree(staging, ignore_errors=True)
@@ -2123,9 +2123,21 @@ class IcebergLike:
             "rewritten_keys": keys, "folded_deletes": folded,
         }
 
+        seq = snap_id  # the rewritten files' sequence number
+
         def _rebase(snap: dict, new_id: int) -> dict:
-            # the rewritten partitions' manifests record the id
-            self._renumber_manifests(keys, snap["snapshot_id"], new_id)
+            """Lost the id race: the rewritten files must stay
+            sequenced at-or-after every delete this run folded and
+            before every delete it did not — one that won an id at or
+            after ours still applies to them. Absent such a delete
+            they take the new id, else the last folded delete's."""
+            nonlocal seq
+            raced = any(s.get("op") in ("delete", "merge", "pos_delete")
+                        and s["snapshot_id"] >= snap_id
+                        for s in self.snapshots())
+            new_seq = max(folded) if raced else new_id
+            self._renumber_manifests(keys, seq, new_seq)
+            seq = new_seq
             return self._rebased(snap, new_id)
 
         return self._publish_snapshot(snapshot, rebase=_rebase)
