@@ -2,7 +2,7 @@
 with scale commentary — the `.explain`-and-iterate evidence that the
 plan shapes asserted in tests/test_plans.py are the shapes actually
 produced (single-exchange extraction, broadcast joins, pruned scans,
-banded LSH join, rebalanced commit write).
+banded LSH join, the extract job's rebalanced commit input).
 
 Usage: python BENCH/dump_plans.py   (writes /root/repo/PLANS.md)
 """
@@ -30,7 +30,7 @@ def main() -> None:
                                                      run_pipeline)
     from textract_demo_spark.engine.queries import QUERIES
     from textract_demo_spark.engine.session import get_spark
-    from textract_demo_spark.engine.tables import PART_COL, with_part_key
+    from textract_demo_spark.engine.tables import with_part_key
 
     spark = get_spark(master="local[4]", app="dump-plans",
                       shuffle_partitions=4)
@@ -883,16 +883,21 @@ def main() -> None:
         " equal the global rank wherever the boundaries fall.",
         formatted(with_global_ids(docs.select("doc_id"), buckets=8))))
 
-    staged = with_part_key(out, 8).hint("rebalance", F.col(PART_COL))
-    sections.append((
-        "Commit staging write input (REBALANCE on the table partition"
-        " key)",
-        "RebalancePartitions on part_key ahead of partitionBy: each"
-        " output task holds whole buckets, so staging file count"
-        " tracks bucket count instead of tasks x buckets, and AQE"
-        " splits oversized buckets (hot-bucket stragglers).",
-        formatted(staged)))
-
+    from jobs.run_extract import commit_frame
+    with tempfile.TemporaryDirectory() as tmp, commit_frame(
+            dfs["transcripts"], IcebergLike(tmp), 8, 4) as (staged, _):
+        sections.append((
+            "Extract job commit input (REBALANCE on the table partition"
+            " key before the kernel)",
+            "The frame jobs/run_extract.py passes to IcebergLike.write:"
+            " ONE Exchange, RebalancePartitions on part_key over the raw"
+            " turns, below the MapInArrow. The kernel is a narrow map and"
+            " part_key is recomputed from conv_id after it, so each write"
+            " task still holds whole buckets (staging file count tracks"
+            " bucket count instead of tasks x buckets), the extracted"
+            " block arrays never cross an exchange, and AQE splits"
+            " oversized buckets by input bytes, the kernel's cost.",
+            formatted(staged)))
     md = ["# PLANS — physical-plan evidence for the headline operators",
           "",
           "Regenerated by `python BENCH/dump_plans.py` (sf0.001 inputs,"

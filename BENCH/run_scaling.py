@@ -79,8 +79,9 @@ def run_at(cores: int, input_path: str, zip_path: str,
         "--conf", "spark.sql.execution.arrow.maxRecordsPerBatch=1024",
         "--py-files", zip_path,
         os.path.join(ROOT, "jobs", "run_extract.py"),
+        # no --salt: the job rebalances its input on the partition key
+        # and sizes the skew split from the input (commit_frame)
         "--input", input_path, "--out", out_dir, "--buckets", "64",
-        "--salt", "16",
     ]
     t0 = time.time()
     for attempt in (1, 2):

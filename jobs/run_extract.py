@@ -12,6 +12,14 @@ Re-running after a kill resumes: committed partitions are detected
 from their manifests, and (with the default conv_id bucketing) their
 turns are filtered out of the input before extraction.
 
+Each turn crosses one exchange. With the default conv_id bucketing the
+input is rebalanced on the table partition key before the extraction
+kernel, and the commit adds no exchange of its own; AQE splits a hot
+bucket into pieces of about one task slot's share of the input bytes
+(``commit_frame``). ``--salt`` applies only where the key cannot be
+known before extraction: ``--zorder-cols`` (salted exchange before the
+kernel, the commit's rebalance after it) and ``--streaming``.
+
 Output schema note: the committed table includes the per-row stats
 columns (n_blocks_kept, n_blocks_dropped, conf_hist) computed by
 with_block_stats — they are part of the table contract (cheap scalar
@@ -28,8 +36,92 @@ Spark samples.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import time
+
+
+def _csv(arg: str | None) -> list[str] | None:
+    """Comma-separated column names, or None when none are given."""
+    cols = [c.strip() for c in (arg or "").split(",") if c.strip()]
+    return cols or None
+
+
+def _split_bytes(transcripts, limit: str) -> int | None:
+    """One task slot's share of the input files' bytes, not below AQE's
+    default 1 MB minimum partition size (a smaller piece is not worth a
+    data file) and not above ``limit``, a Spark byte string. None when
+    the input is not read from files."""
+    sc = transcripts.sparkSession.sparkContext
+    files = transcripts.inputFiles()
+    if not files:
+        return None
+    hconf = sc._jsc.hadoopConfiguration()
+    total = 0
+    for f in files:
+        path = sc._jvm.org.apache.hadoop.fs.Path(f)
+        total += path.getFileSystem(hconf).getFileStatus(path).getLen()
+    cap = sc._jvm.org.apache.spark.network.util.JavaUtils \
+        .byteStringAsBytes(limit)
+    return min(cap, max(total // sc.defaultParallelism, 1 << 20))
+
+
+@contextlib.contextmanager
+def commit_frame(transcripts, table, buckets: int, salt: int,
+                 zorder_cols: list[str] | None = None):
+    """Yield ``(frame, rebalance)``: the extracted, keyed frame the
+    job commits, and whether ``IcebergLike.write`` must still
+    rebalance it on ``part_key``.
+
+    With the default conv_id bucketing the key is a function of the
+    input, so committed partitions' turns are dropped before
+    extraction and the input is rebalanced on the key before the
+    kernel. The kernel is a narrow map and ``with_part_key`` computes
+    the same key again after it, so each write task still holds whole
+    buckets, and each turn crosses one exchange, as raw text instead
+    of as a block array. AQE's rebalance skew split cuts a partition
+    larger than ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` at
+    map-output bounds; at its 64 MB default a hot bucket below SF1
+    scale would stay one straggler kernel task, so while the frame is
+    open that size is one task slot's share of the input
+    (``_split_bytes``).
+
+    A Z-order key depends on the kernel's output, so that frame keeps
+    the salted exchange before the kernel and the commit's rebalance
+    after it. Its extracted rows are persisted on disk for the key's
+    two quantile sketches and the write, and released afterwards, so
+    the kernel runs once.
+    """
+    from pyspark import StorageLevel
+    from pyspark.sql import functions as F
+
+    from textract_demo_spark.engine.metrics import with_block_stats
+    from textract_demo_spark.engine.tables import (PART_COL, with_part_key,
+                                                   zorder_part_key)
+    from textract_demo_spark.engine.udfs import (extract_in_place,
+                                                 extract_turns)
+
+    if zorder_cols:
+        results = with_block_stats(extract_turns(transcripts, salt=salt))
+        results = results.persist(StorageLevel.DISK_ONLY)
+        try:
+            yield zorder_part_key(results, zorder_cols, buckets), True
+        finally:
+            results.unpersist()
+        return
+    pending = table.uncommitted(with_part_key(transcripts, buckets))
+    results = with_block_stats(extract_in_place(
+        pending.hint("rebalance", F.col(PART_COL))))
+    conf = transcripts.sparkSession.conf
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prior = conf.get(key)
+    split = _split_bytes(transcripts, prior)
+    if split is not None:
+        conf.set(key, str(split))
+    try:
+        yield with_part_key(results, buckets), False
+    finally:
+        conf.set(key, prior)
 
 
 def main() -> None:
@@ -44,7 +136,11 @@ def main() -> None:
     ap.add_argument("--buckets", type=int, default=32,
                     help="IcebergLike partition buckets")
     ap.add_argument("--salt", type=int, default=16,
-                    help="skew salt for hot conversations")
+                    help="skew salt for hot conversations before the"
+                         " kernel, used by --zorder-cols and"
+                         " --streaming only; ignored on the default"
+                         " path, which rebalances its input on the"
+                         " partition key")
     ap.add_argument("--fail-after", type=int, default=None,
                     help="inject a crash after N partition commits"
                          " (resume testing)")
@@ -98,15 +194,18 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from textract_demo_spark.engine.datagen import transcripts_df
-    from textract_demo_spark.engine.metrics import (partition_metrics,
-                                                    with_block_stats)
-    from textract_demo_spark.engine.pipeline import run_pipeline
+    from textract_demo_spark.engine.metrics import partition_metrics
     from textract_demo_spark.engine.schemas import TRANSCRIPTS_SCHEMA
-    from textract_demo_spark.engine.tables import (IcebergLike,
-                                                   with_part_key,
-                                                   zorder_part_key)
+    from textract_demo_spark.engine.tables import IcebergLike
 
-    spark = SparkSession.builder.appName("run_extract").getOrCreate()
+    # a cached plan keeps the exchange reads AQE plans for it uncached
+    # (coalesced, skew-split), so a --zorder-cols key's approximate
+    # quantile sketches over the persisted rows see the partitions an
+    # uncached pass would
+    spark = (SparkSession.builder.appName("run_extract")
+             .config("spark.sql.optimizer"
+                     ".canChangeCachedPlanOutputPartitioning", "true")
+             .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
 
     if args.rollback_to is not None:
@@ -151,32 +250,15 @@ def main() -> None:
 
     t0 = time.time()
     table = IcebergLike(args.out)
-    pending = transcripts
-    if not args.zorder_cols:
-        # the key is a function of conv_id alone: drop committed
-        # partitions' turns before extraction, not after it
-        pending = table.uncommitted(with_part_key(transcripts, args.buckets))
-    results = with_block_stats(
-        run_pipeline(pending, reviews=None, salt=args.salt))
-    stat_cols = None
-    if args.stat_cols:
-        stat_cols = [c.strip() for c in args.stat_cols.split(",")
-                     if c.strip()]
-    if args.zorder_cols:
-        stat_cols = [c.strip() for c in args.zorder_cols.split(",")
-                     if c.strip()]
-        results = zorder_part_key(results, stat_cols, args.buckets)
-    else:
-        results = with_part_key(results, args.buckets)
-    bloom_cols = None
-    if args.bloom_cols:
-        bloom_cols = [c.strip() for c in args.bloom_cols.split(",")
-                      if c.strip()]
-    snapshot = table.write(results, metrics_fn=partition_metrics,
-                           input_fingerprint=fingerprint,
-                           fail_after=args.fail_after,
-                           stat_cols=stat_cols,
-                           bloom_cols=bloom_cols)
+    zorder_cols = _csv(args.zorder_cols)
+    with commit_frame(transcripts, table, args.buckets, args.salt,
+                      zorder_cols) as (results, rebalance):
+        snapshot = table.write(results, metrics_fn=partition_metrics,
+                               input_fingerprint=fingerprint,
+                               fail_after=args.fail_after,
+                               rebalance=rebalance,
+                               stat_cols=zorder_cols or _csv(args.stat_cols),
+                               bloom_cols=_csv(args.bloom_cols))
     compaction: dict | None = None
     if args.compact:
         c = table.compact(spark, min_files=args.compact_min_files,

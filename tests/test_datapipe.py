@@ -1430,6 +1430,23 @@ def test_stratified_exact_split_keeps_input_types(spark):
     assert got == want and len(got) == 1200
 
 
+def test_curriculum_stage_keeps_null_groups(spark):
+    """A null group is a group, as in SQL GROUP BY: its rows come back
+    staged by the quartiles of their own scores (the bounds join is
+    null-safe) instead of dropping out of an inner join."""
+    from textract_demo_spark.datapipe.splits import with_curriculum_stage
+    docs = spark.createDataFrame(
+        [(i, None if i % 10 == 0 else f"s{i % 3}", i * 7 % 50)
+         for i in range(50)],
+        "doc_id long, source string, n_chars long")
+    out = with_curriculum_stage(docs).collect()
+    assert len(out) == 50
+    nulls = sorted((r["n_chars"], r["stage"]) for r in out
+                   if r["source"] is None)
+    # scores 0, 10, 20, 30, 40: quartiles 10, 20, 30
+    assert nulls == [(0, 1), (10, 1), (20, 2), (30, 3), (40, 4)]
+
+
 def test_stratified_exact_split_refuses_null_groups(spark):
     """A null group value cannot be stratified, and the cut-dim join
     would silently drop its rows: refused."""

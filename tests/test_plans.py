@@ -87,6 +87,57 @@ def test_staged_commit_write_is_rebalanced(spark):
         logical[:2000]
 
 
+def _job_commit_plan(spark, tmp_path, *zorder_cols: str) -> str:
+    """Plan of the frame ``run_extract`` commits, with the rebalance
+    ``IcebergLike.write`` adds when the job asks for it."""
+    from jobs.run_extract import commit_frame
+    from textract_demo_spark.engine.pipeline import fixtures_to_dfs
+    from textract_demo_spark.engine.tables import PART_COL, IcebergLike
+    dfs = fixtures_to_dfs(spark, n_convs=8)
+    with commit_frame(dfs["transcripts"], IcebergLike(str(tmp_path)), 8,
+                      4, list(zorder_cols) or None) as (df, rebalance):
+        if rebalance:
+            df = df.hint("rebalance", F.col(PART_COL))
+        return plan(df)
+
+
+def _exchanges(p: str) -> list[tuple[int, str]]:
+    return [(i, ln) for i, ln in enumerate(p.splitlines())
+            if "Exchange " in ln]
+
+
+def test_job_commit_shuffles_each_turn_once(spark, tmp_path):
+    """The extract job's default commit frame crosses ONE exchange:
+    the rebalance on part_key, below the kernel, so turns move as raw
+    text and the extracted block arrays are never shuffled; the
+    commit adds no second rebalance after the kernel."""
+    p = _job_commit_plan(spark, tmp_path)
+    ex = _exchanges(p)
+    assert len(ex) == 1, p[:3000]
+    line, desc = ex[0]
+    assert "hashpartitioning(part_key" in desc, desc
+    assert "REBALANCE_PARTITIONS_BY_COL" in desc, desc
+    kernel = [i for i, ln in enumerate(p.splitlines())
+              if "MapInArrow" in ln]
+    assert len(kernel) == 1 and kernel[0] < line, p[:3000]
+
+
+def test_job_zorder_commit_keeps_rebalance_after_kernel(spark, tmp_path):
+    """A Z-order key depends on the kernel's output, so that frame
+    keeps the commit's rebalance on part_key after the kernel, and
+    the salted exchange before it (inside the persisted extraction)."""
+    p = _job_commit_plan(spark, tmp_path, "turn_idx", "n_blocks_kept")
+    kernel = min(i for i, ln in enumerate(p.splitlines())
+                 if "MapInArrow" in ln)
+    above = [d for i, d in _exchanges(p) if i < kernel]
+    below = [d for i, d in _exchanges(p) if i > kernel]
+    assert len(above) == 1, p[:3000]
+    assert "hashpartitioning(part_key" in above[0], above
+    assert "REBALANCE_PARTITIONS_BY_COL" in above[0], above
+    assert below and all("hashpartitioning(conv_id" in d for d in below), \
+        p[:3000]
+
+
 def test_quality_filter_not_collapsed_into_extraction(spark):
     """The cheap quality gate runs inside the extraction kernel (one
     Python stage); there must be no SECOND Python stage before it

@@ -28,6 +28,7 @@ _EX = int(os.environ.get("SPARK_GRAFT_PROP_EXAMPLES", "0")) or None
 
 from textract_demo_spark.core.confidence import line_confidence
 from textract_demo_spark.core.extract import extract_payload
+from textract_demo_spark.core.quality import _label_conf, classify_quality
 
 STATUSES = {"ok", "rejected", "malformed", "model_error"}
 
@@ -232,3 +233,50 @@ def test_html_tokenizer_total_on_tag_soup(payload):
             if prev is not None:
                 assert a >= prev
             prev = b
+
+
+def _gate_ref(text: str) -> dict:
+    """The quality gate's verdict on a payload that is neither PDF nor
+    HTML, with the non-printable count taken per character."""
+    stripped = text.strip()
+    if not stripped:
+        return {"label": "bad", "conf": _label_conf(text, "bad"),
+                "kind": "bad", "reason": "empty"}
+    nonprint = sum(1 for c in stripped
+                   if not (c.isprintable() or c in "\n\r\t"))
+    if nonprint / len(stripped) > 0.15:
+        return {"label": "bad", "conf": _label_conf(text, "bad"),
+                "kind": "bad", "reason": "binary"}
+    return {"label": "good", "conf": _label_conf(text, "good"),
+            "kind": "plain", "reason": ""}
+
+
+# \n\r\t, C0/C1 controls, DEL, U+2028/U+2029, U+00A0, combining marks
+# and astral characters; no '<', so no payload sniffs as HTML
+_GATE_NOISE = ["\n", "\r", "\t", "\x00", "\x07", "\x0b", "\x0c", "\x1b",
+               "\x1f", "\x7f", "\x85", "\x9f", "\u2028", "\u2029",
+               "\u00a0", "\u200b", "\ufeff"]
+_GATE_TEXT = ["a", "Z", "7", " ", ".", "\u0301", "\u0300", "\u00e9",
+              "\u4e2d", "\U0001f600", "\U00010348"]
+
+
+@st.composite
+def _gate_payloads(draw):
+    """Printable text with noise characters mixed in; a third of the
+    draws hold the noise at one character either side of the 15% cut."""
+    n = draw(st.integers(min_value=1, max_value=120))
+    if draw(st.integers(0, 2)) == 0:
+        k = max(0, int(0.15 * n) + draw(st.integers(-1, 1)))
+    else:
+        k = draw(st.integers(0, n))
+    chars = (draw(st.lists(st.sampled_from(_GATE_TEXT),
+                           min_size=n, max_size=n))
+             + draw(st.lists(st.sampled_from(_GATE_NOISE),
+                             min_size=k, max_size=k)))
+    return "".join(draw(st.permutations(chars)))
+
+
+@given(_gate_payloads())
+@settings(max_examples=_EX or 300, deadline=None)
+def test_quality_gate_matches_per_character_count(s):
+    assert classify_quality(s) == _gate_ref(s)

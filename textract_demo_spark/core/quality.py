@@ -92,9 +92,14 @@ def classify_and_decode(text: str) -> tuple[dict, bytes | None]:
                     "kind": "bad", "reason": "truncated_html"}, None
         return {"label": "good", "conf": _label_conf(text, "good"),
                 "kind": "html", "reason": ""}, None
-    # binary noise: too many non-printable characters
+    # binary noise: too many non-printable characters (\n\r\t count
+    # as printable). Almost every payload has none, which C-level
+    # string scans prove; only a payload with some pays for the
+    # per-character count.
     n = len(stripped)
-    nonprint = sum(1 for c in stripped if not (c.isprintable() or c in "\n\r\t"))
+    flat = stripped.replace("\n", "").replace("\r", "").replace("\t", "")
+    nonprint = 0 if flat.isprintable() else sum(
+        1 for c in stripped if not (c.isprintable() or c in "\n\r\t"))
     if n > 0 and nonprint / n > 0.15:
         return {"label": "bad", "conf": _label_conf(text, "bad"),
                 "kind": "bad", "reason": "binary"}, None

@@ -309,10 +309,15 @@ def with_curriculum_stage(docs: DataFrame,
     ``shuffle_key`` (hex string).
     """
     qs = list(quantiles)
-    bounds = docs.groupBy(by).agg(*[
+    bounds = docs.groupBy(F.col(by).alias("_by")).agg(*[
         F.expr(f"percentile({score_col}, {q})").alias(f"_q{i}")
         for i, q in enumerate(qs)])
-    out = docs.join(F.broadcast(bounds), by)
+    # null-safe, as GROUP BY treats NULL: a null group takes the
+    # stages of its own bounds instead of dropping out of the join
+    out = (docs
+           .join(F.broadcast(bounds), F.col(by).eqNullSafe(F.col("_by")))
+           .select(by, *[c for c in docs.columns if c != by],
+                   *[f"_q{i}" for i in range(len(qs))]))
     stage = F.lit(1).cast("long")
     for i in range(len(qs)):
         stage = stage + F.when(

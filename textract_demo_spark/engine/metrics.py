@@ -25,17 +25,15 @@ from pyspark.sql import functions as F
 def with_block_stats(results: DataFrame) -> DataFrame:
     """Narrow per-row stats columns (computed alongside the staging
     write; no extra pass): blocks kept/dropped + a 10-bucket
-    confidence histogram of kept blocks."""
-    return (results
-            .withColumn("n_blocks_kept", F.expr(
-                "size(filter(blocks, b -> b.is_content))"))
-            .withColumn("n_blocks_dropped", F.expr(
-                "size(filter(blocks, b -> NOT b.is_content))"))
-            .withColumn("conf_hist", F.expr(
-                "transform(sequence(0, 9), i ->"
-                " size(filter(blocks, b -> b.is_content AND"
-                " int(least(greatest(b.conf, 0.0d), 99.99d) / 10) = i)))"
-            )))
+    confidence histogram of kept blocks. One ``selectExpr``: one JVM
+    call and one analysis of the plan for all three columns."""
+    return results.selectExpr(
+        "*",
+        "size(filter(blocks, b -> b.is_content)) AS n_blocks_kept",
+        "size(filter(blocks, b -> NOT b.is_content)) AS n_blocks_dropped",
+        "transform(sequence(0, 9), i -> size(filter(blocks, b ->"
+        " b.is_content AND int(least(greatest(b.conf, 0.0d), 99.99d) / 10)"
+        " = i))) AS conf_hist")
 
 
 def partition_metrics(staged: DataFrame) -> list[Column]:
@@ -50,22 +48,22 @@ def partition_metrics(staged: DataFrame) -> list[Column]:
     distinguishes a quality reject from a broken envelope from an
     extractor failure; ``failed`` is the total of all non-ok
     statuses.
-    """
-    def n_where(cond) -> Column:
-        return F.sum(F.when(cond, 1).otherwise(0))
 
-    status = F.col("status")
-    aggs = [n_where(status == "ok").alias("ok"),
-            n_where(status != "ok").alias("failed")]
-    aggs += [n_where(status == s).alias(s)
-             for s in ("rejected", "malformed", "model_error",
-                       "review_failed")]
+    Each aggregate is one aliased SQL expression string: one JVM call
+    per column instead of one per Column-API node, which is most of
+    the time a small commit spends building its plan.
+    """
+    counts = {"ok": "status = 'ok'", "failed": "status != 'ok'"}
+    counts.update({s: f"status = '{s}'"
+                   for s in ("rejected", "malformed", "model_error",
+                             "review_failed")})
     if "needs_review" in staged.columns:
-        aggs.append(n_where(F.col("needs_review")).alias("needs_review"))
-    aggs += [
-        F.sum("n_blocks_kept").alias("blocks_kept"),
-        F.sum("n_blocks_dropped").alias("blocks_dropped"),
-        F.array(*[F.coalesce(F.sum(F.col("conf_hist")[i]), F.lit(0))
-                  for i in range(10)]).alias("conf_histogram"),
-    ]
-    return aggs
+        counts["needs_review"] = "needs_review"
+    hist = ", ".join(f"coalesce(sum(conf_hist[{i}]), 0)"
+                     for i in range(10))
+    exprs = {name: f"sum(CASE WHEN {cond} THEN 1 ELSE 0 END)"
+             for name, cond in counts.items()}
+    exprs.update({"blocks_kept": "sum(n_blocks_kept)",
+                  "blocks_dropped": "sum(n_blocks_dropped)",
+                  "conf_histogram": f"array({hist})"})
+    return [F.expr(f"{e} AS {name}") for name, e in exprs.items()]

@@ -655,7 +655,10 @@ class IcebergLike:
         10^5 buckets). With it, each output task holds whole buckets
         (file count ~= bucket count, independent of parallelism) and
         AQE splits oversized buckets so a hot bucket doesn't become a
-        straggler.
+        straggler. A caller that already rebalanced its input on the
+        same key, ahead of narrow work that recomputes it (the extract
+        job, ``jobs/run_extract.py commit_frame``), passes False so the
+        rows are not shuffled a second time.
 
         ``metrics_fn(staged)`` returns named aggregate Columns (e.g.
         ``metrics.partition_metrics``) and ``stat_cols`` names columns

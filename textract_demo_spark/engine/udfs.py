@@ -144,7 +144,17 @@ def extract_turns(transcripts: DataFrame, salt: int = 16,
     else:
         df = df.repartition(
             F.col("conv_id"), F.pmod(F.xxhash64("turn_idx"), F.lit(salt)))
-    return df.mapInArrow(_extract_arrow, schema=schemas.EXTRACTED_SCHEMA)
+    return extract_in_place(df)
+
+
+def extract_in_place(transcripts: DataFrame) -> DataFrame:
+    """Quality-gate + extract every turn in the partition it is in: the
+    narrow kernel of ``extract_turns`` without its exchange, for a
+    caller that distributes the rows itself (the extract job
+    rebalances its input on the table partition key)."""
+    return (transcripts
+            .select("conv_id", "turn_idx", "role", "tool", "ts", "text")
+            .mapInArrow(_extract_arrow, schema=schemas.EXTRACTED_SCHEMA))
 
 
 def words_table(extracted: DataFrame) -> DataFrame:
