@@ -10,7 +10,9 @@ Usage: python BENCH/dump_plans.py   (writes /root/repo/PLANS.md)
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -24,6 +26,21 @@ def formatted(df) -> str:
 
 
 def main() -> None:
+    """Write PLANS.md, then remove the scratch tables the plans scan."""
+    made: list[str] = []
+
+    def mkdtemp(prefix: str) -> str:
+        made.append(tempfile.mkdtemp(prefix=prefix))
+        return made[-1]
+
+    try:
+        write_plans(mkdtemp)
+    finally:
+        for d in made:
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def write_plans(mkdtemp) -> None:
     from pyspark.sql import functions as F
 
     from textract_demo_spark.engine.pipeline import (fixtures_to_dfs,
@@ -498,10 +515,8 @@ def main() -> None:
         formatted(bloom_probe(docs.select("doc_id", "text"), bitmap,
                               m_bits=1 << 16, k=5))))
 
-    import tempfile
-
     from textract_demo_spark.sources.warc import build_warc, read_warc
-    wtmp = tempfile.mkdtemp(prefix="plans_warc_")
+    wtmp = mkdtemp("plans_warc_")
     with open(os.path.join(wtmp, "a.warc"), "wb") as fh:
         fh.write(build_warc([{"warc_type": "resource",
                               "payload": b"x"}]))
@@ -676,8 +691,7 @@ def main() -> None:
             docs.select("doc_id", "source"), k=5))))
 
     from textract_demo_spark.engine.tables import IcebergLike
-    import tempfile
-    tdir = tempfile.mkdtemp(prefix="plans_tbl_")
+    tdir = mkdtemp("plans_tbl_")
     tbl = IcebergLike(tdir)
     tbl.write(with_part_key(
         spark.range(0, 50).select(
@@ -768,7 +782,7 @@ def main() -> None:
         " stats collected.",
         formatted(hp_keyed)))
 
-    pdir = tempfile.mkdtemp(prefix="plans_posdel_")
+    pdir = mkdtemp("plans_posdel_")
     ptbl = IcebergLike(pdir)
     ptbl.write(with_part_key(
         spark.range(0, 50).select(

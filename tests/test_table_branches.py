@@ -56,6 +56,36 @@ def test_branch_isolation_and_fast_forward(spark, table):
     assert table._main_pin() is None
 
 
+def test_main_readers_hide_branch_commits(spark, table):
+    """Every main reader resolves its snapshot in one place, so while
+    a branch is diverged none of them sees the branch's commits: not
+    the pruned scan (neither its rows nor its file counts) and not
+    the incremental or changelog reads, whose default end is main's
+    head. An explicit end still reaches the branch."""
+    first = table.snapshots()[-1]["snapshot_id"]
+    ranges = [(100, 129), (90, 129), (0, None)]
+    kept_before = {r: table.read_where(spark, "doc_id", *r)[1]
+                   ["files_kept"] for r in ranges}
+    table.create_branch("b")
+    # appended files in main's partitions plus partitions of its own
+    head = table.write_to_branch(
+        "b", _wave(spark, 100, 120).unionByName(
+            _wave(spark, 120, 130, bucket_offset=4)),
+        stat_cols=["doc_id"])["snapshot_id"]
+    assert _ids(table.read(spark)) == list(range(100))
+    for lo, hi in ranges:
+        out, rep = table.read_where(spark, "doc_id", lo, hi)
+        assert _ids(out) == list(range(lo, 100)), (lo, hi)
+        assert rep["files_kept"] == kept_before[(lo, hi)], (lo, hi, rep)
+    assert table.read_incremental(spark, first).count() == 0
+    assert table.read_changes(spark, first).count() == 0
+    assert _ids(table.read_incremental(spark, first, head)) == list(
+        range(100, 130))
+    assert _ids(table.read_where(spark, "doc_id", 100, None,
+                                 snapshot_id=head)[0]) == list(
+        range(100, 130))
+
+
 def test_plain_write_refused_while_diverged(spark, table):
     table.create_branch("audit")
     table.write_to_branch("audit", _wave(spark, 100, 120))

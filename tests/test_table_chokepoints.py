@@ -187,14 +187,16 @@ def test_materialize_keeps_a_racing_delete(spark, tmp_path):
 
 def test_plain_read_is_a_bare_scan(spark, tmp_path):
     """The plain latest read of a table with no deletes and no branch
-    is the benchmark's scan path: no sequence-annotation join and no
+    is the benchmark's scan path, and a ``read_where`` point lookup on
+    it the benchmark's lookup path: no sequence-annotation join and no
     ``input_file_name``. A pending delete brings both in."""
     t = IcebergLike(str(tmp_path / "t"))
     t.write(_wave(spark, 0, 100))
     t.write(_wave(spark, 100, 120), append=True)
-    p = _plan(t.read(spark))
-    assert "Join" not in p, p[:3000]
-    assert "input_file_name" not in p, p[:3000]
+    lookup, _ = t.read_where(spark, "conv_id", "c105", "c105")
+    for p in (_plan(t.read(spark)), _plan(lookup)):
+        assert "Join" not in p, p[:3000]
+        assert "input_file_name" not in p, p[:3000]
     t.delete_rows(spark.createDataFrame([(5,)], "doc_id long"),
                   ["doc_id"])
     p = _plan(t.read(spark))

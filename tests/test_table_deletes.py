@@ -280,7 +280,8 @@ def test_compact_skips_mixed_seq_with_pending_deletes(spark, table):
 def test_model_based_operation_sequences(spark, tmp_path):
     """Model-based invariant: a seeded random interleaving of append /
     delete / upsert / compact / materialize / reopen / rollback /
-    branch always reads back exactly the dict a plain Python model
+    branch always reads back, through ``read`` and a full-range
+    ``read_where`` alike, exactly the dict a plain Python model
     predicts. This is the cross-product coverage the single-op tests
     can't give — sequence scoping must hold through ANY op order.
     Rollback restores the model saved at its target snapshot, or is
@@ -305,11 +306,15 @@ def test_model_based_operation_sequences(spark, tmp_path):
     rewrites: list[int] = []  # compact/materialize snapshot ids
 
     def check(tag):
-        rows = t.read(spark).select("doc_id", "v").collect()
-        got = {r.doc_id: r.v for r in rows}
-        assert len(got) == len(rows), (tag, "duplicate doc_id")
-        assert got == model, (
-            tag, sorted(set(got) ^ set(model))[:10])
+        # the plain read and a full-range pruned scan both read main
+        for how, df in (("read", t.read(spark)),
+                        ("read_where",
+                         t.read_where(spark, "doc_id", 0, None)[0])):
+            rows = df.select("doc_id", "v").collect()
+            got = {r.doc_id: r.v for r in rows}
+            assert len(got) == len(rows), (tag, how, "duplicate doc_id")
+            assert got == model, (
+                tag, how, sorted(set(got) ^ set(model))[:10])
 
     for step in range(12):
         op = rng.choice(["append", "delete", "upsert", "compact",
@@ -711,7 +716,7 @@ def test_rollback_restores_prior_state(spark, tmp_path):
     res = t.rollback(spark, s1["snapshot_id"])
     assert res["dropped_partitions"] == [4, 5, 6, 7]
     assert _ids(t.read(spark)) == list(range(150))
-    assert t._delete_snapshots() == []  # the takedown was undone
+    assert t._live_deletes()[0] == []  # the takedown was undone
     # the table keeps working after the rollback
     t.write(_wave(spark, 200, 220, bucket_offset=8))
     assert _ids(t.read(spark)) == (list(range(150))
@@ -1081,7 +1086,7 @@ def test_compact_skips_pos_delete_partitions(spark, table):
     table.delete_where(spark, "doc_id = 7")
     c = table.compact(spark)
     hit = {int(r[0]) for r in spark.read.parquet(os.path.join(
-        table.delete_dir, table._pos_delete_snapshots()[0]
+        table.delete_dir, table._live_deletes()[1][0]
         ["delete_file"])).select(PART_COL).collect()}
     assert set(c["skipped_pos_delete"]) >= hit
     assert not (set(c["compacted_keys"]) & hit)
@@ -1089,7 +1094,7 @@ def test_compact_skips_pos_delete_partitions(spark, table):
     assert len(_ids(table.read(spark))) == 149
     # materialize folds the tombstones; compaction then proceeds
     m = table.materialize_deletes(spark)
-    assert table._pos_delete_snapshots() == []
+    assert table._live_deletes()[1] == []
     c2 = table.compact(spark)
     assert c2["skipped_pos_delete"] == []
     assert len(_ids(table.read(spark))) == 149

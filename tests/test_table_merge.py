@@ -60,7 +60,7 @@ def test_merge_is_one_snapshot(spark, table):
 def test_merge_delete_file_shares_snapshot(spark, table):
     snap = table.merge(_wave(spark, 50, 60, F.lit(1)), ["doc_id"])
     # the tombstone half is discoverable and sequenced AT the merge id
-    dels = table._delete_snapshots()
+    dels = table._live_deletes()[0]
     assert [d["snapshot_id"] for d in dels] == [snap["snapshot_id"]]
     assert os.path.exists(os.path.join(table.delete_dir,
                                        snap["delete_file"]))
@@ -146,7 +146,7 @@ def test_rollback_across_merge_restores_and_drops_tombstones(
     assert len(got) == 100
     assert all(got[i] == i % 7 for i in range(100))
     assert not os.path.exists(delete_path)  # tombstones discarded
-    assert table._delete_snapshots() == []
+    assert table._live_deletes()[0] == []
 
 
 def test_expire_snapshots_retains_live_merge_tombstones(spark, table):

@@ -122,6 +122,7 @@ import threading
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -323,6 +324,21 @@ def _bloom_maybe_contains(entry: dict, value) -> bool:
                for p in _bloom_positions(value, entry["m"], entry["k"]))
 
 
+def _stats_miss(stats: dict, preds: dict) -> bool:
+    """True when some ``{col: (lo, hi)}`` range misses that column's
+    recorded [min, max] in ``stats`` (a partition's ``col_stats`` or
+    one file's ``file_stats`` entry). Missing or all-null stats never
+    miss: pruning is an optimization, never a filter."""
+    for c, (lo_, hi_) in preds.items():
+        st = stats.get(c)
+        if st is None or st["min"] is None:
+            continue
+        if ((lo_ is not None and st["max"] < lo_)
+                or (hi_ is not None and st["min"] > hi_)):
+            return True
+    return False
+
+
 def with_part_key(df: DataFrame, n_buckets: int,
                   col: str = "conv_id") -> DataFrame:
     """Deterministic partition key: bucket of conv_id (the Iceberg
@@ -450,11 +466,37 @@ class IcebergLike:
     def _snapshot_path(self, sid: int) -> str:
         return os.path.join(self.manifest_dir, f"snapshot-{sid:05d}.json")
 
-    def _ref_path(self, name: str) -> str:
-        return os.path.join(self.manifest_dir, f"branch-{name}.json")
+    def _ref_path(self, name: str, kind: str = "branch") -> str:
+        return os.path.join(self.manifest_dir, f"{kind}-{name}.json")
+
+    def _set_ref(self, name: str, snapshot_id: int,
+                 kind: str = "branch") -> dict:
+        obj = {"name": name, "snapshot_id": snapshot_id,
+               "created_at": time.time()}
+        self._write_json_atomic(self._ref_path(name, kind), obj)
+        return obj
+
+    def _refs(self, kind: str) -> list[dict]:
+        """Every ``kind`` ("tag" or "branch", main's pin included) ref
+        record, in name order."""
+        out = []
+        for f in sorted(os.listdir(self.manifest_dir)):
+            if f.startswith(f"{kind}-") and f.endswith(".json"):
+                with open(os.path.join(self.manifest_dir, f)) as fh:
+                    out.append(json.load(fh))
+        return out
 
     def _write_manifest(self, k: int, m: dict) -> None:
         self._write_json_atomic(self._manifest_path(k), m)
+
+    @staticmethod
+    def _file_seq(m: dict, f: str) -> int:
+        """Sequence number of file ``f`` in manifest ``m``: its
+        ``file_seq`` entry, else (files predating the field) the
+        partition's ``data_snapshot_id``, else 0 (oldest: every
+        delete applies)."""
+        fseq = m.get("file_seq") or {}
+        return int(fseq.get(f, m.get("data_snapshot_id", 0)))
 
     def committed_keys(self) -> set[int]:
         out = set()
@@ -865,9 +907,7 @@ class IcebergLike:
             new_names.append(name)
         m = dict(prior)
         files = sorted(set(m.get("files", [])) | set(new_names))
-        fseq = dict(m.get("file_seq") or
-                    {f: m.get("data_snapshot_id", 0)
-                     for f in m.get("files", [])})
+        fseq = {f: self._file_seq(m, f) for f in m.get("files", [])}
         fseq.update({f: snap_id for f in new_names})
         m.update({"files": files, "file_seq": fseq})
         old_rows = (m.get("metrics") or {}).get("rows")
@@ -1190,23 +1230,13 @@ class IcebergLike:
             snapshot_id = snaps[-1]["snapshot_id"]
         elif not any(s["snapshot_id"] == snapshot_id for s in snaps):
             raise ValueError(f"no snapshot {snapshot_id} to tag")
-        obj = {"name": name, "snapshot_id": snapshot_id,
-               "created_at": time.time()}
-        self._write_json_atomic(
-            os.path.join(self.manifest_dir, f"tag-{name}.json"), obj)
-        return obj
+        return self._set_ref(name, snapshot_id, "tag")
 
     def tags(self) -> dict[str, int]:
-        out = {}
-        for f in sorted(os.listdir(self.manifest_dir)):
-            if f.startswith("tag-") and f.endswith(".json"):
-                with open(os.path.join(self.manifest_dir, f)) as fh:
-                    o = json.load(fh)
-                out[o["name"]] = o["snapshot_id"]
-        return out
+        return {o["name"]: o["snapshot_id"] for o in self._refs("tag")}
 
     def drop_tag(self, name: str) -> None:
-        p = os.path.join(self.manifest_dir, f"tag-{name}.json")
+        p = self._ref_path(name, "tag")
         if os.path.exists(p):
             os.remove(p)
 
@@ -1252,20 +1282,11 @@ class IcebergLike:
                 raise ValueError("no snapshots to branch from")
         elif not any(s["snapshot_id"] == snapshot_id for s in snaps):
             raise ValueError(f"no snapshot {snapshot_id} to branch")
-        obj = {"name": name, "snapshot_id": snapshot_id,
-               "created_at": time.time()}
-        self._write_json_atomic(self._ref_path(name), obj)
-        return obj
+        return self._set_ref(name, snapshot_id)
 
     def branches(self) -> dict[str, int]:
-        out = {}
-        for f in sorted(os.listdir(self.manifest_dir)):
-            if f.startswith("branch-") and f.endswith(".json"):
-                with open(os.path.join(self.manifest_dir, f)) as fh:
-                    o = json.load(fh)
-                if o["name"] != "main":
-                    out[o["name"]] = o["snapshot_id"]
-        return out
+        return {o["name"]: o["snapshot_id"] for o in self._refs("branch")
+                if o["name"] != "main"}
 
     def _main_pin(self) -> int | None:
         p = self._ref_path("main")
@@ -1291,6 +1312,27 @@ class IcebergLike:
             raise ValueError(f"no branch {name!r}; have {sorted(b)}")
         return b[name]
 
+    def _resolve_read(self, snapshot_id: int | None = None,
+                      tag: str | None = None,
+                      branch: str | None = None) -> int | None:
+        """The snapshot a reader sees, the one place every reader maps
+        its ref arguments: at most one of ``snapshot_id`` / ``tag`` /
+        ``branch``; with none, MAIN's state — the pin while a branch
+        is ahead (per-file sequence scoping then hides the branch's
+        appends), else None (the newest snapshot)."""
+        given = [n for n, x in (("snapshot_id", snapshot_id),
+                                ("tag", tag), ("branch", branch))
+                 if x is not None]
+        if len(given) > 1:
+            raise ValueError("pass at most one of snapshot_id/tag/"
+                             f"branch, not both {given[0]} and"
+                             f" {given[1]}")
+        if tag is not None:
+            return self._resolve_tag(tag)
+        if branch is not None:
+            return self._resolve_branch(branch)
+        return self._main_pin() if snapshot_id is None else snapshot_id
+
     def write_to_branch(self, name: str, df: DataFrame,
                         **write_kwargs) -> dict:
         """Append-commit ``df`` under branch ``name``: main readers
@@ -1305,10 +1347,7 @@ class IcebergLike:
                 f" snapshot {latest}; only the tip branch is writable")
         if self._main_pin() is None:
             # first divergent commit: freeze main where it is
-            self._write_json_atomic(
-                self._ref_path("main"),
-                {"name": "main", "snapshot_id": head,
-                 "created_at": time.time()})
+            self._set_ref("main", head)
         if write_kwargs.pop("append", True) is not True:
             raise ValueError("branch commits are append-mode")
         self._branch_writer = name
@@ -1321,10 +1360,7 @@ class IcebergLike:
                 **write_kwargs)
         finally:
             self._branch_writer = None
-        self._write_json_atomic(
-            self._ref_path(name),
-            {"name": name, "snapshot_id": snap["snapshot_id"],
-             "created_at": time.time()})
+        self._set_ref(name, snap["snapshot_id"])
         return snap
 
     def fast_forward(self, name: str, drop: bool = True) -> dict:
@@ -1344,9 +1380,7 @@ class IcebergLike:
         if head == latest and os.path.exists(main_path):
             os.remove(main_path)  # main floats with latest again
         elif head != latest:
-            self._write_json_atomic(
-                main_path, {"name": "main", "snapshot_id": head,
-                            "created_at": time.time()})
+            self._set_ref("main", head)
         if drop and name != "main":
             self.drop_branch(name)
         return {"main": head, "from_branch": name}
@@ -1498,8 +1532,8 @@ class IcebergLike:
                 dropped_parts.append(k)
                 continue
             m = self.manifest(k) or {}
-            late = {f for f, s_ in (m.get("file_seq") or {}).items()
-                    if int(s_) > snapshot_id}
+            late = {f for f in m.get("files", [])
+                    if self._file_seq(m, f) > snapshot_id}
             if not late:
                 continue
             self._forget_files(k, m, late)
@@ -1556,10 +1590,7 @@ class IcebergLike:
         for name in moved:
             # it holds the target's state and is the newest snapshot,
             # so the branch stays the writable tip
-            self._write_json_atomic(
-                self._ref_path(name),
-                {"name": name, "snapshot_id": snapshot["snapshot_id"],
-                 "created_at": time.time()})
+            self._set_ref(name, snapshot["snapshot_id"])
         return snapshot
 
     def compact(self, spark: SparkSession,
@@ -1622,9 +1653,7 @@ class IcebergLike:
             if len(files) < min_files:
                 continue
             m = self.manifest(k) or {}
-            fseq = m.get("file_seq") or {}
-            seqs = {int(fseq.get(f, m.get("data_snapshot_id", 0)))
-                    for f in files}
+            seqs = {self._file_seq(m, f) for f in files}
             if dels and len(seqs) > 1:
                 # compacting mixes files of different sequence
                 # numbers into one; a pending delete sequenced
@@ -1668,10 +1697,8 @@ class IcebergLike:
             # (uniform when deletes are pending — the todo guard;
             # otherwise only future deletes matter and they
             # outsequence any current value)
-            old_fseq = m.get("file_seq") or {}
-            seq = max((int(old_fseq.get(f, m.get("data_snapshot_id",
-                                                 0)))
-                       for f in old_files), default=0)
+            seq = max((self._file_seq(m, f) for f in old_files),
+                      default=0)
             m.update({"files": new_files, "compacted_by": run_id,
                       "file_seq": {f: seq for f in new_files},
                       "files_before_compaction": len(old_files)})
@@ -1731,30 +1758,11 @@ class IcebergLike:
         list position. Time travel filters by PER-FILE sequence
         number, not just the partition set — append mode adds
         later-sequenced files into already-committed partition dirs,
-        and a snapshot read must not see them."""
-        if sum(x is not None for x in (snapshot_id, tag, branch)) > 1:
-            raise ValueError("pass at most one of snapshot_id/tag/"
-                             "branch")
-        if tag is not None:
-            snapshot_id = self._resolve_tag(tag)
-        elif branch is not None:
-            snapshot_id = self._resolve_branch(branch)
-        elif snapshot_id is None:
-            # plain read = MAIN state: while a branch is ahead, main
-            # is pinned and the read time-travels to the pin (per-file
-            # sequence scoping hides the branch's appends)
-            snapshot_id = self._main_pin()
-        deletes = (self._live_deletes(snapshot_id) if apply_deletes
-                   else ([], []))
-        if snapshot_id is None and not any(deletes):
-            # fast path: a plain latest-read with nothing to scope
-            # stays a bare scan (no annotation join in the plan)
-            return self._scan(spark, self._snapshot(None))
-        ann = self._read_annotated(spark, snapshot_id,
-                                   with_pos=bool(deletes[1]))
-        if "_dseq" not in ann.columns:
-            return ann  # empty-snapshot frame (no data to scan)
-        return self._unannotate(self._drop_deleted(spark, ann, deletes))
+        and a snapshot read must not see them. With no ref the read
+        is MAIN's state: while a branch is diverged, main's pin."""
+        return self._live_scan(
+            spark, self._resolve_read(snapshot_id, tag, branch),
+            apply_deletes=apply_deletes)
 
     def _scan(self, spark: SparkSession, snap: dict | None,
               paths: list[str] | None = None) -> DataFrame:
@@ -1778,24 +1786,39 @@ class IcebergLike:
             reader = reader.schema(schema)
         return reader.parquet(*paths)
 
-    def _read_annotated(self, spark: SparkSession,
-                        snapshot_id: int | None,
-                        with_pos: bool = False) -> DataFrame:
-        """The scan every scoped read shares: ``_scan`` plus the
-        ``_dseq`` per-file sequence annotation (attached HERE because
-        ``input_file_name()`` rejects multi-source plans), and — for
-        time travel — the partition AND file-sequence filters of the
-        requested snapshot. Callers drop ``_dseq`` when done; an
-        empty snapshot's frame comes back unannotated."""
+    def _live_scan(self, spark: SparkSession, snapshot_id: int | None,
+                   paths: list[str] | None = None,
+                   apply_deletes: bool = True,
+                   keep_pos: bool = False) -> DataFrame:
+        """The scan every reader shares: the rows of ``paths``
+        (default: every partition) live at the resolved
+        ``snapshot_id`` (None = newest). Time travel keeps only that
+        snapshot's partitions and files sequenced at-or-before it;
+        the live deletes at-or-before it are anti-joined. Both need
+        the ``_dseq`` per-file sequence annotation, attached HERE on
+        the scan because ``input_file_name()`` rejects multi-source
+        plans. ``keep_pos`` returns the annotated frame (``_dseq``,
+        ``_fname``, ``_pos``) for callers that address rows by
+        position. A plain latest read with nothing to scope stays a
+        bare scan (no annotation join in the plan), and nothing to
+        scan gives ``_scan``'s empty frame, unannotated."""
         snap = self._snapshot(snapshot_id)
-        df = self._scan(spark, snap)
-        if snap is not None and not snap["committed_keys"]:
+        df = self._scan(spark, snap, paths)
+        deletes = (self._live_deletes(snapshot_id) if apply_deletes
+                   else ([], []))
+        empty = (not paths if paths is not None
+                 else snap is not None and not snap["committed_keys"])
+        if empty or (snapshot_id is None and not any(deletes)
+                     and not keep_pos):
             return df
-        if snapshot_id is not None:
+        if paths is None and snapshot_id is not None:
             df = df.filter(F.col(PART_COL).isin(
                 [int(k) for k in snap["committed_keys"]]))
-        return self._annotate_seq(spark, df, keep_pos=with_pos,
-                                  upto=snapshot_id)
+        ann = self._annotate_seq(spark, df,
+                                 keep_pos=keep_pos or bool(deletes[1]),
+                                 upto=snapshot_id)
+        ann = self._drop_deleted(spark, ann, deletes)
+        return ann if keep_pos else self._unannotate(ann)
 
     # -- equality deletes (merge-on-read) -------------------------------------
 
@@ -1815,13 +1838,6 @@ class IcebergLike:
                         self.delete_dir, s["delete_file"]))):
                 (pos if op == "pos_delete" else eq).append(s)
         return eq, pos
-
-    # one-flavor views of ``_live_deletes``
-    def _delete_snapshots(self, upto: int | None = None) -> list[dict]:
-        return self._live_deletes(upto)[0]
-
-    def _pos_delete_snapshots(self, upto: int | None = None) -> list[dict]:
-        return self._live_deletes(upto)[1]
 
     def _drop_deleted(self, spark: SparkSession, ann: DataFrame,
                       deletes: tuple[list[dict], list[dict]]
@@ -1843,19 +1859,16 @@ class IcebergLike:
     def _file_seq_df(self, spark: SparkSession) -> DataFrame:
         """(file name, sequence number) dimension from the manifests —
         per-FILE sequencing (Iceberg's model), so appended files in a
-        mixed-age partition scope deletes independently. Files
-        predating the field read their partition's data_snapshot_id,
-        else 0 (oldest: every delete applies)."""
+        mixed-age partition scope deletes independently
+        (``_file_seq``)."""
         rows = []
         for k in sorted(self.committed_keys()):
             m = self.manifest(k) or {}
-            fseq = m.get("file_seq") or {}
-            base = int(m.get("data_snapshot_id", 0))
             for f in m.get("files", []):
                 # keyed by (partition, name): one writer task serves
                 # several partition dirs with the SAME file name, so
                 # the name alone is not unique table-wide
-                rows.append((k, f, int(fseq.get(f, base))))
+                rows.append((k, f, self._file_seq(m, f)))
         return spark.createDataFrame(
             rows or [(None, None, None)],
             f"{PART_COL} int, _fname string, _dseq long").filter(
@@ -1894,22 +1907,14 @@ class IcebergLike:
         by_cols: dict[tuple[str, ...], list[dict]] = {}
         for s in dels:
             by_cols.setdefault(tuple(s["eq_cols"]), []).append(s)
-        out = []
-        for eq_cols, group in by_cols.items():
-            frames = []
-            for s in group:
-                frames.append(
-                    spark.read.parquet(os.path.join(
-                        self.delete_dir, s["delete_file"]))
-                    .select(*[F.col(c).alias(f"_del_{c}")
-                              for c in eq_cols],
-                            F.lit(int(s["snapshot_id"])).cast("long")
-                            .alias("_delseq")))
-            d = frames[0]
-            for f in frames[1:]:
-                d = d.unionByName(f)
-            out.append((eq_cols, d))
-        return out
+        return [(eq_cols, reduce(DataFrame.unionByName, [
+            spark.read.parquet(os.path.join(self.delete_dir,
+                                            s["delete_file"]))
+            .select(*[F.col(c).alias(f"_del_{c}") for c in eq_cols],
+                    F.lit(int(s["snapshot_id"])).cast("long")
+                    .alias("_delseq"))
+            for s in group]))
+            for eq_cols, group in by_cols.items()]
 
     @staticmethod
     def _del_cond(eq_cols: tuple[str, ...]):
@@ -1933,7 +1938,7 @@ class IcebergLike:
         """Union the position-delete files into one dimension frame
         (each is a takedown-scale row list, broadcastable next to the
         data) carrying its snapshot id as ``_pdelseq``."""
-        frames = [
+        return reduce(DataFrame.unionByName, [
             spark.read.parquet(os.path.join(self.delete_dir,
                                             s["delete_file"]))
             .select(F.col(PART_COL).alias("_pd_part"),
@@ -1941,11 +1946,7 @@ class IcebergLike:
                     F.col("_pos").alias("_pd_pos"),
                     F.lit(int(s["snapshot_id"])).cast("long")
                     .alias("_pdelseq"))
-            for s in pdels]
-        d = frames[0]
-        for f in frames[1:]:
-            d = d.unionByName(f)
-        return d
+            for s in pdels])
 
     @staticmethod
     def _pos_cond():
@@ -1988,11 +1989,10 @@ class IcebergLike:
         self._check_main_writable()
         run_id = run_id or f"posdelete-{int(time.time() * 1000)}"
         snap_id = self._next_snapshot_id()
-        ann = self._read_annotated(spark, None, with_pos=True)
-        if "_dseq" not in ann.columns:
+        ann = self._live_scan(spark, None, keep_pos=True)
+        if "_pos" not in ann.columns:
             return {"run_id": run_id, "n_delete_rows": 0,
                     "noop": "empty table"}
-        ann = self._drop_deleted(spark, ann, self._live_deletes())
         cond_col = F.expr(cond) if isinstance(cond, str) else cond
         hits = ann.filter(cond_col).select(PART_COL, "_fname", "_pos")
         # run-unique name, written once, never renamed (delete_rows's
@@ -2152,51 +2152,44 @@ class IcebergLike:
         snaps = {s["snapshot_id"] for s in self.snapshots()}
         if from_snapshot_id not in snaps:
             raise ValueError(f"no snapshot {from_snapshot_id}")
+        to_snapshot_id = self._resolve_read(to_snapshot_id)
         if to_snapshot_id is None:
             to_snapshot_id = max(snaps)
         if to_snapshot_id not in snaps:
             raise ValueError(f"no snapshot {to_snapshot_id}")
         return from_snapshot_id, to_snapshot_id
 
-    def _window_files(self, lo_excl: int, hi_incl: int
-                      ) -> dict[int, set[str]]:
-        """Live data files whose sequence number falls in
-        (lo_excl, hi_incl], per partition — FILE-granular (append mode
-        adds files to existing partitions, so a partition-set diff
-        alone under-reports)."""
-        out: dict[int, set[str]] = {}
+    def _window_files(self, lo_excl: int, hi_incl: int) -> list[str]:
+        """Paths of the live data files whose sequence number falls in
+        (lo_excl, hi_incl] — FILE-granular (append mode adds files to
+        existing partitions, so a partition-set diff alone
+        under-reports)."""
+        out = []
         for k in sorted(self.committed_keys()):
             m = self.manifest(k) or {}
-            fseq = m.get("file_seq") or {}
-            base = int(m.get("data_snapshot_id", 0))
-            hits = {f for f in m.get("files", [])
-                    if lo_excl < int(fseq.get(f, base)) <= hi_incl}
-            if hits:
-                out[k] = hits
+            out += [os.path.join(self._part_dir(k), f)
+                    for f in m.get("files", [])
+                    if lo_excl < self._file_seq(m, f) <= hi_incl]
         return out
 
     def read_incremental(self, spark: SparkSession, from_snapshot_id: int,
                          to_snapshot_id: int | None = None) -> DataFrame:
         """Rows appended AFTER ``from_snapshot_id`` up to
-        ``to_snapshot_id`` (default: latest) — the Iceberg
-        incremental-scan analog, FILE-granular: new partitions and
-        files appended into existing partitions both count (the row
-        filter is simply ``_dseq`` in the window — the same per-file
-        sequence annotation delete scoping uses, attached once at
-        scan level). Deletes in the window apply under the same
-        sequence rule as ``read``. Caveat shared with ``read``: files
-        rewritten by compaction/materialization carry merged sequence
-        numbers (documented there)."""
+        ``to_snapshot_id`` (default: main's head — while a branch is
+        diverged, main's pin, so the branch's unpublished commits stay
+        out) — the Iceberg incremental-scan analog, FILE-granular: new
+        partitions and files appended into existing partitions both
+        count (the scan reads exactly the files whose sequence number
+        falls in the window). Deletes in the window apply under the
+        same sequence rule as ``read``. Caveat shared with ``read``:
+        files rewritten by compaction/materialization carry merged
+        sequence numbers (documented there)."""
         a, b = self._resolve_window(from_snapshot_id, to_snapshot_id)
         files = self._window_files(a, b)
         if not files:
             return (self.read(spark, snapshot_id=b)
                     .filter(F.lit(False)))
-        deletes = self._live_deletes(b)
-        df = (self._read_annotated(spark, b, with_pos=bool(deletes[1]))
-              .filter(F.col(PART_COL).isin(list(files)))
-              .filter(F.col("_dseq") > a))
-        return self._unannotate(self._drop_deleted(spark, df, deletes))
+        return self._live_scan(spark, b, files)
 
     def read_changes(self, spark: SparkSession, from_snapshot_id: int,
                      to_snapshot_id: int | None = None) -> DataFrame:
@@ -2213,9 +2206,11 @@ class IcebergLike:
           emits delete(old) + insert(new), the classic changelog
           pair).
 
-        Valid while the window's delete files are retained
-        (``materialize_deletes`` expires them — documented deviation
-        shared with time travel)."""
+        ``to_snapshot_id`` defaults to main's head, as in
+        ``read_incremental``: while a branch is diverged, the changes
+        stop at main's pin. Valid while the window's delete files are
+        retained (``materialize_deletes`` expires them — documented
+        deviation shared with time travel)."""
         a, b = self._resolve_window(from_snapshot_id, to_snapshot_id)
         inserts = (self.read_incremental(spark, a, b)
                    .withColumn("_change_type", F.lit("insert")))
@@ -2226,10 +2221,7 @@ class IcebergLike:
         # multi-source plans), then derive visible-at-a (anti-join
         # deletes <= a) and the tombstoned set (semi-join window
         # deletes) from the same annotated frame
-        ann = self._drop_deleted(
-            spark, self._read_annotated(spark, a, with_pos=bool(pdels)),
-            ([s for s in dels if s["snapshot_id"] <= a],
-             [s for s in pdels if s["snapshot_id"] <= a]))
+        ann = self._live_scan(spark, a, keep_pos=True)
         hits = [ann.join(F.broadcast(d), self._del_cond(eq_cols),
                          "left_semi")
                 for eq_cols, d in self._delete_dims(spark,
@@ -2239,10 +2231,8 @@ class IcebergLike:
                 F.broadcast(self._pos_dim(spark, window_pos)),
                 self._pos_cond(), "left_semi"))
         if hits:
-            deleted = hits[0]
-            for h in hits[1:]:
-                deleted = deleted.unionByName(h)
-            deleted = self._unannotate(deleted).distinct()
+            deleted = self._unannotate(
+                reduce(DataFrame.unionByName, hits)).distinct()
         else:
             deleted = self._unannotate(ann).filter(F.lit(False))
         deleted = deleted.withColumn("_change_type", F.lit("delete"))
@@ -2282,15 +2272,15 @@ class IcebergLike:
 
         ``snapshot_id`` / ``tag`` scope the pruned scan to a
         historical snapshot (pruning composed with time travel — the
-        'reproduce the exact training-corpus slice' read). Pruning
-        stays conservative under time travel: later appends only
-        WIDEN a partition's recorded min/max, so stale stats can keep
-        an extra partition but never wrongly drop one.
+        'reproduce the exact training-corpus slice' read). With
+        neither, the scan is MAIN's state, as in ``read``: while a
+        branch is diverged, main's pin, so the branch's unpublished
+        partitions and files are neither scanned nor counted in the
+        report. Pruning stays conservative under time travel: later
+        appends only WIDEN a partition's recorded min/max, so stale
+        stats can keep an extra partition but never wrongly drop one.
         """
-        if tag is not None:
-            if snapshot_id is not None:
-                raise ValueError("pass snapshot_id or tag, not both")
-            snapshot_id = self._resolve_tag(tag)
+        snapshot_id = self._resolve_read(snapshot_id, tag)
         snap = self._snapshot(snapshot_id)
         if preds is None:
             if col is None:
@@ -2300,8 +2290,8 @@ class IcebergLike:
             raise ValueError("pass col or preds, not both")
         scan_keys = sorted(self.committed_keys())
         if snapshot_id is not None:
-            scan_keys = [k for k in scan_keys
-                         if k in {int(x) for x in snap["committed_keys"]}]
+            as_of = {int(x) for x in snap["committed_keys"]}
+            scan_keys = [k for k in scan_keys if k in as_of]
         # hidden-partitioning pruning: if the table has a partition
         # spec, predicates on the spec's SOURCE columns eliminate
         # partitions by key arithmetic alone (partition_spec.py) —
@@ -2318,16 +2308,7 @@ class IcebergLike:
                 spec_pruned.append(k)
                 continue
             stats = (self.manifest(k) or {}).get("col_stats", {})
-            drop = False
-            for c, (lo_, hi_) in preds.items():
-                st = stats.get(c)
-                if st is None or st["min"] is None:
-                    continue
-                if ((lo_ is not None and st["max"] < lo_)
-                        or (hi_ is not None and st["min"] > hi_)):
-                    drop = True
-                    break
-            (pruned if drop else kept).append(k)
+            (pruned if _stats_miss(stats, preds) else kept).append(k)
         # file-level skipping WITHIN kept partitions: per-file footer
         # bounds recorded at commit time are immutable (files never
         # change in place), so unlike the partition entry they stay
@@ -2357,15 +2338,10 @@ class IcebergLike:
                 sources.append(self._part_dir(k))
                 continue
             for f in names:
-                drop = False
-                for c, (lo_, hi_) in preds.items():
-                    st = (fstats.get(f) or {}).get(c)
-                    if st is None or st["min"] is None:
-                        continue
-                    if ((lo_ is not None and st["max"] < lo_)
-                            or (hi_ is not None and st["min"] > hi_)):
-                        drop = True
-                        break
+                if (snapshot_id is not None
+                        and self._file_seq(m, f) > snapshot_id):
+                    continue  # not yet written as of the snapshot
+                drop = _stats_miss(fstats.get(f) or {}, preds)
                 if not drop and points and f in fblooms:
                     for c, pv in points.items():
                         ent = fblooms[f].get(c)
@@ -2388,18 +2364,9 @@ class IcebergLike:
                   "files_kept": files_kept,
                   "files_pruned": files_pruned,
                   "files_pruned_bloom": files_pruned_bloom}
-        df = self._scan(spark, snap, sources)
+        df = self._live_scan(spark, snapshot_id, sources)
         if not sources:
             return df, report
-        deletes = self._live_deletes(snapshot_id)
-        if snapshot_id is not None or any(deletes):
-            # drop later-sequenced appends inside kept partition dirs
-            # (time travel), then the deletes at-or-before the snapshot
-            df = self._unannotate(self._drop_deleted(
-                spark, self._annotate_seq(spark, df,
-                                          keep_pos=bool(deletes[1]),
-                                          upto=snapshot_id),
-                deletes))
         for c, (lo_, hi_) in preds.items():
             if lo_ is not None:
                 df = df.filter(F.col(c) >= F.lit(lo_))
@@ -2472,17 +2439,15 @@ def _meta_files(self, spark: SparkSession) -> DataFrame:
     rows = []
     for k in sorted(self.committed_keys()):
         m = self.manifest(k) or {}
-        fseq = m.get("file_seq") or {}
         fstats = m.get("file_stats") or {}
         fblooms = m.get("file_blooms") or {}
-        base = int(m.get("data_snapshot_id", 0))
         for f in m.get("files", []):
             p = os.path.join(self._part_dir(k), f)
             try:
                 size = os.path.getsize(p)
             except OSError:
                 size = None
-            rows.append((k, f, int(fseq.get(f, base)), size,
+            rows.append((k, f, self._file_seq(m, f), size,
                          json.dumps(fstats[f], sort_keys=True)
                          if f in fstats else None,
                          ",".join(sorted(fblooms[f]))
@@ -2517,18 +2482,9 @@ def _meta_tags(self, spark: SparkSession) -> DataFrame:
     """Iceberg ``t.refs`` analog: named refs as a DataFrame —
     ``type`` distinguishes immutable tags from mutable branches
     (including a pinned main while a branch is diverged)."""
-    rows = []
-    for f in sorted(os.listdir(self.manifest_dir)):
-        if f.startswith("tag-") and f.endswith(".json"):
-            kind = "tag"
-        elif f.startswith("branch-") and f.endswith(".json"):
-            kind = "branch"
-        else:
-            continue
-        with open(os.path.join(self.manifest_dir, f)) as fh:
-            o = json.load(fh)
-        rows.append((str(o["name"]), kind, int(o["snapshot_id"]),
-                     float(o.get("created_at", 0.0))))
+    rows = [(str(o["name"]), kind, int(o["snapshot_id"]),
+             float(o.get("created_at", 0.0)))
+            for kind in ("branch", "tag") for o in self._refs(kind)]
     return spark.createDataFrame(
         rows or [(None, None, None, None)],
         "name string, type string, snapshot_id long,"
