@@ -86,6 +86,17 @@ def test_main_readers_hide_branch_commits(spark, table):
         range(100, 130))
 
 
+
+def test_tag_defaults_to_main_while_diverged(spark, table):
+    """A tag made with no snapshot id while a branch is diverged names
+    main's state, not the branch's unpublished head."""
+    main = table.snapshots()[-1]["snapshot_id"]
+    table.create_branch("b")
+    table.write_to_branch("b", _wave(spark, 100, 115, bucket_offset=4))
+    table.tag("v1")
+    assert table.tags()["v1"] == main
+    assert _ids(table.read(spark, tag="v1")) == list(range(100))
+
 def test_plain_write_refused_while_diverged(spark, table):
     table.create_branch("audit")
     table.write_to_branch("audit", _wave(spark, 100, 120))

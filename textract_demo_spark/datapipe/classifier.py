@@ -196,17 +196,6 @@ TEXT_CLF_WEIGHTS_MICRO: list[int] = [
 ]
 
 
-def _freeze() -> None:
-    """Populate the frozen weights at import from the deterministic
-    trainer IF no literal snapshot is present. The committed source
-    carries the literal list (see below) so importing the module does
-    not pay a training run; this function exists for regeneration."""
-    global TEXT_CLF_BIAS_MICRO, TEXT_CLF_WEIGHTS_MICRO
-    b, w = train_text_classifier()
-    TEXT_CLF_BIAS_MICRO = b
-    TEXT_CLF_WEIGHTS_MICRO = w
-
-
 def weights_sql_array(weights: list[int] | None = None,
                       dialect: str = "spark") -> str:
     """The weight table as a plan-time literal array/list SQL

@@ -21,7 +21,11 @@ name). Numeric columns are cast so Spark and DuckDB agree on type
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import os
+import shutil
+import tempfile
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 import pandas as pd  # module-level: pandas_udf resolves pd.Series
                      # hints via module globals under future-annotations
@@ -43,6 +47,50 @@ def query(name: str, oracle: str | None = None):
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+# Queries that stage files, drain a stream or commit a table work in a
+# scratch dir and collect their (small) result before it is removed.
+
+@contextmanager
+def _scratch(prefix: str) -> Iterator[str]:
+    """A fresh temp dir, removed on exit even when the body raises."""
+    base = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield base
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def _stage_waves(spark: SparkSession, base: str, waves, schema,
+                 max_files: int | None = None) -> DataFrame:
+    """Write each ``(name, df)`` of ``waves`` as one parquet file into
+    ``base/in`` (``name-i.parquet``, in wave order, so each wave lands
+    after the one before it) and return the file-source stream over
+    that dir. ``max_files`` is maxFilesPerTrigger: 1 makes each wave
+    its own micro-batch; None leaves Spark's default."""
+    in_dir = os.path.join(base, "in")
+    os.makedirs(in_dir)
+    stage = os.path.join(base, "stage")
+    for name, df in waves:
+        df.coalesce(1).write.mode("overwrite").parquet(stage)
+        for i, f in enumerate(sorted(os.listdir(stage))):
+            if f.endswith(".parquet"):
+                shutil.move(os.path.join(stage, f),
+                            os.path.join(in_dir, f"{name}-{i}.parquet"))
+    reader = spark.readStream.schema(schema)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    return reader.parquet(in_dir)
+
+
+def _drain(q) -> None:
+    """Wait for an availableNow query to finish. One that does not
+    finish in 600 s is stopped and raises: reading its partial sink
+    would be a silent truncation."""
+    if not q.awaitTermination(600):
+        q.stop()
+        raise RuntimeError("stream drain did not finish in 600 s")
 
 
 def _docs_as_turns(docs: DataFrame, payload_col) -> DataFrame:
@@ -984,81 +1032,42 @@ def streaming_extract_availablenow(spark: SparkSession,
     like ``extract_plain_identity``), so the oracle is a plain SELECT.
     Checkpoint-resume + batch-equality semantics are asserted in
     tests/test_streaming.py."""
-    import os
-    import shutil
-    import tempfile
-
-    from ..streaming.stream import (read_transcripts_stream,
-                                    start_to_parquet, streaming_pipeline)
+    from ..streaming.stream import start_to_parquet, streaming_pipeline
+    from .schemas import TRANSCRIPTS_SCHEMA
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     turns = _docs_as_turns(docs, F.col("text")).drop("doc_id")
-    base = tempfile.mkdtemp(prefix="stream_q_")
-    try:
-        in_dir = os.path.join(base, "in")
-        os.makedirs(in_dir)
-        for name, half in (("a", turns.filter(F.col("conv_id")
-                                              .substr(-1, 1) < "5")),
-                           ("b", turns.filter(F.col("conv_id")
-                                              .substr(-1, 1) >= "5"))):
-            stage = os.path.join(base, f"stage_{name}")
-            half.coalesce(1).write.mode("overwrite").parquet(stage)
-            for i, f in enumerate(sorted(os.listdir(stage))):
-                if f.endswith(".parquet"):
-                    shutil.move(os.path.join(stage, f),
-                                os.path.join(in_dir, f"{name}-{i}.parquet"))
-        stream = read_transcripts_stream(spark, in_dir)
+    last = F.col("conv_id").substr(-1, 1)
+    with _scratch("stream_q_") as base:
+        stream = _stage_waves(spark, base,
+                              [("a", turns.filter(last < "5")),
+                               ("b", turns.filter(last >= "5"))],
+                              TRANSCRIPTS_SCHEMA, max_files=32)
         results = streaming_pipeline(stream, salt=4, watermark="3650 days")
-        q = start_to_parquet(results, os.path.join(base, "out"),
-                             os.path.join(base, "ckpt"))
-        drained = q.awaitTermination(600)
-        if not drained:  # slow drain => partial sink would be a silent
-            q.stop()     # truncation; fail loudly instead
-            raise RuntimeError("streaming drain did not finish in 600 s")
+        _drain(start_to_parquet(results, os.path.join(base, "out"),
+                                os.path.join(base, "ckpt")))
         rows = (spark.read.schema(results.schema)
                 .parquet(os.path.join(base, "out"))
                 .select("conv_id", "turn_idx", "status", "kind",
                         "main_text").collect())
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    # materialized before the temp sink is deleted; tiny (200 rows)
-    out_schema = ("conv_id string, turn_idx int, status string, "
-                  "kind string, main_text string")
-    return spark.createDataFrame(rows, schema=out_schema)
+    return spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, status string,"
+              " kind string, main_text string")
 
 
 def _drain_stream_to_rows(spark: SparkSession, input_df: DataFrame,
                           op, out_schema: str) -> DataFrame:
-    """Stage ``input_df`` as a file-source stream, drain it through
-    the stateful operator ``op`` with trigger(availableNow) into a
-    checkpointed parquet sink, and return the materialized rows (the
-    pattern of ``streaming_extract_availablenow``)."""
-    import os
-    import shutil
-    import tempfile
-    base = tempfile.mkdtemp(prefix="stateful_q_")
-    try:
-        in_dir = os.path.join(base, "in")
-        os.makedirs(in_dir)
-        stage = os.path.join(base, "stage")
-        input_df.coalesce(1).write.mode("overwrite").parquet(stage)
-        for i, f in enumerate(sorted(os.listdir(stage))):
-            if f.endswith(".parquet"):
-                shutil.move(os.path.join(stage, f),
-                            os.path.join(in_dir, f"in-{i}.parquet"))
-        stream = (spark.readStream.schema(input_df.schema)
-                  .parquet(in_dir))
-        q = (op(stream).writeStream.format("parquet")
-             .option("path", os.path.join(base, "out"))
-             .option("checkpointLocation", os.path.join(base, "ckpt"))
-             .outputMode("append").trigger(availableNow=True).start())
-        drained = q.awaitTermination(600)
-        if not drained:
-            q.stop()
-            raise RuntimeError("stateful drain did not finish in 600 s")
+    """Stage ``input_df`` as a one-file stream, drain it through the
+    stateful operator ``op`` into a checkpointed parquet sink, and
+    return the collected rows. Used by ``streaming_ttl_cache`` and
+    ``streaming_review_wait``."""
+    from ..streaming.stream import start_to_parquet
+    with _scratch("stateful_q_") as base:
+        stream = _stage_waves(spark, base, [("in", input_df)],
+                              input_df.schema)
+        _drain(start_to_parquet(op(stream), os.path.join(base, "out"),
+                                os.path.join(base, "ckpt")))
         rows = (spark.read.schema(out_schema)
                 .parquet(os.path.join(base, "out")).collect())
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, schema=out_schema)
 
 
@@ -1428,10 +1437,6 @@ def streaming_dedup_incremental(spark: SparkSession,
     are scoped to a micro-batch, so the oracle adds the parity
     condition — the only semantic difference between the batch and
     streaming forms, stated exactly."""
-    import os
-    import shutil
-    import tempfile
-
     from ..datapipe.dedup import build_minhash_index
     from ..streaming.stream import start_incremental_dedup
     docs = _t(spark, sf_dir, "documents")
@@ -1449,37 +1454,23 @@ def streaming_dedup_incremental(spark: SparkSession,
                  .select((F.col("doc_id") + 2000000).alias("doc_id"),
                          "text")))
     idx = build_minhash_index(corpus, num_hashes=32).persist()
-    base = tempfile.mkdtemp(prefix="stream_dedup_q_")
     try:
-        in_dir = os.path.join(base, "in")
-        os.makedirs(in_dir)
-        for name, parity in (("a", 0), ("b", 1)):
-            stage = os.path.join(base, f"stage_{name}")
-            (batch.filter(F.col("doc_id") % 2 == parity)
-             .coalesce(1).write.mode("overwrite").parquet(stage))
-            for i, f in enumerate(sorted(os.listdir(stage))):
-                if f.endswith(".parquet"):
-                    shutil.move(os.path.join(stage, f),
-                                os.path.join(in_dir,
-                                             f"{name}-{i}.parquet"))
-        stream = (spark.readStream.schema(batch.schema)
-                  .option("maxFilesPerTrigger", 1).parquet(in_dir))
-        q = start_incremental_dedup(
-            stream, idx, os.path.join(base, "out"),
-            os.path.join(base, "ckpt"),
-            num_hashes=32, bands=16, threshold=0.5)
-        drained = q.awaitTermination(600)
-        if not drained:
-            q.stop()
-            raise RuntimeError("dedup stream drain did not finish in"
-                               " 600 s")
-        rows = (spark.read.parquet(os.path.join(base, "out"))
-                .select("doc_id", "match_id",
-                        F.floor(F.lit(1000000) * F.col("jaccard"))
-                         .cast("long").alias("jaccard_bp"),
-                        "match_src").collect())
+        with _scratch("stream_dedup_q_") as base:
+            stream = _stage_waves(
+                spark, base,
+                [(name, batch.filter(F.col("doc_id") % 2 == parity))
+                 for name, parity in (("a", 0), ("b", 1))],
+                batch.schema, max_files=1)
+            _drain(start_incremental_dedup(
+                stream, idx, os.path.join(base, "out"),
+                os.path.join(base, "ckpt"),
+                num_hashes=32, bands=16, threshold=0.5))
+            rows = (spark.read.parquet(os.path.join(base, "out"))
+                    .select("doc_id", "match_id",
+                            F.floor(F.lit(1000000) * F.col("jaccard"))
+                             .cast("long").alias("jaccard_bp"),
+                            "match_src").collect())
     finally:
-        shutil.rmtree(base, ignore_errors=True)
         idx.unpersist()
     return spark.createDataFrame(
         rows, schema="doc_id long, match_id long, jaccard_bp long,"
@@ -3441,10 +3432,6 @@ def streaming_dsir_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     frozen-model edge the batch form never exercises: batch features
     hashing to buckets the raw corpus never observed contribute
     delta 0 (only norm_bits)."""
-    import os
-    import shutil
-    import tempfile
-
     from ..datapipe.dsir import dsir_bucket_model
     from ..streaming.stream import start_dsir_scoring
     docs = _t(spark, sf_dir, "documents")
@@ -3465,36 +3452,23 @@ def streaming_dsir_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
                  docs.filter(F.col("doc_id") % 7 == 2)
                  .select((F.col("doc_id") + 2000000).alias("doc_id"),
                          "text")))
-    base = tempfile.mkdtemp(prefix="stream_dsir_q_")
     try:
-        in_dir = os.path.join(base, "in")
-        os.makedirs(in_dir)
-        for name, parity in (("a", 0), ("b", 1)):
-            stage = os.path.join(base, f"stage_{name}")
-            (batch.filter(F.col("doc_id") % 2 == parity)
-             .coalesce(1).write.mode("overwrite").parquet(stage))
-            for i, f in enumerate(sorted(os.listdir(stage))):
-                if f.endswith(".parquet"):
-                    shutil.move(os.path.join(stage, f),
-                                os.path.join(in_dir,
-                                             f"{name}-{i}.parquet"))
-        stream = (spark.readStream.schema(batch.schema)
-                  .option("maxFilesPerTrigger", 1).parquet(in_dir))
-        q = start_dsir_scoring(
-            stream, raw_model, target_model, os.path.join(base, "out"),
-            os.path.join(base, "ckpt"), num_buckets=64, hash_mode="md5")
-        drained = q.awaitTermination(600)
-        if not drained:
-            q.stop()
-            raise RuntimeError("dsir stream drain did not finish in"
-                               " 600 s")
-        rows = (spark.read.parquet(os.path.join(base, "out"))
-                .select("doc_id", "n_feats", "dsir_bits")
-                .collect())
+        with _scratch("stream_dsir_q_") as base:
+            stream = _stage_waves(
+                spark, base,
+                [(name, batch.filter(F.col("doc_id") % 2 == parity))
+                 for name, parity in (("a", 0), ("b", 1))],
+                batch.schema, max_files=1)
+            _drain(start_dsir_scoring(
+                stream, raw_model, target_model,
+                os.path.join(base, "out"), os.path.join(base, "ckpt"),
+                num_buckets=64, hash_mode="md5"))
+            rows = (spark.read.parquet(os.path.join(base, "out"))
+                    .select("doc_id", "n_feats", "dsir_bits")
+                    .collect())
     finally:
         raw_model.unpersist()
         target_model.unpersist()
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(
         rows, "doc_id BIGINT, n_feats BIGINT, dsir_bits BIGINT")
 
@@ -3777,9 +3751,7 @@ _WARC_SHARDS = 8
 
 def _warc_stage_dir(sf_dir: str) -> str:
     import hashlib
-    import tempfile
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    import os
     return os.path.join(tempfile.gettempdir(), f"warc_stage_{tag}")
 
 
@@ -3790,10 +3762,6 @@ def _stage_warc_fixtures(spark: SparkSession, sf_dir: str) -> str:
     member-gzip (.warc.gz) — both layouts must read back identically
     (the oracle cannot tell them apart). Idempotent overwrite per
     (sf_dir)."""
-    import os
-
-    import shutil
-
     from ..sources.warc import build_warc, build_warc_gz
     out_dir = _warc_stage_dir(sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)  # no stale shards
@@ -3911,10 +3879,6 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     — streaming and batch must agree row-for-row, including
     sess_end_us = session_window.end - gap (session_window pads the
     close by the gap)."""
-    import os
-    import shutil
-    import tempfile
-
     from ..streaming.stream import start_session_rollup
     gap_sec = 7200
     ev = (_t(spark, sf_dir, "events")
@@ -3925,37 +3889,19 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(-1, "2030-01-01 00:00:00", -1)],
         "user_id BIGINT, ts STRING, event_id BIGINT").select(
         "user_id", F.to_timestamp("ts").alias("ts"), "event_id")
-    waves = [ev.filter(F.col("ts") < mid),
-             ev.filter(F.col("ts") >= mid).unionByName(sentinel)]
-    base = tempfile.mkdtemp(prefix="stream_sess_q_")
-    try:
-        in_dir = os.path.join(base, "in")
-        os.makedirs(in_dir)
-        for name, wave in zip(("a", "b"), waves):
-            stage = os.path.join(base, f"stage_{name}")
-            wave.coalesce(1).write.mode("overwrite").parquet(stage)
-            for i, f in enumerate(sorted(os.listdir(stage))):
-                if f.endswith(".parquet"):
-                    shutil.move(os.path.join(stage, f),
-                                os.path.join(in_dir,
-                                             f"{name}-{i}.parquet"))
-        stream = (spark.readStream
-                  .schema("user_id BIGINT, ts TIMESTAMP,"
-                          " event_id BIGINT")
-                  .option("maxFilesPerTrigger", 1).parquet(in_dir))
-        q = start_session_rollup(stream, os.path.join(base, "out"),
-                                 os.path.join(base, "ckpt"),
-                                 gap_sec=gap_sec)
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("session stream drain did not finish"
-                               " in 600 s")
+    waves = [("a", ev.filter(F.col("ts") < mid)),
+             ("b", ev.filter(F.col("ts") >= mid).unionByName(sentinel))]
+    with _scratch("stream_sess_q_") as base:
+        stream = _stage_waves(
+            spark, base, waves,
+            "user_id BIGINT, ts TIMESTAMP, event_id BIGINT", max_files=1)
+        _drain(start_session_rollup(stream, os.path.join(base, "out"),
+                                    os.path.join(base, "ckpt"),
+                                    gap_sec=gap_sec))
         rows = (spark.read.parquet(os.path.join(base, "out"))
                 .select("user_id", "sess_start_us", "sess_end_us",
                         "n_events")
                 .collect())
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(
         rows, "user_id BIGINT, sess_start_us BIGINT,"
               " sess_end_us BIGINT, n_events BIGINT")
@@ -5109,12 +5055,8 @@ def table_equality_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     survive, the Iceberg data/delete sequence-number rule. No data
     partition is rewritten (merge-on-read: the delete is a broadcast
     anti-join at scan time)."""
-    import shutil
-    import tempfile
-
     from .tables import IcebergLike
-    base = tempfile.mkdtemp(prefix="table_del_q_")
-    try:
+    with _scratch("table_del_q_") as base:
         t = IcebergLike(base)
         t.write(_offset_parts(_docs_kv(spark, sf_dir, 0, 200), 0))
         dels = (_docs_kv(spark, sf_dir, 0, 300)
@@ -5122,8 +5064,6 @@ def table_equality_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.delete_rows(dels, ["doc_id"])
         t.write(_offset_parts(_docs_kv(spark, sf_dir, 200, 300), 4))
         rows = (t.read(spark).select("doc_id", "n_chars").collect())
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, "doc_id long, n_chars long")
 
 
@@ -5138,19 +5078,13 @@ def table_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     immutable, so the committed-key diff IS the append set). The
     downstream-consumer pattern at 10^12 rows: process only the new
     partitions, never re-scan the corpus."""
-    import shutil
-    import tempfile
-
     from .tables import IcebergLike
-    base = tempfile.mkdtemp(prefix="table_inc_q_")
-    try:
+    with _scratch("table_inc_q_") as base:
         t = IcebergLike(base)
         s0 = t.write(_offset_parts(_docs_kv(spark, sf_dir, 0, 150), 0))
         t.write(_offset_parts(_docs_kv(spark, sf_dir, 150, 250), 4))
         inc = t.read_incremental(spark, s0["snapshot_id"])
         rows = inc.select("doc_id", "n_chars").collect()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, "doc_id long, n_chars long")
 
 
@@ -5166,12 +5100,8 @@ def table_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the report is asserted here so a silent prune-nothing regression
     fails the query, and tests/test_table_deletes.py pins the
     inputFiles evidence). Rows equal a plain range filter."""
-    import shutil
-    import tempfile
-
     from .tables import PART_COL, IcebergLike
-    base = tempfile.mkdtemp(prefix="table_prune_q_")
-    try:
+    with _scratch("table_prune_q_") as base:
         t = IcebergLike(base)
         df = (_docs_kv(spark, sf_dir, 0, 400)
               .withColumn(PART_COL,
@@ -5182,8 +5112,6 @@ def table_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError(
                 f"stats pruning eliminated nothing: {report}")
         rows = out.select("doc_id", "n_chars").collect()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, "doc_id long, n_chars long")
 
 
@@ -5204,12 +5132,8 @@ def table_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     query asserts exactly that split in the prune report (zero
     partitions pruned, base files pruned) and returns rows equal to
     a plain range filter."""
-    import shutil
-    import tempfile
-
     from .tables import PART_COL, IcebergLike
-    base = tempfile.mkdtemp(prefix="table_fskip_q_")
-    try:
+    with _scratch("table_fskip_q_") as base:
         t = IcebergLike(base)
 
         def keyed(lo, hi):
@@ -5225,8 +5149,6 @@ def table_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not rep["files_pruned"]:
             raise RuntimeError(f"file skipping pruned nothing: {rep}")
         rows = out.select("doc_id", "n_chars").collect()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, "doc_id long, n_chars long")
 
 
@@ -5249,13 +5171,9 @@ def table_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     The query asserts, per probe, that every pruned file was pruned
     by the bloom and at least one was, and returns rows equal to a
     plain IN-list filter."""
-    import shutil
-    import tempfile
-
     from .tables import PART_COL, IcebergLike
-    base = tempfile.mkdtemp(prefix="table_bloom_q_")
     probes = [21, 118, 237, 342, 480]
-    try:
+    with _scratch("table_bloom_q_") as base:
         t = IcebergLike(base)
 
         def keyed(parity):
@@ -5276,8 +5194,6 @@ def table_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
                 raise RuntimeError(
                     f"range stats should straddle every probe: {rep}")
             rows += out.select("doc_id", "n_chars").collect()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, "doc_id long, n_chars long")
 
 
@@ -5295,12 +5211,8 @@ def table_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     column the data was NOT originally ordered by), asserts the
     manifests pruned partitions for it AND for an independent doc_id
     probe, and returns rows equal to a plain range filter."""
-    import shutil
-    import tempfile
-
     from .tables import IcebergLike, zorder_part_key
-    base = tempfile.mkdtemp(prefix="table_zorder_q_")
-    try:
+    with _scratch("table_zorder_q_") as base:
         t = IcebergLike(base)
         df = zorder_part_key(
             _docs_kv(spark, sf_dir, 0, 500),
@@ -5320,8 +5232,6 @@ def table_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 len(rep2["partitions_pruned"])):
             raise RuntimeError(f"conjunctive prune regressed: {rep3}")
         rows = out.select("doc_id", "n_chars").collect()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, "doc_id long, n_chars long")
 
 
@@ -5337,12 +5247,8 @@ def table_rollback_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the wave is gone — partitions dropped, its tag cleaned up), and
     the state equals what a reader pinned to the tag saw before the
     rollback. Cost is O(undone wave), never O(table)."""
-    import shutil
-    import tempfile
-
     from .tables import IcebergLike
-    base = tempfile.mkdtemp(prefix="table_rb_q_")
-    try:
+    with _scratch("table_rb_q_") as base:
         t = IcebergLike(base)
         t.write(_offset_parts(_docs_kv(spark, sf_dir, 0, 200), 0))
         dels = (_docs_kv(spark, sf_dir, 0, 200)
@@ -5360,8 +5266,6 @@ def table_rollback_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         if out.count() != pinned:
             raise RuntimeError("rollback state != tagged pre-wave read")
         rows = out.select("doc_id", "n_chars").collect()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, "doc_id long, n_chars long")
 
 
@@ -5556,10 +5460,6 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the newest value per key — predicted relationally by the
     oracle. Replay idempotence and cross-batch last-wins are pinned in
     tests/test_streaming.py."""
-    import os
-    import shutil
-    import tempfile
-
     from ..engine.tables import IcebergLike
     from ..streaming.stream import start_cdc_upsert
 
@@ -5576,29 +5476,14 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     wave_b = (ids.filter("doc_id % 2 = 1")
               .select("doc_id", F.lit(1).cast("long").alias("ts"),
                       (F.col("doc_id") * 3).alias("v")))
-    base = tempfile.mkdtemp(prefix="cdc_q_")
-    try:
-        in_dir = os.path.join(base, "in")
-        os.makedirs(in_dir)
-        for name, wave in (("a", wave_a), ("b", wave_b)):
-            stage = os.path.join(base, f"stage_{name}")
-            wave.coalesce(1).write.mode("overwrite").parquet(stage)
-            for i, f in enumerate(sorted(os.listdir(stage))):
-                if f.endswith(".parquet"):
-                    shutil.move(os.path.join(stage, f),
-                                os.path.join(in_dir,
-                                             f"{name}-{i}.parquet"))
+    with _scratch("cdc_q_") as base:
+        stream = _stage_waves(spark, base,
+                              [("a", wave_a), ("b", wave_b)],
+                              "doc_id long, ts long, v long")
         table = IcebergLike(os.path.join(base, "table"))
-        stream = (spark.readStream.schema("doc_id long, ts long, v long")
-                  .parquet(in_dir))
-        q = start_cdc_upsert(stream, table, ["doc_id"],
-                             os.path.join(base, "ckpt"), ts_col="ts")
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("CDC drain did not finish in 600 s")
+        _drain(start_cdc_upsert(stream, table, ["doc_id"],
+                                os.path.join(base, "ckpt"), ts_col="ts"))
         rows = (table.read(spark).select("doc_id", "v").collect())
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, "doc_id long, v long")
 
 
@@ -5769,9 +5654,6 @@ def table_changelog_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     upserted pre-existing keys at WRITE time so the oracle can tell
     old values from new in the delete arm. The whole change set is
     predicted relationally."""
-    import shutil
-    import tempfile
-
     from .tables import IcebergLike, with_part_key
 
     def kv(lo, hi, bump_6=False):
@@ -5782,8 +5664,7 @@ def table_changelog_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("doc_id") % 10 == 6,
                        F.col("n_chars") + 7).otherwise(F.col("n_chars")))
         return d
-    base = tempfile.mkdtemp(prefix="table_chg_q_")
-    try:
+    with _scratch("table_chg_q_") as base:
         t = IcebergLike(base)
         t.write(_offset_parts(kv(0, 150, bump_6=True), 0))
         s0 = t.snapshots()[-1]["snapshot_id"]
@@ -5801,8 +5682,6 @@ def table_changelog_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.delete_rows(extra.select("doc_id"), ["doc_id"])
         rows = (t.read_changes(spark, s0)
                 .select("doc_id", "n_chars", "_change_type").collect())
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(
         rows, "doc_id long, n_chars long, _change_type string")
 
@@ -5830,12 +5709,8 @@ def table_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge's tombstones and appends are both invisible), 'post' = the
     current read. Atomicity is asserted in-query: exactly one
     snapshot was added."""
-    import shutil
-    import tempfile
-
     from .tables import IcebergLike
-    base = tempfile.mkdtemp(prefix="table_merge_q_")
-    try:
+    with _scratch("table_merge_q_") as base:
         t = IcebergLike(base)
         t.write(_offset_parts(_docs_kv(spark, sf_dir, 0, 200), 0))
         pre = t.snapshots()[-1]["snapshot_id"]
@@ -5849,8 +5724,6 @@ def table_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select("doc_id", "n_chars").collect()]
         rows += [("post", r.doc_id, r.n_chars) for r in
                  t.read(spark).select("doc_id", "n_chars").collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(
         rows, "state string, doc_id long, n_chars long")
 
@@ -5872,12 +5745,8 @@ def table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORIGINAL schema (asserted in-query: no lang column there). The
     Iceberg add-column contract: metadata-only, O(1), never touches
     committed data files."""
-    import shutil
-    import tempfile
-
     from .tables import IcebergLike
-    base = tempfile.mkdtemp(prefix="table_evo_q_")
-    try:
+    with _scratch("table_evo_q_") as base:
         t = IcebergLike(base)
         t.write(_offset_parts(_docs_kv(spark, sf_dir, 0, 150), 0))
         pre = t.snapshots()[-1]["snapshot_id"]
@@ -5896,8 +5765,6 @@ def table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pre-evolution snapshot must read with its own schema"
         rows = (t.read(spark)
                 .select("doc_id", "n_chars", "lang").collect())
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(
         rows, "doc_id long, n_chars long, lang string")
 
@@ -5928,12 +5795,8 @@ def table_position_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     travel to the pre-delete snapshot (tombstones invisible), 'post'
     = the current merge-on-read view. Asserted in-query: no data
     file was rewritten by either delete (pure merge-on-read)."""
-    import shutil
-    import tempfile
-
     from .tables import IcebergLike
-    base = tempfile.mkdtemp(prefix="table_posdel_q_")
-    try:
+    with _scratch("table_posdel_q_") as base:
         t = IcebergLike(base)
         t.write(_offset_parts(_docs_kv(spark, sf_dir, 0, 200), 0))
         pre = t.snapshots()[-1]["snapshot_id"]
@@ -5953,8 +5816,6 @@ def table_position_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select("doc_id", "n_chars").collect()]
         rows += [("post", r.doc_id, r.n_chars) for r in
                  t.read(spark).select("doc_id", "n_chars").collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(
         rows, "state string, doc_id long, n_chars long")
 
@@ -5986,9 +5847,6 @@ def table_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``merge(build(A), build(B)) == build(A ∪ B)`` relationally, at
     once. This is the 100-TB operating mode for table statistics:
     per-snapshot sketch + merge, never a rescan."""
-    import shutil
-    import tempfile
-
     from ..datapipe.sketch import hll_merge, hll_registers
     from .tables import IcebergLike, with_part_key
 
@@ -5998,8 +5856,7 @@ def table_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("conv_id"),
                     F.col("doc_id").cast("long").alias("doc_id"),
                     "source", "text"))
-    base = tempfile.mkdtemp(prefix="table_hll_q_")
-    try:
+    with _scratch("table_hll_q_") as base:
         t = IcebergLike(base)
         t.write(with_part_key(docs.filter("doc_id < 300"), 4))
         s0 = t.snapshots()[-1]["snapshot_id"]
@@ -6017,8 +5874,6 @@ def table_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             sk1_rows, "source string, bucket long, rho long")
         rows = (hll_merge(stored, sk2)
                 .select("source", "bucket", "rho").collect())
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(
         rows, "source string, bucket long, rho long")
 
@@ -6058,15 +5913,12 @@ def table_hidden_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
     point probe pruned strictly more, and a second write with a
     DIFFERENT spec is refused (one spec per table — evolution =
     new table + backfill, see tables._bind_spec)."""
-    import shutil
-    import tempfile
     from datetime import datetime
 
     from .tables import IcebergLike
     lo = datetime(2024, 1, 10, 0, 0, 0)
     hi = datetime(2024, 1, 14, 23, 59, 59)
-    base = tempfile.mkdtemp(prefix="table_spec_q_")
-    try:
+    with _scratch("table_spec_q_") as base:
         t = IcebergLike(base)
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
         t.write(ev, partition_spec=[("days", "ts"),
@@ -6097,8 +5949,6 @@ def table_hidden_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for r in agg(out1).collect()]
         rows += [("point", r.day, r.event_type, r.n)
                  for r in agg(out2).collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(
         rows, "probe string, day date, event_type string, n long")
 
@@ -6317,8 +6167,6 @@ _JSONL_SHARDS = 4
 
 def _jsonl_stage_dir(sf_dir: str) -> str:
     import hashlib
-    import os
-    import tempfile
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
     return os.path.join(tempfile.gettempdir(), f"jsonl_stage_{tag}")
 
@@ -6330,8 +6178,6 @@ def _stage_jsonl_fixtures(spark: SparkSession, sf_dir: str) -> str:
     PERMISSIVE-mode hygiene exists for. Idempotent per sf_dir."""
     import gzip
     import json as _json
-    import os
-    import shutil
 
     out_dir = _jsonl_stage_dir(sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
@@ -6403,10 +6249,6 @@ def streaming_interval_join(spark: SparkSession,
     combination that lets Spark evict join state instead of buffering
     both streams forever. The oracle is the equivalent BATCH interval
     join: streaming and batch must agree pair-for-pair."""
-    import os
-    import shutil
-    import tempfile
-
     from ..streaming.stream import start_interval_join
     ev = _t(spark, sf_dir, "events")
     clicks = (ev.filter(F.col("event_type") == "click")
@@ -6416,50 +6258,24 @@ def streaming_interval_join(spark: SparkSession,
               .select(F.col("event_id").alias("r_id"), "user_id",
                       F.col("ts").alias("r_ts")))
     mid = F.to_timestamp(F.lit("2024-01-16 00:00:00"))
-    base = tempfile.mkdtemp(prefix="stream_ivj_q_")
-    try:
-        dirs = {}
-        for side, df, ts in (("l", clicks, "l_ts"),
-                             ("r", errors, "r_ts")):
-            in_dir = os.path.join(base, f"in_{side}")
-            os.makedirs(in_dir)
-            waves = [df.filter(F.col(ts) < mid),
-                     df.filter(F.col(ts) >= mid)]
-            for name, wave in zip(("a", "b"), waves):
-                stage = os.path.join(base, f"stage_{side}_{name}")
-                wave.coalesce(1).write.mode("overwrite").parquet(stage)
-                for i, f in enumerate(sorted(os.listdir(stage))):
-                    if f.endswith(".parquet"):
-                        shutil.move(
-                            os.path.join(stage, f),
-                            os.path.join(in_dir,
-                                         f"{name}-{i}.parquet"))
-            dirs[side] = in_dir
-        l_stream = (spark.readStream
-                    .schema("l_id BIGINT, user_id BIGINT,"
-                            " l_ts TIMESTAMP")
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(dirs["l"]))
-        r_stream = (spark.readStream
-                    .schema("r_id BIGINT, user_id BIGINT,"
-                            " r_ts TIMESTAMP")
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(dirs["r"]))
-        q = start_interval_join(
-            l_stream, r_stream, os.path.join(base, "out"),
-            os.path.join(base, "ckpt"), within_sec=1800)
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("interval-join drain did not finish"
-                               " in 600 s")
+    with _scratch("stream_ivj_q_") as base:
+        streams = [
+            _stage_waves(spark, os.path.join(base, side),
+                         [("a", df.filter(F.col(ts) < mid)),
+                          ("b", df.filter(F.col(ts) >= mid))],
+                         f"{side}_id BIGINT, user_id BIGINT,"
+                         f" {ts} TIMESTAMP", max_files=1)
+            for side, df, ts in (("l", clicks, "l_ts"),
+                                 ("r", errors, "r_ts"))]
+        _drain(start_interval_join(
+            *streams, os.path.join(base, "out"),
+            os.path.join(base, "ckpt"), within_sec=1800))
         rows = (spark.read.parquet(os.path.join(base, "out"))
                 .select("user_id", F.col("l_id").alias("click_id"),
                         F.col("r_id").alias("err_id"),
                         F.col("l_us").alias("click_us"),
                         F.col("r_us").alias("err_us"))
                 .collect())
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(
         rows, "user_id BIGINT, click_id BIGINT, err_id BIGINT,"
               " click_us BIGINT, err_us BIGINT")
@@ -6482,12 +6298,8 @@ def table_branch_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pinned main read are both exact. The returned frame is the
     post-publish main state; the oracle predicts it from the
     documents table."""
-    import shutil
-    import tempfile
-
     from .tables import IcebergLike
-    base = tempfile.mkdtemp(prefix="table_branch_q_")
-    try:
+    with _scratch("table_branch_q_") as base:
         t = IcebergLike(base)
         t.write(_offset_parts(_docs_kv(spark, sf_dir, 0, 300), 0))
         t.create_branch("audit")
@@ -6506,8 +6318,6 @@ def table_branch_write(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.when(F.col("doc_id") < 300, "base")
                          .otherwise("audit").alias("wave"))
                 .collect())
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(
         rows, "doc_id long, n_chars long, wave string")
 
@@ -6557,20 +6367,14 @@ def table_stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     by construction (stats_agg never takes a SparkSession), and the
     exactness guards (raise on live deletes / missing stats) are
     pytest-covered in tests/test_table_stats_agg.py."""
-    import shutil
-    import tempfile
-
     from .tables import IcebergLike
-    base = tempfile.mkdtemp(prefix="table_statsagg_q_")
-    try:
+    with _scratch("table_statsagg_q_") as base:
         t = IcebergLike(base)
         t.write(_offset_parts(_docs_kv(spark, sf_dir, 0, 250), 0),
                 stat_cols=["doc_id", "n_chars"])
         t.write(_offset_parts(_docs_kv(spark, sf_dir, 250, 400), 0),
                 stat_cols=["doc_id", "n_chars"], append=True)
         agg = t.stats_agg(cols=("doc_id", "n_chars"))
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(
         [(agg["rows"], agg["min"]["doc_id"], agg["max"]["doc_id"],
           agg["min"]["n_chars"], agg["max"]["n_chars"])],
@@ -6653,45 +6457,24 @@ def streaming_dedup_watermark(spark: SparkSession,
     window so every replayed row is provably dropped by STATE
     matching, not by late-data discard. Oracle: the batch table
     itself (exactly one copy per event)."""
-    import os
-    import shutil
-    import tempfile
-
     from ..streaming.stream import start_dedup_within_watermark
     ev = (_t(spark, sf_dir, "events")
           .select("event_id", "user_id",
                   F.col("ts").cast("timestamp").alias("ts"),
                   "event_type"))
-    base = tempfile.mkdtemp(prefix="stream_dedupwm_q_")
-    try:
-        in_dir = os.path.join(base, "in")
-        os.makedirs(in_dir)
-        for name in ("a", "b"):  # b replays a verbatim
-            stage = os.path.join(base, f"stage_{name}")
-            ev.coalesce(1).write.mode("overwrite").parquet(stage)
-            for i, f in enumerate(sorted(os.listdir(stage))):
-                if f.endswith(".parquet"):
-                    shutil.move(os.path.join(stage, f),
-                                os.path.join(in_dir,
-                                             f"{name}-{i}.parquet"))
-        stream = (spark.readStream
-                  .schema("event_id BIGINT, user_id BIGINT,"
-                          " ts TIMESTAMP, event_type STRING")
-                  .option("maxFilesPerTrigger", 1).parquet(in_dir))
-        q = start_dedup_within_watermark(
+    with _scratch("stream_dedupwm_q_") as base:
+        stream = _stage_waves(
+            spark, base, [("a", ev), ("b", ev)],  # b replays a verbatim
+            "event_id BIGINT, user_id BIGINT, ts TIMESTAMP,"
+            " event_type STRING", max_files=1)
+        _drain(start_dedup_within_watermark(
             stream, os.path.join(base, "out"),
             os.path.join(base, "ckpt"), keys=("event_id",),
-            delay="365 days")
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("dedup stream drain did not finish"
-                               " in 600 s")
+            delay="365 days"))
         rows = (spark.read.parquet(os.path.join(base, "out"))
                 .select("event_id", "user_id",
                         F.unix_micros("ts").alias("us"), "event_type")
                 .collect())
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(
         rows, "event_id BIGINT, user_id BIGINT, us BIGINT,"
               " event_type STRING")

@@ -1218,17 +1218,19 @@ class IcebergLike:
 
     def tag(self, name: str, snapshot_id: int | None = None) -> dict:
         """Name a snapshot (the Iceberg tag analog — 'the corpus we
-        trained run X on'). Defaults to the newest snapshot. Tagged
-        snapshots survive ``expire_snapshots``, so a tag is the
-        durable handle for reproducing a historical read."""
+        trained run X on'). Defaults to main's current state, which
+        while a branch is diverged is main's pin, not the branch's
+        unpublished head. Tagged snapshots survive
+        ``expire_snapshots``, so a tag is the durable handle for
+        reproducing a historical read."""
         if not re.fullmatch(r"[A-Za-z0-9._-]{1,128}", name):
             raise ValueError(f"bad tag name: {name!r}")
-        snaps = self.snapshots()
         if snapshot_id is None:
-            if not snaps:
+            snapshot_id = self._main_head()
+            if snapshot_id is None:
                 raise ValueError("no snapshots to tag")
-            snapshot_id = snaps[-1]["snapshot_id"]
-        elif not any(s["snapshot_id"] == snapshot_id for s in snaps):
+        elif not any(s["snapshot_id"] == snapshot_id
+                     for s in self.snapshots()):
             raise ValueError(f"no snapshot {snapshot_id} to tag")
         return self._set_ref(name, snapshot_id, "tag")
 

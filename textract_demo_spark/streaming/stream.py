@@ -72,19 +72,18 @@ def streaming_pipeline(stream: DataFrame,
 
 
 def start_to_parquet(results: DataFrame, out_dir: str,
-                     checkpoint_dir: str, available_now: bool = True):
+                     checkpoint_dir: str):
     """Checkpointed exactly-once parquet sink (T5): the micro-batch
     commit log is the resume point — a restarted query reprocesses
     nothing that was committed. ``availableNow`` drains pending input
-    then stops (backfill / test mode); pass False for continuous."""
-    writer = (results.writeStream
-              .format("parquet")
-              .option("path", out_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    then stops."""
+    return (results.writeStream
+            .format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start())
 
 
 def start_incremental_dedup(docs_stream: DataFrame, index: DataFrame,
@@ -92,8 +91,7 @@ def start_incremental_dedup(docs_stream: DataFrame, index: DataFrame,
                             n: int = 3, num_hashes: int = 64,
                             bands: int = 16, threshold: float = 0.7,
                             id_col: str = "doc_id",
-                            text_col: str = "text",
-                            available_now: bool = True):
+                            text_col: str = "text"):
     """Continuous-ingestion near-dup detection: each micro-batch of
     arriving docs probes the FROZEN corpus signature index
     (``datapipe.dedup.build_minhash_index`` — a stored per-snapshot
@@ -119,16 +117,14 @@ def start_incremental_dedup(docs_stream: DataFrame, index: DataFrame,
          .parquet(f"{out_dir}/batch_id={batch_id}"))
         release_cached(out)
 
-    return start_foreach_batch(docs_stream, checkpoint_dir, _probe,
-                               available_now)
+    return start_foreach_batch(docs_stream, checkpoint_dir, _probe)
 
 
 def start_dsir_scoring(docs_stream: DataFrame, raw_model: DataFrame,
                        target_model: DataFrame, out_dir: str,
                        checkpoint_dir: str, num_buckets: int = 8192,
                        hash_mode: str = "xxhash64",
-                       id_col: str = "doc_id", text_col: str = "text",
-                       available_now: bool = True):
+                       id_col: str = "doc_id", text_col: str = "text"):
     """Continuous-ingestion DSIR scoring: each arriving micro-batch of
     docs is scored against FROZEN raw/target bucket models
     (``datapipe.dsir.dsir_bucket_model`` — stored <= B-row artifacts,
@@ -153,30 +149,27 @@ def start_dsir_scoring(docs_stream: DataFrame, raw_model: DataFrame,
         (out.write.mode("overwrite")
          .parquet(f"{out_dir}/batch_id={batch_id}"))
 
-    return start_foreach_batch(docs_stream, checkpoint_dir, _score,
-                               available_now)
+    return start_foreach_batch(docs_stream, checkpoint_dir, _score)
 
 
 def start_foreach_batch(results: DataFrame, checkpoint_dir: str,
-                        batch_fn, available_now: bool = True):
+                        batch_fn):
     """foreachBatch sink for custom commit layers (e.g. IcebergLike
     partition manifests per micro-batch): ``batch_fn(df, batch_id)``.
     Spark guarantees batch_id-monotonic at-least-once delivery; the
     commit layer makes it effectively-once via idempotent writes."""
-    writer = (results.writeStream
-              .foreachBatch(batch_fn)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (results.writeStream
+            .foreachBatch(batch_fn)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start())
 
 
 def start_session_rollup(events_stream: DataFrame, out_dir: str,
                          checkpoint_dir: str, gap_sec: int,
                          key: str = "user_id", ts_col: str = "ts",
-                         watermark_delay: str = "0 seconds",
-                         available_now: bool = True):
+                         watermark_delay: str = "0 seconds"):
     """Streaming gap sessionization: Spark's native ``session_window``
     (dynamic-gap window merge in the state store) aggregated per key,
     append-mode — a session row is emitted exactly once, when the
@@ -205,20 +198,12 @@ def start_session_rollup(events_stream: DataFrame, out_dir: str,
                    (F.unix_micros("session_window.end")
                     - gap_sec * 1_000_000).alias("sess_end_us"),
                    "n_events"))
-    writer = (agg.writeStream
-              .format("parquet")
-              .option("path", out_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_to_parquet(agg, out_dir, checkpoint_dir)
 
 
 def start_cdc_upsert(updates_stream: DataFrame, table, key_cols,
                      checkpoint_dir: str, n_buckets: int = 8,
-                     ts_col: str | None = None,
-                     available_now: bool = True):
+                     ts_col: str | None = None):
     """CDC apply loop: each micro-batch of (key..., value...) update
     rows MERGEs into an ``IcebergLike`` table atomically — ``upsert``
     publishes ONE snapshot carrying both the equality-delete file and
@@ -257,15 +242,13 @@ def start_cdc_upsert(updates_stream: DataFrame, table, key_cols,
                      list(key_cols),
                      run_id=f"cdc-batch-{batch_id}")
 
-    return start_foreach_batch(updates_stream, checkpoint_dir, _apply,
-                               available_now)
+    return start_foreach_batch(updates_stream, checkpoint_dir, _apply)
 
 
 def start_interval_join(left_stream: DataFrame, right_stream: DataFrame,
                         out_dir: str, checkpoint_dir: str,
                         key: str = "user_id", within_sec: int = 1800,
-                        watermark_delay: str = "0 seconds",
-                        available_now: bool = True):
+                        watermark_delay: str = "0 seconds"):
     """Watermarked STREAM-STREAM interval join: pair each left event
     with every right event of the same key whose timestamp falls in
     ``[l_ts, l_ts + within_sec]`` — the click->error correlation /
@@ -301,22 +284,14 @@ def start_interval_join(left_stream: DataFrame, right_stream: DataFrame,
         .select(l[key].alias(key), "l_id", "r_id",
                 F.unix_micros("l_ts").alias("l_us"),
                 F.unix_micros("r_ts").alias("r_us")))
-    writer = (joined.writeStream
-              .format("parquet")
-              .option("path", out_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_to_parquet(joined, out_dir, checkpoint_dir)
 
 
 def start_dedup_within_watermark(stream: DataFrame, out_dir: str,
                                  checkpoint_dir: str,
                                  keys=("event_id",),
                                  ts_col: str = "ts",
-                                 delay: str = "30 days",
-                                 available_now: bool = True):
+                                 delay: str = "30 days"):
     """Native in-stream exact dedup with BOUNDED state:
     ``dropDuplicatesWithinWatermark`` keeps the first arrival per key
     and drops later copies, evicting each key's state once the
@@ -337,11 +312,4 @@ def start_dedup_within_watermark(stream: DataFrame, out_dir: str,
     """
     deduped = (stream.withWatermark(ts_col, delay)
                .dropDuplicatesWithinWatermark(list(keys)))
-    writer = (deduped.writeStream
-              .format("parquet")
-              .option("path", out_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_to_parquet(deduped, out_dir, checkpoint_dir)
